@@ -66,13 +66,8 @@ class Future:
     def get(self) -> Any:
         if self._reply is None:
             self._client.flush()
-        reply = self._reply
-        assert reply is not None, "flush did not complete this future"
-        if reply.event_type == EventType.ERROR:
-            raise RuntimeError(reply.payload["error"])
-        if reply.event_type == EventType.KEY_NOT_FOUND:
-            raise KeyError(f"{reply.entity}({reply.key}) not found")
-        result = reply.payload.get("result")
+        assert self._reply is not None, "flush did not complete this future"
+        result = operator.reply_value(self._reply)
         if isinstance(result, EntityRef):
             return EntityHandle(self._client, result)
         return result
@@ -255,15 +250,10 @@ class LocalTransport(Transport):
         self._replies: dict[str, Event] = {}
 
     def send(self, event: Event) -> None:
-        for _ in range(100_000):
-            res = operator.handle(event, self.store)
-            if res.hops:
-                event = res.hops[0]
-                continue
-            reply = res.replies[0]
-            self._replies[reply.event_id] = reply
-            return
-        raise RuntimeError("flow did not terminate")
+        from stateflow_spark.entity.local import run_to_reply
+
+        reply = run_to_reply(event, self.store)
+        self._replies[reply.event_id] = reply
 
     def flush(self) -> dict[str, Event]:
         out, self._replies = self._replies, {}

@@ -27,26 +27,24 @@ class DictStore(StateStore):
         self.data[(ref.entity, ref.key)] = state
 
 
+def run_to_reply(event: Event, store: StateStore) -> Event:
+    """Drive an event (and any flow hops) to its reply — the while-loop
+    of the reference's LocalRuntime.execute_event (:77-84). With a store
+    that owns every key, flows never hop; the loop is for parity."""
+    for _ in range(100_000):
+        res = operator.handle(event, store)
+        if not res.hops:
+            return res.replies[0]
+        event = res.hops[0]
+    raise RuntimeError("flow did not terminate")
+
+
 class LocalRuntime:
     def __init__(self):
         self.store = DictStore()
 
     def _execute(self, event: Event) -> Any:
-        """Drive an event (and any flow hops) to its reply — the while-loop
-        of the reference's LocalRuntime.execute_event (:77-84). With a store
-        that owns every key, flows never hop; the loop is for parity."""
-        for _ in range(100_000):
-            res = operator.handle(event, self.store)
-            if res.hops:
-                event = res.hops[0]
-                continue
-            reply = res.replies[0]
-            if reply.event_type == EventType.ERROR:
-                raise RuntimeError(reply.payload["error"])
-            if reply.event_type == EventType.KEY_NOT_FOUND:
-                raise KeyError(f"{event.entity}({event.key}) not found")
-            return reply.payload.get("result")
-        raise RuntimeError("flow did not terminate")
+        return operator.reply_value(run_to_reply(event, self.store))
 
     # -- client surface (reference ClassRef/MethodRef, client/class_ref.py) --
     def create(self, cls: type, *args: Any) -> EntityRef:

@@ -3,8 +3,10 @@
 Runtime-agnostic core mirroring the reference's StatefulOperator handler
 table (stateflow/dataflow/stateful_operator.py — create :36-62/:123-157,
 get :159-176, find :178-190, update :192-209, invoke :211-247, flow
-:249-275). Both LocalRuntime and the Spark superstep engine call
-``handle`` — they differ only in what the store owns per activation.
+:249-275). LocalRuntime calls ``handle`` with a store that owns every key;
+the superstep, continuous and Kafka runtimes call it through the per-key
+event core (``keyed.apply_key_events``) with a store that owns one key.
+``reply_value`` is the one client-side reading of a reply.
 """
 
 from __future__ import annotations
@@ -134,6 +136,17 @@ def handle(event: Event, store: StateStore) -> HandleResult:
             event.reply(EventType.ERROR, error=f"unknown event type {event.event_type}")
         )
     return res
+
+
+def reply_value(reply: Event) -> Any:
+    """A reply's result, or its failure raised: ERROR → RuntimeError,
+    KEY_NOT_FOUND → KeyError (reference StateflowFuture,
+    client/future.py:31-124)."""
+    if reply.event_type == EventType.ERROR:
+        raise RuntimeError(reply.payload["error"])
+    if reply.event_type == EventType.KEY_NOT_FOUND:
+        raise KeyError(f"{reply.entity}({reply.key}) not found")
+    return reply.payload.get("result")
 
 
 def make_init_event(cls_name: str, args: tuple, kwargs: dict | None = None) -> Event:

@@ -94,6 +94,35 @@ def clear_registry() -> None:
     _clear_interpreter_caches()
 
 
+def serialize_registry() -> bytes:
+    """Cloudpickle the entity registry for shipment to executors, where
+    ``install_worker_registry`` installs it.
+
+    Entity classes registered from modules outside the installed package
+    (notebooks, test files, user scripts) are not importable on Spark's
+    Python workers, so those modules are pickled by value; package modules
+    stay by-reference so workers reuse the installed code.
+    """
+    import sys
+
+    import cloudpickle
+
+    reg = dict(get_registry())
+    mods = {
+        et.cls.__module__: sys.modules[et.cls.__module__]
+        for et in reg.values()
+        if et.cls.__module__ in sys.modules
+        and not et.cls.__module__.startswith("stateflow_spark")
+    }
+    for mod in mods.values():
+        cloudpickle.register_pickle_by_value(mod)
+    try:
+        return cloudpickle.dumps(reg)
+    finally:
+        for mod in mods.values():
+            cloudpickle.unregister_pickle_by_value(mod)
+
+
 def install_worker_registry(registry_blob: bytes) -> None:
     """Worker-side registry install for the streaming/superstep engines.
 

@@ -9,15 +9,16 @@ stateflow/runtime/beam_runtime.py:137-204, stateflow/client/kafka_client.py:
     {prefix}-request   client → engine        (op #1 ingress)
     {prefix}-internal  engine → engine hops   (the loopback cycle)
     {prefix}-reply     engine → client        (op #22 egress)
-    {prefix}-cold      evicted state tier     (TTL mode only)
+    {prefix}-dead      quarantined poison events
 
 Wire format: record key = JSON {"entity","key","seq"} (UTF-8), record
 value = the pickled Event blob — the same (entity, key, seq, blob) row the
-file transport carries, so the stateful operator is SHARED VERBATIM
-(_make_stateful_fn); only ingress decode and egress routing differ.
+file transport carries, so the keyed state function is the file engine's
+(stateful._make_stateful_fn over the per-key event core, entity/keyed.py,
+with poison quarantine on); only ingress decode and egress routing differ.
 
 Egress is ONE kafka sink: the Kafka writer routes per-row via a `topic`
-column, so the reply/hop/evict split that the file transport does with
+column, so the reply/hop/dead split that the file transport does with
 driver-side renames (stateful.py:_route_batch) is a pure column expression
 here — no driver involvement, no rename idempotence machinery; exactly-once
 hop/reply delivery degrades to Kafka's at-least-once + idempotent-producer
@@ -49,6 +50,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from stateflow_spark.entity.registry import serialize_registry
 from stateflow_spark.sources import kafka_source
 from stateflow_spark.streaming.stateful import (
     OUT_STRUCT,
@@ -70,7 +72,6 @@ def topics(prefix: str) -> dict[str, str]:
         "request": f"{prefix}-request",
         "internal": f"{prefix}-internal",
         "reply": f"{prefix}-reply",
-        "cold": f"{prefix}-cold",
         "dead": f"{prefix}-dead",
     }
 
@@ -105,8 +106,7 @@ def route_to_topics(out: DataFrame, prefix: str) -> DataFrame:
     topic = (
         F.when(F.col("kind") == "reply", F.lit(t["reply"]))
         .when(F.col("kind") == "hop", F.lit(t["internal"]))
-        .when(F.col("kind") == "dead", F.lit(t["dead"]))
-        .otherwise(F.lit(t["cold"]))
+        .otherwise(F.lit(t["dead"]))
     )
     return out.select(
         topic.alias("topic"),
@@ -135,8 +135,12 @@ class KafkaEntityEngine:
           → route_to_topics → kafka sink
 
     Identical operator core to StreamingEntityEngine; only the transport
-    differs. Requires the spark-sql-kafka connector and a reachable broker
-    (gate with connector_available / a brokers env var)."""
+    differs. Poison events are quarantined into {prefix}-dead, like the
+    file engine's default: an undecodable record value, or a decoded event
+    whose handling raises out of operator.handle (that one also gets an
+    ERROR reply on {prefix}-reply). Requires the spark-sql-kafka
+    connector and a reachable broker (gate with connector_available / a
+    brokers env var)."""
 
     def __init__(
         self,
@@ -144,7 +148,6 @@ class KafkaEntityEngine:
         brokers: str,
         prefix: str,
         workdir: str,
-        state_ttl_ms: Optional[int] = None,
         stub_path: Optional[str] = None,
     ):
         """stub_path: when set, the engine runs over the in-process stub
@@ -159,7 +162,6 @@ class KafkaEntityEngine:
         self.brokers = brokers
         self.prefix = prefix
         self.checkpoint = os.path.join(workdir, "kafka-checkpoint")
-        self.state_ttl_ms = state_ttl_ms
         self.stub_path = stub_path
         self.query = None
 
@@ -167,8 +169,6 @@ class KafkaEntityEngine:
         """Construct the full streaming DataFrame (source → operator →
         routed egress rows) without starting it — the plan-shape surface
         for tests and .explain()."""
-        from stateflow_spark.streaming.stateful import serialize_registry
-
         blob = serialize_registry()
         t = topics(self.prefix)
         in_topics = f"{t['request']},{t['internal']}"
@@ -190,20 +190,15 @@ class KafkaEntityEngine:
                 in_topics,
                 starting_offsets="earliest",
             )
-        timeout = (
-            GroupStateTimeout.ProcessingTimeTimeout
-            if self.state_ttl_ms
-            else GroupStateTimeout.NoTimeout
-        )
         out = (
             decode_events(src)
             .groupBy("entity", "key")
             .applyInPandasWithState(
-                _make_stateful_fn(blob, self.state_ttl_ms, None),
+                _make_stateful_fn(blob, None, None, dead_letter=True),
                 OUT_STRUCT,
                 STATE_STRUCT,
                 "append",
-                timeout,
+                GroupStateTimeout.NoTimeout,
             )
         )
         return route_to_topics(out, self.prefix)

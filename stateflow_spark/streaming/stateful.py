@@ -10,7 +10,10 @@ Reference parity (SURVEY.md §2.A):
   ``spark.readStream.format("kafka")`` in production — same rows)
 - op #2/#3 routing: the (entity, key) groupBy IS the ingress router; the
   reply/hop split below is the egress router (dataflow.py:52-210)
-- ops #4-#18: the same ``operator.handle`` dispatch used everywhere
+- ops #4-#18: the per-key event core (entity/keyed.py
+  ``apply_key_events``) every distributed runtime shares: decode with
+  poison quarantine, seq order, ``operator.handle``, the put()-only state
+  contract and its dead-letter rollback
 - op #19 keyed partitioning: Spark shuffles the groupBy; the state store
   keeps per-key state partition-local across batches (unlike the superstep
   engine, state never re-shuffles)
@@ -29,18 +32,17 @@ Stateful API choice: Spark 4 also offers ``transformWithStateInPandas``
 Its Python runner requires the google.protobuf runtime, which this
 environment does not ship, so the engine stands on
 ``applyInPandasWithState`` — the operator contract here (one keyed batch
-fn over ``operator.handle``) ports to a StatefulProcessor verbatim:
+fn over ``apply_key_events``) ports to a StatefulProcessor verbatim:
 init → getValueState("state", STATE_STRUCT), handleInputRows → the same
-event loop, close → no-op.
+core call, close → no-op.
 """
 
 from __future__ import annotations
 
-import copy
 import os
 import pickle
 import uuid
-from typing import Any, Iterable, Iterator, Optional
+from typing import Iterable, Iterator, Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -54,8 +56,17 @@ from pyspark.sql.types import (
 )
 
 from stateflow_spark.entity import operator
-from stateflow_spark.entity.interpreter import StateStore
-from stateflow_spark.entity.model import EntityRef, Event, EventType
+from stateflow_spark.entity.keyed import (
+    OUT_COLUMNS,
+    apply_key_events,
+    dead_letter_record,
+)
+from stateflow_spark.entity.model import EntityRef, Event
+from stateflow_spark.entity.registry import (
+    install_worker_registry,
+    serialize_registry,
+)
+from stateflow_spark.serde import PickleSerde
 
 EVENT_STRUCT = StructType(
     [
@@ -77,44 +88,6 @@ OUT_STRUCT = StructType(
 )
 
 STATE_STRUCT = StructType([StructField("blob", BinaryType(), True)])
-
-
-class _GroupStateStore(StateStore):
-    """Adapter from the interpreter's store interface to one group's
-    GroupState handle.
-
-    State contract: handlers COMMIT mutations only via put() — get()
-    returns the live object for zero-copy reads, and an in-place
-    mutation of it without a put() is a contract violation, not a
-    commit. The DLQ rollback baseline re-snapshots only when put()
-    moved `version` (r10 ADVICE: the per-event deepcopy made every key
-    pay O(state × events)), so an uncommitted in-place mutation would
-    be silently discarded by a LATER event's rollback (r11 ADVICE).
-    The engine enforces this with a once-per-key-per-batch tripwire:
-    version unmoved + state content drifted ⇒ loud RuntimeError."""
-
-    def __init__(self, entity: str, key: str, state: Optional[dict]):
-        self.entity = entity
-        self.key = key
-        self.state = state
-        self.touched = False
-        # monotone put() counter: the DLQ rollback snapshot re-copies
-        # only when this moved (touched alone can't distinguish "mutated
-        # again" once it has latched True)
-        self.version = 0
-
-    def owns(self, ref: EntityRef) -> bool:
-        return ref.entity == self.entity and ref.key == self.key
-
-    def get(self, ref: EntityRef) -> Optional[dict]:
-        assert self.owns(ref)
-        return self.state
-
-    def put(self, ref: EntityRef, state: dict) -> None:
-        assert self.owns(ref)
-        self.state = state
-        self.touched = True
-        self.version += 1
 
 
 def _cold_load(cold_dir: str, entity: str, key: str) -> Optional[dict]:
@@ -141,50 +114,23 @@ def _cold_load(cold_dir: str, entity: str, key: str) -> Optional[dict]:
     return pickle.loads(blobs[seqs.index(max(seqs))])
 
 
-def serialize_registry() -> bytes:
-    """Cloudpickle the entity registry for shipment to executors.
-
-    Entity classes registered from modules outside the installed package
-    (notebooks, test files, user scripts) are not importable on Spark's
-    Python workers, so those modules are pickled by value; package modules
-    stay by-reference so workers reuse the installed code.
-    """
-    import sys
-
-    import cloudpickle
-
-    from stateflow_spark.entity.registry import get_registry
-
-    reg = dict(get_registry())
-    mods = {
-        et.cls.__module__: sys.modules[et.cls.__module__]
-        for et in reg.values()
-        if et.cls.__module__ in sys.modules
-        and not et.cls.__module__.startswith("stateflow_spark")
-    }
-    for mod in mods.values():
-        cloudpickle.register_pickle_by_value(mod)
-    try:
-        return cloudpickle.dumps(reg)
-    finally:
-        for mod in mods.values():
-            cloudpickle.unregister_pickle_by_value(mod)
-
-
 def _make_stateful_fn(
     registry_blob: bytes,
     ttl_ms: Optional[int],
     cold_dir: Optional[str],
     dead_letter: bool = False,
 ):
+    """The applyInPandasWithState function: TTL eviction, cold reload and
+    the GroupState update around the per-key event core (entity/keyed.py,
+    which owns the state contract and the dead-letter rollback). The core
+    runs with PickleSerde, byte-identical to ``Event.to_bytes``."""
+
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         import time
 
-        from stateflow_spark.entity import registry as reg_mod
-
-        reg_mod.install_worker_registry(registry_blob)
+        install_worker_registry(registry_blob)
 
         entity_name, k = key
 
@@ -199,13 +145,11 @@ def _make_stateful_fn(
                         entity_name,
                         k,
                         time.time_ns(),
-                        pickle.dumps(pickle.loads(state.get[0])),
+                        bytes(state.get[0]),
                     )
                 )
             state.remove()
-            yield pd.DataFrame(
-                rows, columns=["kind", "entity", "key", "seq", "blob"]
-            )
+            yield pd.DataFrame(rows, columns=OUT_COLUMNS)
             return
 
         current = pickle.loads(state.get[0]) if state.exists else None
@@ -214,136 +158,19 @@ def _make_stateful_fn(
             reheated = current is not None
         else:
             reheated = False
-        store = _GroupStateStore(entity_name, k, current)
-
-        rows: list[tuple] = []
-        events: list[Event] = []
-        for pdf in pdfs:
-            for b, s in zip(pdf["blob"], pdf["seq"]):
-                try:
-                    events.append((s, Event.from_bytes(bytes(b))))
-                except Exception as ex:
-                    # poison-event quarantine (round-8 VERDICT #6): an
-                    # undecodable blob must not kill the continuous query
-                    # — route it to the dead-letter sink with the error
-                    # and the original bytes; the reference has no DLQ
-                    # (a bad record kills the Beam bundle), production
-                    # needs one
-                    if not dead_letter:
-                        raise
-                    rows.append(
-                        (
-                            "dead",
-                            entity_name,
-                            k,
-                            int(s),
-                            pickle.dumps(
-                                {
-                                    "error": f"{type(ex).__name__}: {ex}",
-                                    "event_blob": bytes(b),
-                                }
-                            ),
-                        )
-                    )
-        events.sort(key=lambda t: t[0])
-        # DLQ rollback snapshot, ONCE per key per batch: a handler
-        # exception that ESCAPES handle() must not persist a half-mutated
-        # state. Known escapes are pre-mutation (unknown entity type,
-        # malformed payload keys — user-code failures inside flows/invokes
-        # become error replies in Interpreter.run / handle's own try), but
-        # the restore must hold even if that invariant rots: a REAL copy,
-        # because an in-place state mutation would survive a reference
-        # snapshot (r9 ADVICE). The copy re-runs only after a handle()
-        # that actually called put() (store.version moved) — the r10
-        # per-EVENT deepcopy made every DLQ-enabled key pay
-        # O(state_size × events) even when no handler ever failed
-        # (r10 ADVICE). Without a DLQ the exception re-raises and kills
-        # the query, so no snapshot at all.
-        if dead_letter:
-            pre_state = copy.deepcopy(store.state)
-            pre_touched, pre_version = store.touched, store.version
-        for _, ev in events:
-            try:
-                res = operator.handle(ev, store)
-            except Exception as ex:
-                if not dead_letter:
-                    raise
-                # put()-contract tripwire, ROLLBACK-TIME leg: the restore
-                # below is exactly the moment an uncommitted in-place
-                # mutation would be silently discarded, so the drift
-                # check must run BEFORE pre_state overwrites the
-                # evidence (the post-loop leg alone cannot fire here —
-                # after the restore, state == pre_state by construction)
-                if store.version == pre_version and store.state != pre_state:
-                    raise RuntimeError(
-                        f"state contract violation for {entity_name}/{k}: "
-                        "a handler mutated state in place without put() "
-                        "and a later event failed; rolling back would "
-                        "silently discard the uncommitted mutation — "
-                        "commit via put()"
-                    ) from ex
-                # restore a COPY so the pristine snapshot never becomes
-                # the live object (a later in-place mutation would
-                # corrupt it); deepcopy here is on the rare error path
-                store.state = copy.deepcopy(pre_state)
-                store.touched, store.version = pre_touched, pre_version
-                rows.append(
-                    (
-                        "dead",
-                        ev.entity,
-                        ev.key or "",
-                        ev.seq,
-                        pickle.dumps(
-                            {
-                                "error": f"{type(ex).__name__}: {ex}",
-                                "event_blob": ev.to_bytes(),
-                            }
-                        ),
-                    )
-                )
-                # the event decoded, so it carries the originating
-                # event_id — unblock the waiting client with an error
-                # reply (the streaming analog of handle()'s error replies)
-                err = ev.reply(
-                    EventType.ERROR, error=f"{type(ex).__name__}: {ex}"
-                )
-                rows.append(
-                    ("reply", err.entity, err.key or "", err.seq, err.to_bytes())
-                )
-                continue
-            for r in res.replies:
-                rows.append(("reply", r.entity, r.key or "", r.seq, r.to_bytes()))
-            for h in res.hops:
-                rows.append(("hop", h.entity, h.key, h.seq, h.to_bytes()))
-            if dead_letter and store.version != pre_version:
-                # a successful put() advanced the committed baseline —
-                # re-snapshot so a LATER failure rolls back to here, not
-                # to the batch start (read-only handles skip the copy)
-                pre_state = copy.deepcopy(store.state)
-                pre_touched, pre_version = store.touched, store.version
-
-        # put()-only contract tripwire (r11 ADVICE): if no put() moved the
-        # version since the last snapshot but the state content drifted, a
-        # handler mutated the live object in place — a mutation the DLQ
-        # rollback would silently discard on a later failure. ONE content
-        # compare per key per batch (not per event), loud by design: this
-        # is an operator-code bug, not bad data, so it must not be
-        # quarantined away.
-        if dead_letter and store.version == pre_version and (
-            store.state != pre_state
-        ):
-            raise RuntimeError(
-                f"state contract violation for {entity_name}/{k}: a handler "
-                "mutated state in place without put(); in-place mutations "
-                "are not committed and a later failure's DLQ rollback would "
-                "discard them — commit via put()"
-            )
-
-        if (store.touched or reheated) and store.state is not None:
-            state.update((pickle.dumps(store.state),))
+        rows, current, committed = apply_key_events(
+            entity_name,
+            k,
+            current,
+            ((s, b) for pdf in pdfs for s, b in zip(pdf["seq"], pdf["blob"])),
+            PickleSerde(),
+            dead_letter,
+        )
+        if (committed or reheated) and current is not None:
+            state.update((pickle.dumps(current),))
         if ttl_ms is not None and state.exists:
             state.setTimeoutDuration(ttl_ms)
-        yield pd.DataFrame(rows, columns=["kind", "entity", "key", "seq", "blob"])
+        yield pd.DataFrame(rows, columns=OUT_COLUMNS)
 
     return fn
 
@@ -487,17 +314,7 @@ class StreamingEntityEngine:
             if not name.endswith(".parquet"):
                 continue
             tbl = pq.read_table(os.path.join(self.dead_dir, name))
-            for row in tbl.to_pylist():
-                payload = pickle.loads(row["blob"])
-                out.append(
-                    {
-                        "entity": row["entity"],
-                        "key": row["key"],
-                        "seq": row["seq"],
-                        "error": payload["error"],
-                        "event_blob": payload["event_blob"],
-                    }
-                )
+            out += [dead_letter_record(**row) for row in tbl.to_pylist()]
         return out
 
     # -- engine -------------------------------------------------------------

@@ -12,12 +12,12 @@ loop iteration is one Spark job (a superstep):
 State AND in-flight hop events stay distributed across all supersteps
 (round 5: hops loop cluster-side straight into the next cogroup; the
 round-4 form collected them). Only replies — the client-facing output,
-the reference's reply topic — come to the driver, plus one count per
-superstep as the loop condition. Per-key serial execution inside a group
-gives the reference's single-writer-per-key consistency
-(stateful_operator per-key handling; AWS variant's lock,
-aws/abstract_lambda.py:80-99); cross-key flows keep its non-isolated
-semantics.
+the reference's reply topic — and quarantined dead letters come to the
+driver, plus one count per superstep as the loop condition. Per-key
+serial execution inside a group gives the reference's
+single-writer-per-key consistency (stateful_operator per-key handling;
+AWS variant's lock, aws/abstract_lambda.py:80-99); cross-key flows keep
+its non-isolated semantics.
 
 Scale: groups are per entity key — Spark hash-partitions them; skewed hot
 keys are bounded by per-key event counts, not data volume. State never
@@ -35,8 +35,16 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from stateflow_spark.entity import operator
-from stateflow_spark.entity.interpreter import StateStore
-from stateflow_spark.entity.model import EntityRef, Event, EventType
+from stateflow_spark.entity.keyed import (
+    OUT_COLUMNS,
+    apply_key_events,
+    dead_letter_record,
+)
+from stateflow_spark.entity.model import Event
+from stateflow_spark.entity.registry import (
+    install_worker_registry,
+    serialize_registry,
+)
 from stateflow_spark.storage import unpersist_local_checkpoint
 
 EVENT_SCHEMA = "entity string, key string, seq long, blob binary"
@@ -44,60 +52,34 @@ STATE_SCHEMA = "entity string, key string, blob binary"
 OUT_SCHEMA = "kind string, entity string, key string, seq long, blob binary"
 
 
-class _SingleKeyStore(StateStore):
-    """The store one cogroup activation sees: it owns exactly one key."""
-
-    def __init__(self, entity: str, key: str, state: Optional[dict]):
-        self.entity = entity
-        self.key = key
-        self.state = state
-
-    def owns(self, ref: EntityRef) -> bool:
-        return ref.entity == self.entity and ref.key == self.key
-
-    def get(self, ref: EntityRef) -> Optional[dict]:
-        assert self.owns(ref), f"store for {self.entity}({self.key}) asked for {ref}"
-        return self.state
-
-    def put(self, ref: EntityRef, state: dict) -> None:
-        assert self.owns(ref)
-        self.state = state
-
-
-def _make_step_fn(registry_blob: bytes, serde=None):
+def _make_step_fn(registry_blob: bytes, serde):
     """Build the cogroup function; ships the linked+compiled registry to the
     python workers (the registry module is re-populated there, so entity
     classes defined in test/user modules need no importable path). The wire
     serde (Pickle default; Json/Proto/Cloudpickle per deployment) travels in
-    the closure — it is a stateless object."""
+    the closure — it is a stateless object. The per-key step itself is the
+    shared core (entity/keyed.py) with poison quarantine on; every key
+    re-emits its state row, because the next superstep's state is exactly
+    this superstep's output."""
 
     def step(keys, events_pdf: pd.DataFrame, state_pdf: pd.DataFrame):
-        from stateflow_spark.entity import registry as reg_mod
-        from stateflow_spark.serde import PickleSerde
-
-        sd = serde or PickleSerde()
-        reg_mod.install_worker_registry(registry_blob)
+        install_worker_registry(registry_blob)
 
         entity_name, key = keys
         state = (
             pickle.loads(state_pdf["blob"].iloc[0]) if len(state_pdf) else None
         )
-        store = _SingleKeyStore(entity_name, key, state)
-
-        out: list[tuple] = []
-        if len(events_pdf):
-            for _, row in events_pdf.sort_values("seq").iterrows():
-                ev: Event = sd.from_bytes(row["blob"])
-                res = operator.handle(ev, store)
-                for r in res.replies:
-                    out.append(("reply", entity_name, key, r.seq, sd.to_bytes(r)))
-                for h in res.hops:
-                    out.append(("hop", h.entity, h.key, h.seq, sd.to_bytes(h)))
-        if store.state is not None:
-            out.append(("state", entity_name, key, 0, pickle.dumps(store.state)))
-        return pd.DataFrame(
-            out, columns=["kind", "entity", "key", "seq", "blob"]
+        out, state, _ = apply_key_events(
+            entity_name,
+            key,
+            state,
+            zip(events_pdf["seq"], events_pdf["blob"]),
+            serde,
+            dead_letter=True,
         )
+        if state is not None:
+            out.append(("state", entity_name, key, 0, pickle.dumps(state)))
+        return pd.DataFrame(out, columns=OUT_COLUMNS)
 
     return step
 
@@ -107,14 +89,11 @@ class RunResult:
     replies: dict[str, Event] = field(default_factory=dict)  # event_id → reply
     state_df: Optional[DataFrame] = None
     supersteps: int = 0
+    # quarantined events, one keyed.dead_letter_record dict each
+    dead_letters: list[dict] = field(default_factory=list)
 
     def result_of(self, event: Event) -> Any:
-        reply = self.replies[event.event_id]
-        if reply.event_type == EventType.ERROR:
-            raise RuntimeError(reply.payload["error"])
-        if reply.event_type == EventType.KEY_NOT_FOUND:
-            raise KeyError(f"{reply.entity}({reply.key}) not found")
-        return reply.payload.get("result")
+        return operator.reply_value(self.replies[event.event_id])
 
     def collect_state(self) -> dict[tuple[str, str], dict]:
         rows = self.state_df.collect()
@@ -165,32 +144,7 @@ class SuperstepRuntime:
         events: list[Event],
         state_df: Optional[DataFrame] = None,
     ) -> RunResult:
-        import sys
-
-        import cloudpickle
-
-        from stateflow_spark.entity.registry import get_registry
-
-        # entity classes live in user/test modules the Python workers can't
-        # necessarily import — embed their definitions in the blob instead of
-        # referencing them by module path
-        reg = dict(get_registry())
-        mods = {
-            et.cls.__module__: sys.modules[et.cls.__module__]
-            for et in reg.values()
-            if et.cls.__module__ in sys.modules
-            and not et.cls.__module__.startswith("stateflow_spark")
-        }
-        by_value = []
-        for mod in mods.values():
-            cloudpickle.register_pickle_by_value(mod)
-            by_value.append(mod)
-        try:
-            registry_blob = cloudpickle.dumps(reg)
-        finally:
-            for mod in by_value:
-                cloudpickle.unregister_pickle_by_value(mod)
-        step = _make_step_fn(registry_blob, self.serde)
+        step = _make_step_fn(serialize_registry(), self.serde)
 
         if state_df is None:
             state_df = self.spark.createDataFrame([], STATE_SCHEMA)
@@ -217,25 +171,31 @@ class SuperstepRuntime:
                 .persist()
             )
             # replies are the client-facing output (the reference's reply
-            # topic) — the ONLY rows that reach the driver. Hop events loop
+            # topic) — with the quarantined dead rows riding the same
+            # collect, the ONLY rows that reach the driver. Hop events loop
             # CLUSTER-SIDE: the out rows already carry EVENT_SCHEMA, so the
             # hop filter feeds the next superstep's cogroup directly —
             # in-flight flow payloads never round-trip through the driver
             # (the round-4 form collected them; only their count comes back
             # now, as the loop condition).
-            for r in out.filter(out.kind == "reply").collect():
+            for r in out.filter(out.kind.isin("reply", "dead")).collect():
+                if r.kind == "dead":
+                    result.dead_letters.append(
+                        dead_letter_record(r.entity, r.key, r.seq, r.blob)
+                    )
+                    continue
                 ev = self.serde.from_bytes(bytes(r.blob))
                 result.replies[ev.event_id] = ev
             # localCheckpoint truncates lineage — without it every superstep's
             # plan chains all previous ones (heap blow-up, replanning cost).
             # ONE combined checkpoint for state+hops (round 8): the reply
-            # rows still skip checkpoint durability (checkpointing the whole
+            # and dead rows skip checkpoint durability (checkpointing the whole
             # `out` measured ~30% slower on the YCSB T mix), but state and
             # hops share a single materialization job instead of two —
             # the per-superstep fixed cost drops ~9% on the T mix (2
             # supersteps) and run-to-run variance tightens; the downstream
             # kind-filters are cheap scans of the checkpointed blocks
-            carry = out.filter(out.kind != "reply").localCheckpoint()
+            carry = out.filter(out.kind.isin("state", "hop")).localCheckpoint()
             state_df = carry.filter(carry.kind == "state").select(
                 "entity", "key", "blob"
             )

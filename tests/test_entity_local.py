@@ -938,17 +938,15 @@ def test_worker_registry_install_clears_interpreter_caches():
     clear the per-entity-name interpreter caches when a NEW blob arrives
     (reused workers keep module state across runs), and must skip the
     unpickle entirely when the SAME blob object arrives again."""
-    import pickle
-
     from stateflow_spark.entity import registry as reg_mod
     from stateflow_spark.entity.interpreter import _module_globals
 
-    blob1 = pickle.dumps(dict(reg_mod.get_registry()))
+    blob1 = reg_mod.serialize_registry()
     reg_mod.install_worker_registry(blob1)
     _module_globals("CopyLog")  # prime the cache
     assert _module_globals.cache_info().currsize >= 1
     reg_mod.install_worker_registry(blob1)  # same object: cache kept
     assert _module_globals.cache_info().currsize >= 1
-    blob2 = pickle.dumps(dict(reg_mod.get_registry()))
+    blob2 = reg_mod.serialize_registry()
     reg_mod.install_worker_registry(blob2)  # new blob: caches cleared
     assert _module_globals.cache_info().currsize == 0

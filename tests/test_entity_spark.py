@@ -170,6 +170,40 @@ def test_superstep_max_supersteps_guard(spark):
         tight.run([buy], state_df=res.state_df)
 
 
+def test_superstep_quarantines_handler_escape(spark):
+    """A handler exception that escapes operator.handle (an event for an
+    unregistered entity type) must not fail the superstep: the bad event
+    gets an ERROR reply and lands in RunResult.dead_letters, and a healthy
+    key in the same batch keeps its reply and state."""
+    import uuid
+
+    from stateflow_spark.entity.model import Event, EventType
+
+    bad = Event(
+        str(uuid.uuid4()), "NoSuchEntity", "k1", EventType.GET_STATE,
+        {"attr": "x"},
+    )
+    init = operator.make_init_event("User", ("sdlq-u1",))
+    res = SuperstepRuntime(spark).run([bad, init])
+
+    reply = res.replies[bad.event_id]
+    assert reply.event_type == EventType.ERROR
+    assert "NoSuchEntity" in reply.payload["error"]
+    with pytest.raises(RuntimeError, match="NoSuchEntity"):
+        res.result_of(bad)
+
+    assert len(res.dead_letters) == 1
+    dl = res.dead_letters[0]
+    assert (dl["entity"], dl["key"]) == ("NoSuchEntity", "k1")
+    assert dl["error"] == reply.payload["error"]
+    assert Event.from_bytes(dl["event_blob"]).event_id == bad.event_id
+
+    assert res.result_of(init).key == "sdlq-u1"
+    state = res.collect_state()
+    assert set(state) == {("User", "sdlq-u1")}
+    assert state[("User", "sdlq-u1")]["balance"] == 0
+
+
 @pytest.mark.slow
 def test_superstep_releases_prior_checkpoints(spark):
     """Per-superstep localCheckpoints must be released as the loop

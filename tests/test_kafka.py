@@ -71,7 +71,7 @@ def test_route_to_topics(spark):
     rows = [
         ("reply", "User", "u1", 1, b"r"),
         ("hop", "Item", "i1", 2, b"h"),
-        ("evict", "User", "u2", 3, b"e"),
+        ("dead", "User", "u3", 4, b"d"),
     ]
     from pyspark.sql import functions as F
 
@@ -87,7 +87,7 @@ def test_route_to_topics(spark):
     assert routed == {
         "u1": "sf-reply",
         "i1": "sf-internal",
-        "u2": "sf-cold",
+        "u3": "sf-dead",
     }
 
 
@@ -257,5 +257,63 @@ def test_kafka_transport_e2e(spark, tmp_path):
         assert user.buy_item(3, item).get() is True
         assert user.balance == 5
         assert item.stock == 1
+    finally:
+        eng.stop()
+
+
+@pytest.mark.slow
+def test_kafka_engine_quarantines_poison(spark, tmp_path):
+    """An undecodable record on {prefix}-request is quarantined into
+    {prefix}-dead with the error and its original bytes, and a healthy
+    record in the same stream still gets its reply — the file engine's
+    default dead-letter behavior, over the Kafka topics."""
+    import json
+    import pickle
+
+    from stateflow_spark.entity.model import Event
+
+    eng, km, brokers = _e2e_engine_and_clients(spark, tmp_path, "sf-dlq")
+    producer = km.KafkaProducer(bootstrap_servers=brokers)
+    poison_key = json.dumps(
+        {"entity": "User", "key": "kafka-dlq-poison", "seq": 1}
+    ).encode()
+    producer.send("sf-dlq-request", key=poison_key, value=b"not-an-event")
+    init = operator.make_init_event("User", ("kafka-dlq-u1",))
+    producer.send(
+        "sf-dlq-request",
+        key=json.dumps(
+            {"entity": init.entity, "key": init.key, "seq": init.seq}
+        ).encode(),
+        value=init.to_bytes(),
+    )
+    producer.flush()
+    eng.start()
+    try:
+        replies = km.KafkaConsumer(
+            "sf-dlq-reply",
+            bootstrap_servers=brokers,
+            auto_offset_reset="earliest",
+            consumer_timeout_ms=120_000,
+        )
+        # the poison record decodes to no event, so it gets no reply: the
+        # healthy record's reply is the only one on the topic
+        msg = next(iter(replies), None)
+        assert msg is not None, f"no reply (stream: {eng.query.exception()})"
+        reply = Event.from_bytes(msg.value)
+        assert reply.event_id == init.event_id
+        assert reply.payload["result"].key == "kafka-dlq-u1"
+
+        dead = km.KafkaConsumer(
+            "sf-dlq-dead",
+            bootstrap_servers=brokers,
+            auto_offset_reset="earliest",
+            consumer_timeout_ms=60_000,
+        )
+        msg = next(iter(dead), None)
+        assert msg is not None, "poison record never reached sf-dlq-dead"
+        assert json.loads(msg.key)["key"] == "kafka-dlq-poison"
+        payload = pickle.loads(msg.value)
+        assert payload["error"]
+        assert payload["event_blob"] == b"not-an-event"
     finally:
         eng.stop()
