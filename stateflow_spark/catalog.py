@@ -8,6 +8,7 @@ scale-factor directory.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -99,6 +100,36 @@ def _scan_parallelism(path: str, cap: int = 4096) -> int:
     return _SCAN_PAR_CACHE[key]
 
 
+# Spark's default spark.sql.files.maxPartitionBytes: the most bytes one
+# scan task reads, so a scan of N bytes gets at least ceil(N / this) tasks.
+FILES_MAX_PARTITION_BYTES = 128 * 1024 * 1024
+
+# (path, mtime-key) → on-disk bytes of the parquet data files.
+_BYTES_CACHE: dict[tuple[str, float], int] = {}
+
+
+def stage_tasks(spark: SparkSession, sources: Iterable[str] = ()) -> int:
+    """Task count for a stage pinned with ``repartition(n, key)`` — an
+    explicit count, exempt from AQE's size-based coalescing, which would
+    merge a byte-small but compute-dense stage onto one core.
+
+    ``sources`` are the parquet paths (table paths or stored-layout dirs)
+    whose rows feed the stage. The count is never below the cores, nor
+    below the ceil(bytes / FILES_MAX_PARTITION_BYTES) tasks Spark would
+    give a scan of those inputs, so bytes per task stay bounded at any
+    scale. No sources (a streaming micro-batch frame): the core floor."""
+    total = 0
+    for path in sources:
+        key = _mtime_key(path)
+        if key not in _BYTES_CACHE:
+            _BYTES_CACHE[key] = sum(map(os.path.getsize, _parquet_files(path)))
+        total += _BYTES_CACHE[key]
+    return max(
+        spark.sparkContext.defaultParallelism,
+        -(-total // FILES_MAX_PARTITION_BYTES),
+    )
+
+
 _ROWS_CACHE: dict[tuple[str, float], int] = {}
 
 
@@ -144,17 +175,15 @@ def load(
       what DuckDB does on read.
 
     ``fanout="key_col"`` opts in to the unsplittable-input mitigation
-    (optimization guide §2.5: "one huge unsplittable file … repartition
-    immediately after the read"): when the parquet layout offers fewer
-    row groups than the session has cores, hash-repartition on the given
-    key to ``defaultParallelism`` so scan-fused work parallelizes. The
-    condition is derived from the file footer, so at production scale
-    (thousands of row groups) this is a NO-OP — no extra exchange ever
-    appears in a plan whose scan already parallelizes; it is not a
-    local-mode constant. Keyed (not round-robin) so the exchange both
-    avoids the sort-before-repartition pass and can be REUSED by a
-    downstream join/aggregation/window keyed the same way. Measured (r12,
-    sf0.1, interleaved in-session A/B): TPC-H Q1 2.15 s → 1.01 s.
+    ("one huge unsplittable file … repartition immediately after the
+    read"): when the parquet layout offers fewer row groups than the
+    session has cores, hash-repartition on the given key to
+    ``stage_tasks`` so scan-fused work parallelizes. The condition comes
+    from the file footer, so at production scale (thousands of row
+    groups) no extra exchange appears. Keyed (not round-robin) so the
+    exchange skips the sort-before-repartition pass and can be REUSED by
+    a downstream join/aggregation/window on the same key. Measured (r12,
+    sf0.1, interleaved A/B): TPC-H Q1 2.15 s → 1.01 s.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
@@ -173,9 +202,9 @@ def load(
         elif kind == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     if fanout is not None:
-        par = spark.sparkContext.defaultParallelism
-        if _scan_parallelism(table_path(sf_dir, name)) < par:
-            df = df.repartition(par, fanout)
+        path = table_path(sf_dir, name)
+        if _scan_parallelism(path) < stage_tasks(spark):
+            df = df.repartition(stage_tasks(spark, [path]), fanout)
     return df
 
 

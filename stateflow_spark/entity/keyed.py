@@ -70,19 +70,17 @@ def apply_key_events(
     state: Optional[dict],
     rows: Iterable[tuple[int, bytes]],
     serde,
-    dead_letter: bool,
 ) -> tuple[list[tuple], Optional[dict], bool]:
     """Apply one key's ``(seq, blob)`` event rows to its state, in seq order.
 
     Returns ``(out_rows, final_state, committed)``; ``committed`` says a
     handler put() state the caller must persist.
 
-    dead_letter=True quarantines poison instead of raising: an undecodable
-    blob becomes a ``dead`` row, and a decoded event whose handling raises
-    out of ``operator.handle`` becomes a ``dead`` row plus an ERROR reply
-    (so the waiting client unblocks), with the key's state rolled back to
-    the last committed put(). Other events of the key are unaffected.
-    dead_letter=False re-raises, for fail-fast runtimes."""
+    Poison is quarantined, never raised: an undecodable blob becomes a
+    ``dead`` row, and a decoded event whose handling raises out of
+    ``operator.handle`` becomes a ``dead`` row plus an ERROR reply (so the
+    waiting client unblocks), with the key's state rolled back to the
+    last committed put(). Other events of the key are unaffected."""
     out: list[tuple] = []
     events: list[tuple[int, Event, bytes]] = []
     for seq, blob in rows:
@@ -90,8 +88,6 @@ def apply_key_events(
         try:
             events.append((seq, serde.from_bytes(blob), blob))
         except Exception as ex:
-            if not dead_letter:
-                raise
             out.append(_dead_row(entity, key, seq, _error(ex), blob))
     if not events:
         return out, state, False
@@ -100,14 +96,11 @@ def apply_key_events(
 
     # rollback snapshot: a REAL copy, because an in-place mutation would
     # survive a reference snapshot; re-taken only after a put()
-    if dead_letter:
-        pre_state, pre_version = copy.deepcopy(state), 0
+    pre_state, pre_version = copy.deepcopy(state), 0
     for seq, ev, blob in events:
         try:
             res = operator.handle(ev, store)
         except Exception as ex:
-            if not dead_letter:
-                raise
             # tripwire, rollback leg: must run BEFORE the restore below
             # overwrites the evidence of an uncommitted in-place mutation
             if store.version == pre_version and store.state != pre_state:
@@ -130,14 +123,14 @@ def apply_key_events(
             out.append(("reply", entity, key, r.seq, serde.to_bytes(r)))
         for h in res.hops:
             out.append(("hop", h.entity, h.key, h.seq, serde.to_bytes(h)))
-        if dead_letter and store.version != pre_version:
+        if store.version != pre_version:
             # a put() advanced the committed baseline: a LATER failure
             # rolls back to here, not to the batch start
             pre_state, pre_version = copy.deepcopy(store.state), store.version
 
     # tripwire, end-of-batch leg: an operator-code bug, not bad data, so it
     # must not be quarantined away
-    if dead_letter and store.version == pre_version and store.state != pre_state:
+    if store.version == pre_version and store.state != pre_state:
         raise RuntimeError(
             f"state contract violation for {entity}/{key}: a handler "
             "mutated state in place without put(); in-place mutations "

@@ -298,16 +298,11 @@ def banded_candidate_pairs(
         F.expr(f"(sig >> (band * {band_bits})) & {(1 << band_bits) - 1}"),
     )
     if bucket_tasks:
-        # the in-bucket pair expansion is compute-dense per byte (O(k²)
-        # struct building + hamming per bucket) — the exact stage class
-        # AQE's size-based coalescing collapses to 1 task on byte-small
-        # inputs (r13 profile: multimodal_phash_neardup's bucket stage ran
-        # 1 task × 0.7-1.5 s cpu). An EXPLICIT keyed repartition on the
-        # bucket key is exempt from AQE coalescing and is reused by the
-        # groupBy (same key → zero extra exchange) — the
-        # join_market_basket_pairs protection idiom. Callers pass
-        # defaultParallelism, so the count scales with the cluster, not a
-        # local constant.
+        # the in-bucket pair expansion is compute-dense per byte (O(k²)),
+        # the stage class AQE's size-based coalescing collapses to 1 task
+        # on byte-small inputs (r13: multimodal_phash_neardup's bucket
+        # stage ran 1 task × 0.7-1.5 s cpu). The keyed repartition is
+        # reused by the groupBy; callers pass catalog.stage_tasks.
         bands = bands.repartition(bucket_tasks, "band", "band_val")
     pairs = (
         bands.groupBy("band", "band_val")

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from stateflow_spark.catalog import load, table_rows
+from stateflow_spark.catalog import load, stage_tasks, table_path, table_rows
 from stateflow_spark.functions.similarity import (
     banded_hamming_pairs,
     cosine_ge_banded,
@@ -44,10 +44,8 @@ def _shingles_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     when the source is a single parquet split, and because doc_id is the key
     every per-doc aggregation downstream groups on, Catalyst reuses the
     partitioning and drops that exchange — the text shuffle replaces a
-    signature shuffle rather than adding one. The partition count is given
-    explicitly (REPARTITION_BY_NUM): AQE's coalescer sizes partitions by
-    bytes and would merge a small-but-compute-heavy corpus back onto one
-    core; an explicit count is exempt from coalescing.
+    signature shuffle rather than adding one. The partition count is
+    catalog.stage_tasks (an explicit count, exempt from AQE coalescing).
 
     The empty-doc filter tests ``size(w) >= 3`` (equivalent to "shingles
     nonempty") BEFORE the shingle projection, and the word array is pinned
@@ -63,8 +61,10 @@ def _shingles_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays a materialized attribute for every consumer. Shingles are built
     by direct element indexing (w[i-1..i+1]), not slice()+concat_ws —
     same strings, ~2× cheaper per element."""
-    n_part = spark.sparkContext.defaultParallelism
-    return _shingles_from(load(spark, sf_dir, "documents"), n_part)
+    return _shingles_from(
+        load(spark, sf_dir, "documents"),
+        stage_tasks(spark, [table_path(sf_dir, "documents")]),
+    )
 
 
 def _shingles_from(docs: DataFrame, n_part: int) -> DataFrame:
@@ -402,12 +402,12 @@ def _simhash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     60× the token count through a shuffle (90 M rows at sf0.1) and then
     need a second aggregation to fold bits back into one value. All 60
     votes stay inside a single whole-stage-codegen hash aggregate; the
-    explicit-count repartition on doc_id parallelizes the per-token md5
-    work across cores even from a single parquet split (and is the same
-    key the aggregation needs, so it replaces that shuffle rather than
-    adding one; explicit counts are exempt from AQE coalescing)."""
-    n_part = spark.sparkContext.defaultParallelism
-    d = load(spark, sf_dir, "documents").repartition(n_part, "doc_id")
+    pinned doc_id repartition parallelizes the per-token md5 work even
+    from a single parquet split, and replaces the aggregation's shuffle
+    (same key) rather than adding one."""
+    d = load(spark, sf_dir, "documents").repartition(
+        stage_tasks(spark, [table_path(sf_dir, "documents")]), "doc_id"
+    )
     toks = d.select("doc_id", F.explode(F.split("text", " ")).alias("t"))
     hv = F.conv(F.substring(F.md5("t"), 1, 15), 16, 10).cast("bigint")
     votes = [
@@ -466,11 +466,9 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = banded_hamming_pairs(
         sh, "doc_id", "simhash", n_bands=5, band_bits=12, max_hamming=4,
         sig_bits=60,
-        # pin the compute-dense O(k²) bucket stage's task count (the
-        # phash/§6 idiom — AQE's size-based coalescing collapses it to 1
-        # task on byte-small inputs); r13 in-session interleaved A/B:
-        # pinned wins all 4 sweeps, best 1.82 vs 3.08 s at sf0.1
-        bucket_tasks=spark.sparkContext.defaultParallelism,
+        # pin the compute-dense O(k²) bucket stage (r13 interleaved A/B:
+        # pinned won all 4 sweeps, best 1.82 vs 3.08 s at sf0.1)
+        bucket_tasks=stage_tasks(spark, [table_path(sf_dir, "documents")]),
     )
     return pairs.select(
         F.col("id_a").alias("doc_a"),
@@ -758,17 +756,16 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     n2 = fold(
         F.transform("v", lambda x: (x * x).cast("decimal(24,12)"))
     ).alias("n2")
-    # probe side: explicit-count hash repartition on vec_id so the
-    # per-pair decimal folds (higher-order functions run interpreted, not
-    # codegen) fan out across every core — a broadcast join alone would
-    # inherit the scan's split count, and a single-file table would run
-    # the whole quadratic projection on one core. Build side: NO hint —
+    # probe side: pinned vec_id repartition so the interpreted per-pair
+    # decimal folds fan out even from a single-file table. Build side: NO
+    # hint —
     # the block table is corpus-proportional, so AQE broadcasts it while
     # it fits (local testing) and plans a label-partitioned sort-merge
     # join with skew split beyond that (a hard hint would force a
     # corpus-sized broadcast at 100 TB).
-    n_part = spark.sparkContext.defaultParallelism
-    a = e.repartition(n_part, "vec_id").select(
+    a = e.repartition(
+        stage_tasks(spark, [table_path(sf_dir, "embeddings")]), "vec_id"
+    ).select(
         F.col("vec_id").alias("vec_a"), "label",
         F.col("v").alias("va"), n2.alias("na2"))
     b = e.select(F.col("vec_id").alias("vec_b"), "label",
@@ -1485,7 +1482,6 @@ def semantic_dedup_scaled(
             F.col("vec_id").cast("int").alias("ccid"), F.col("v").alias("c")
         )
     )
-    n_part = spark.sparkContext.defaultParallelism
 
     def coarse_pass(frame: DataFrame) -> DataFrame:
         """(vec_id, v) → (vec_id, ccid): broadcast nested-loop expand +
@@ -1526,7 +1522,9 @@ def semantic_dedup_scaled(
             .select("vec_id", F.col("m.mid").alias("mid"))
         )
 
-    ev = e.repartition(n_part, "vec_id")
+    ev = e.repartition(
+        stage_tasks(spark, [table_path(sf_dir, "embeddings")]), "vec_id"
+    )
     casg = coarse_pass(ev)
     # Seed-cell tables are built from SMALL DIRECT TREES over the filtered
     # seed rows, not as filters of the full corpus passes: per-vector
@@ -1595,20 +1593,15 @@ def semantic_dedup_scaled(
         .select("vec_id", "cid", "v", norm2_dec("v").alias("n2"))
         .localCheckpoint()
     )
-    # pin the PAIR stage's task count (r13 session 2, guide §2.5): the
-    # checkpointed assignment is byte-small at test scale, so the pair
-    # join's two ENSURE_REQUIREMENTS cid exchanges were AQE-coalesced to
-    # ONE task carrying the whole banded-cosine join condition (profiled
-    # 1.39 s cpu / 1 task at sf0.1 — the row's compute core run
-    # serially). One explicit cid repartition of the checkpointed frame
-    # is exempt from coalescing, REUSED by both join branches (identical
-    # subtree → one shuffle, read twice), and scales with the cluster
-    # via defaultParallelism. Cluster population is ~pop by construction
-    # (the SemDeDup scale knob), so forgoing AQE's skew split on this
-    # pinned exchange gives up nothing. In-session interleaved A/B:
-    # every pinned pass beat every unpinned pass, best 2.56 vs 3.67 s
-    # (0.70×), values identical.
-    asgc = asg.repartition(n_part, "cid")
+    # pin the PAIR stage (r13 session 2): the byte-small checkpointed
+    # assignment let AQE coalesce the pair join's cid exchanges onto ONE
+    # task running the banded-cosine condition serially (1.39 s cpu at
+    # sf0.1). One pinned cid repartition is REUSED by both join branches;
+    # cluster population is ~pop by construction, so forgoing AQE's skew
+    # split gives up nothing. A/B: best 2.56 vs 3.67 s (0.70×).
+    asgc = asg.repartition(
+        stage_tasks(spark, [table_path(sf_dir, "embeddings")]), "cid"
+    )
     a = asgc.select(
         F.col("vec_id").alias("va"), "cid",
         F.col("v").alias("v_a"), F.col("n2").alias("na2"),
@@ -1667,25 +1660,25 @@ def semantic_dedup(
         + "), cast(null as struct<d:double,cid:int>),"
         + " (acc, x) -> IF(acc IS NULL OR x.d < acc.d, x, acc))"
     )
-    n_part = spark.sparkContext.defaultParallelism
     # materialized once: the assignment feeds three plan branches (both
     # pair-join sides + the final kept flag); without the checkpoint the
     # k decimal-fold distance stage runs three times (same fix as the
     # scaled variant — measured 117 s → ~40 s at sf1 for fixed k=4)
     asg = (
-        e.repartition(n_part, "vec_id")
+        e.repartition(
+            stage_tasks(spark, [table_path(sf_dir, "embeddings")]), "vec_id"
+        )
         .crossJoin(one)
         .select("vec_id", "v", *dist_cols)
         .select("vec_id", "v", best.getField("cid").alias("cid"))
         .withColumn("n2", norm2_dec("v"))
         .localCheckpoint()
     )
-    # same pinned-pair-stage idiom as semantic_dedup_scaled: the
-    # checkpointed assignment is byte-small, so the pair join's ENSURE
-    # exchanges were AQE-coalesced onto one task running the whole
-    # banded-cosine condition serially; the explicit cid repartition is
-    # coalescing-exempt and reused by both branches
-    asgc = asg.repartition(n_part, "cid")
+    # same pinned pair stage as semantic_dedup_scaled, reused by both
+    # join branches
+    asgc = asg.repartition(
+        stage_tasks(spark, [table_path(sf_dir, "embeddings")]), "cid"
+    )
     a = asgc.select(
         F.col("vec_id").alias("va"), "cid",
         F.col("v").alias("v_a"), F.col("n2").alias("na2"),
@@ -2081,8 +2074,9 @@ def _winnowing_pairs(
     pairs whose overlap lives ONLY in boilerplate shared by > cap docs
     (n_shared undercounts, so the ≥ 2 threshold is a LOWER bound —
     precision is preserved)."""
-    n_part = spark.sparkContext.defaultParallelism
-    d = load(spark, sf_dir, "documents").repartition(n_part, "doc_id")
+    d = load(spark, sf_dir, "documents").repartition(
+        stage_tasks(spark, [table_path(sf_dir, "documents")]), "doc_id"
+    )
     vs_df = (
         d.filter(F.size(F.split("text", " ")) >= 11)
         .select(
@@ -2215,8 +2209,9 @@ def dedup_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     filters from. Within-fp classification rides the posting struct.
     The same shape lifts to MinHash band buckets or the full winnowing
     fingerprint SET (dedup_winnowing_pairs) stored as postings."""
-    n_part = spark.sparkContext.defaultParallelism
-    d = load(spark, sf_dir, "documents").repartition(n_part, "doc_id")
+    d = load(spark, sf_dir, "documents").repartition(
+        stage_tasks(spark, [table_path(sf_dir, "documents")]), "doc_id"
+    )
     fps = (
         d.filter(F.size(F.split("text", " ")) >= 8)
         .select(
@@ -2687,9 +2682,8 @@ def _mh_classify_delta(
     per-micro-batch runs union to exactly the batch result."""
     from pyspark.sql import Window
 
-    n_part = spark.sparkContext.defaultParallelism
     postings = spark.table(tbl)
-    sh = _shingles_from(delta_docs, n_part)
+    sh = _shingles_from(delta_docs, stage_tasks(spark))
     delta = _minhash_stacked_from(sh)
     cand = postings.join(delta, "bkey").select(
         "doc_id",

@@ -181,7 +181,8 @@ def entity_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     The only driver scalar is the key COUNT (state-store sizing). The
     GET_STATE surface itself stays hash-gated by entity_get_state and
     the superstep replays."""
-    from stateflow_spark.streaming.stateful import StreamingEntityEngine
+    from stateflow_spark.streaming.stateful import (
+        StreamingEntityEngine, state_partitions)
 
     from stateflow_spark.storage import unpersist_local_checkpoint
 
@@ -192,12 +193,8 @@ def entity_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys_df = ev.select("user_id").distinct().localCheckpoint()
     n_keys = keys_df.count()
 
-    # state-store parallelism tracks the key set (the engine docstring's
-    # sizing rule): 8 partitions is right for the sf0.01 key count but
-    # starves the per-key Python operator at sf1+ (measured 7.6×/decade
-    # fixed at 8), while tiny key sets pay per-partition state-commit
-    # overhead every micro-batch if over-partitioned
-    n_part = min(32, max(8, n_keys // 100))
+    # state-store parallelism tracks the key set
+    n_part = state_partitions(n_keys)
     eng = StreamingEntityEngine(
         spark,
         tempfile.mkdtemp(prefix="entity-stream-replay-"),

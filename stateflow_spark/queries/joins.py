@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from stateflow_spark.catalog import load
+from stateflow_spark.catalog import load, stage_tasks, table_path
 from stateflow_spark.queries.common import oracle_dsum, register
 
 
@@ -233,21 +233,16 @@ def join_market_basket_pairs(
     100 TB the (part_a, part_b) key space is wide and uniform — no
     skew handling needed past this cap."""
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    # EXPLICIT keyed repartition before the basket groupBy (r13 session 2,
-    # guide §2.5/§2.3): collect_set gets no real map-side reduction (every
-    # value survives into the partial set), so the groupBy's
-    # ENSURE_REQUIREMENTS exchange carries ~raw bytes anyway — but its
-    # byte-small output let AQE coalesce the basket-assembly + O(k²) pair
-    # expansion onto 4 tasks (profiled: 2.8 s cpu / 4 tasks at sf0.1). The
-    # explicit repartition shuffles the SAME two projected columns, is
-    # exempt from AQE coalescing (REPARTITION_BY_NUM), and is REUSED by
-    # the groupBy (same key → zero extra exchange), pinning the
-    # compute-dense stage at defaultParallelism — the phash/simhash
-    # bucket_tasks idiom. In-session interleaved A/B: every pinned pass
-    # beat every unpinned pass, best 1.11 vs 1.76 s (0.63×).
-    n_part = spark.sparkContext.defaultParallelism
+    # pinned keyed repartition before the basket groupBy (r13 session 2):
+    # collect_set gets no map-side reduction, so the groupBy's exchange
+    # carries ~raw bytes anyway, but its byte-small output let AQE
+    # coalesce the O(k²) pair expansion onto 4 tasks (2.8 s cpu at
+    # sf0.1). The pin shuffles the same two columns and is REUSED by the
+    # groupBy (same key → zero extra exchange). A/B: best 1.11 vs 1.76 s.
     baskets = (
-        li.repartition(n_part, "l_orderkey")
+        li.repartition(
+            stage_tasks(spark, [table_path(sf_dir, "lineitem")]), "l_orderkey"
+        )
         .groupBy("l_orderkey")
         .agg(
             F.slice(F.array_sort(F.collect_set("l_partkey")), 1, cap).alias("xs")
@@ -608,13 +603,10 @@ def join_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         items.agg(F.count_distinct("l_orderkey").alias("n"))
     )
     isup = items.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("s"))
-    # same pinned-basket-stage idiom as join_market_basket_pairs: the
-    # collect_set exchange carries ~raw bytes either way, and the explicit
-    # keyed repartition keeps AQE from coalescing the pair expansion onto
-    # a handful of tasks
+    # same pinned basket stage as join_market_basket_pairs
     baskets = (
         items.repartition(
-            spark.sparkContext.defaultParallelism, "l_orderkey"
+            stage_tasks(spark, [table_path(sf_dir, "lineitem")]), "l_orderkey"
         )
         .groupBy("l_orderkey")
         .agg(F.array_sort(F.collect_set("l_partkey")).alias("xs"))

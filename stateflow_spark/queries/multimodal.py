@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from stateflow_spark.catalog import load
+from stateflow_spark.catalog import load, stage_tasks, table_path
 from stateflow_spark.functions.similarity import banded_hamming_pairs
 from stateflow_spark.queries.common import register
 
@@ -286,7 +286,7 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         band_bits=_PHASH_BAND_BITS,
         max_hamming=_PHASH_MAX_HAMMING,
         sig_bits=60,
-        bucket_tasks=spark.sparkContext.defaultParallelism,
+        bucket_tasks=stage_tasks(spark, [table_path(sf_dir, "documents")]),
     )
     cross = (
         sig_pairs.join(
@@ -423,7 +423,9 @@ def multimodal_crossmodal_retrieval(
             "vec_id",
             F.slice(F.col("embedding").cast("array<double>"), 1, 8).alias("v"),
         )
-        .repartition(spark.sparkContext.defaultParallelism, "vec_id")
+        .repartition(
+            stage_tasks(spark, [table_path(sf_dir, "embeddings")]), "vec_id"
+        )
         # vn2 behind a keyed-aggregate barrier (exchange-free atop the
         # repartition) so the guard filter can't re-inline the decimal
         # fold into the Filter condition (r10 fold-reinline fix — see
@@ -511,8 +513,9 @@ def multimodal_audio_vad_segments(
     The oracle replays the identical segmentation declaratively
     (ROW_NUMBER islands over exploded frames); frame energies are exact
     integer byte sums on both engines."""
-    n_part = spark.sparkContext.defaultParallelism
-    d = load(spark, sf_dir, "documents").repartition(n_part, "doc_id")
+    d = load(spark, sf_dir, "documents").repartition(
+        stage_tasks(spark, [table_path(sf_dir, "documents")]), "doc_id"
+    )
     # empty-payload guard: Spark's sequence(0, -1) DESCENDS ([0, -1] —
     # unlike DuckDB's empty range), so a zero-length payload would grow
     # two phantom frames and silently diverge from the oracle's "no
@@ -642,8 +645,9 @@ def _afp_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed-aggregate barrier (the VAD/_shingles_df trick) — without it
     the 60-window fold inlines the O(L) byte transform into every
     window, O(60·L) per doc."""
-    n_part = spark.sparkContext.defaultParallelism
-    d = load(spark, sf_dir, "documents").repartition(n_part, "doc_id")
+    d = load(spark, sf_dir, "documents").repartition(
+        stage_tasks(spark, [table_path(sf_dir, "documents")]), "doc_id"
+    )
     pre = (
         d.select(
             "doc_id",

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from stateflow_spark.catalog import load
+from stateflow_spark.catalog import load, stage_tasks, table_path
 from stateflow_spark.functions.similarity import (
     dot_dec,
     norm2_dec,
@@ -47,18 +47,18 @@ def _corpus(
     cast is elementwise exact, matching the oracle's CAST(unnest(..) AS
     DOUBLE).
 
-    fan_out=True hash-repartitions on vec_id before a fold-heavy
-    projection: higher-order decimal folds run interpreted (not codegen),
-    and a small corpus arrives as one file → one partition → one core
-    (same rationale and shape as dedup_embedding_cosine's probe side). At
-    100 TB the scan already has thousands of splits and the explicit
-    exchange is redundant-but-harmless (one extra pass-through shuffle of
-    packed rows); the knob that matters there is maxPartitionBytes."""
+    fan_out=True hash-repartitions on vec_id (catalog.stage_tasks) before
+    a fold-heavy projection: higher-order decimal folds run interpreted,
+    and a small corpus arrives as one file → one partition → one core.
+    At 100 TB stage_tasks matches the scan's own split count, so the
+    exchange is one pass-through shuffle of packed rows."""
     e = load(spark, sf_dir, "embeddings")
     cols = ["vec_id", "label"] if with_label else ["vec_id"]
     df = e.select(*cols, F.col("embedding").cast("array<double>").alias("v"))
     if fan_out:
-        df = df.repartition(spark.sparkContext.defaultParallelism, "vec_id")
+        df = df.repartition(
+            stage_tasks(spark, [table_path(sf_dir, "embeddings")]), "vec_id"
+        )
     return df
 
 
@@ -132,12 +132,12 @@ def _corpus_n2(
     small-file layout would otherwise pack into one partition."""
     import os
 
-    base = _norms_dir(spark, sf_dir)
+    corpus = os.path.join(_norms_dir(spark, sf_dir), "corpus")
     cols = ["vec_id"] + (["label"] if with_label else []) + ["v", "n2"]
     return (
-        spark.read.parquet(os.path.join(base, "corpus"))
+        spark.read.parquet(corpus)
         .select(*cols)
-        .repartition(spark.sparkContext.defaultParallelism, "vec_id")
+        .repartition(stage_tasks(spark, [corpus]), "vec_id")
     )
 
 
@@ -2926,7 +2926,6 @@ def stream_ivf_delta_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = spark.readStream.schema(schema).parquet(src)
     out_dir = stream_scratch_out("ivf-delta-out-")
     ckpt = tempfile.mkdtemp(prefix="ivf-delta-ckpt-")
-    n_part = spark.sparkContext.defaultParallelism
 
     def classify_batch(batch_df: DataFrame, _batch_id: int) -> None:
         from stateflow_spark.storage import unpersist_local_checkpoint
@@ -2935,7 +2934,7 @@ def stream_ivf_delta_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
             batch_df.select(
                 "vec_id",
                 F.col("embedding").cast("array<double>").alias("v"),
-            ).repartition(n_part, "vec_id")
+            ).repartition(stage_tasks(spark), "vec_id")
         ).withColumnRenamed("n2", "dn2")
         ckpts: list[DataFrame] = []
         _ivf_classify_delta(

@@ -6,11 +6,13 @@ higher-order lambdas), no Python UDFs in the hot path.
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from stateflow_spark.catalog import load
+from stateflow_spark.catalog import load, stage_tasks, table_path
 from stateflow_spark.queries.common import register
 
 STOPWORDS = ("the", "a", "of", "and", "to")
@@ -295,8 +297,9 @@ def text_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     per doc, the exact trap SCALING.md documents for minhash. Behind the
     barrier each chunk row slices a materialized array. One explode, no
     joins, no aggregation: embarrassingly parallel at any scale."""
-    n_part = spark.sparkContext.defaultParallelism
-    d = load(spark, sf_dir, "documents").repartition(n_part, "doc_id")
+    d = load(spark, sf_dir, "documents").repartition(
+        stage_tasks(spark, [table_path(sf_dir, "documents")]), "doc_id"
+    )
     w = (
         d.select("doc_id", F.split("text", " ").alias("w"))
         .groupBy("doc_id")
@@ -502,17 +505,16 @@ def text_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the regression net for the rewrite.
 
     Two round-6 hardening fixes after sf10 profiling: (1) the corpus is
-    explicitly repartitioned to full width (REPARTITION_BY_NUM is exempt
-    from AQE coalescing — a compute-heavy but small-by-bytes corpus
-    otherwise lands on file-count cores: the 14-split sf10 scan ran this
+    repartitioned to stage_tasks width (the 14-split sf10 scan ran this
     projection 4x slower than the 64-split one); (2) each sorted gram
     array is referenced exactly ONCE (by its run-length scan) — the gram
     totals are computed arithmetically from the token count instead of
     size(g_n), because ProjectCollapse inlines the array expression into
     every consumer and size() was re-building + re-sorting all four gram
     arrays per row."""
-    n_part = spark.sparkContext.defaultParallelism
-    d = load(spark, sf_dir, "documents").repartition(n_part, "doc_id")
+    d = load(spark, sf_dir, "documents").repartition(
+        stage_tasks(spark, [table_path(sf_dir, "documents")]), "doc_id"
+    )
     t = d.select("doc_id", F.split("text", " ").alias("t"))
 
     def gram_sorted(n: int) -> str:
@@ -1221,12 +1223,10 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     wdf = F.broadcast(
         spark.createDataFrame([(_CLF_W,)], "__clf_w array<int>")
     )
-    # fan-out: the higher-order md5 fold runs interpreted, and a small
-    # corpus arrives as one file -> one partition -> one core (the
-    # similarity module's fan_out rationale). At 100 TB the scan already
-    # has thousands of splits and this exchange is a pass-through.
+    # fan-out: the higher-order md5 fold runs interpreted (the similarity
+    # module's fan_out rationale)
     fanned = d.repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
+        stage_tasks(spark, [table_path(sf_dir, "documents")]), "doc_id"
     )
     scored = fanned.select(
         "doc_id", "lang", F.split("text", " ").alias("toks")
@@ -1744,8 +1744,9 @@ def text_memorization_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-split the whole document 8× (measured sf0.1 4.5 → 18.2 s
     # WITHOUT the barrier; 2.9 s with it). The keyed-aggregate barrier
     # pins toks as a materialized attribute pushdown cannot substitute.
-    n_part = spark.sparkContext.defaultParallelism
-    d = load(spark, sf_dir, "documents").repartition(n_part, "doc_id")
+    d = load(spark, sf_dir, "documents").repartition(
+        stage_tasks(spark, [table_path(sf_dir, "documents")]), "doc_id"
+    )
     toks_once = (
         d.select("doc_id", F.split("text", " ").alias("toks"))
         .groupBy("doc_id")
@@ -1925,16 +1926,19 @@ def text_boilerplate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     rationale: generator-pushed filters would otherwise re-split the
     document per element reference), spans are direct-indexed grams
     (shared _gram_concat_expr kernel), and the only exchanges are (1)
-    the span-hash groupBy for the global document-frequency count, (2)
-    the span->flagged-span join (AQE-sized; the flagged set is the
-    HAVING survivors, orders of magnitude smaller than the span
-    stream), and (3) the per-doc occurrence fold — all keyed by
-    32-byte hashes or doc_id, never by token text. Coverage expansion,
-    token filtering, and reassembly run in-array per document (flatten/
-    filter/transform HOFs over the barrier-pinned attribute), so the
-    corpus-sized final pass is one codegen'd projection with zero
+    the span groupBy for the global document-frequency count, (2) the
+    span->flagged-span join (AQE-sized; the flagged set is the HAVING
+    survivors, orders of magnitude smaller than the span stream), both
+    keyed by the raw 3-word gram (the stored delta legs key on its md5),
+    and (3) the per-doc occurrence fold keyed by doc_id. Coverage
+    expansion, token filtering, and reassembly run in-array per document
+    (flatten/filter/transform HOFs over the barrier-pinned attribute), so
+    the corpus-sized final pass is one codegen'd projection with zero
     additional shuffle bytes."""
-    base = _boiler_base(spark, load(spark, sf_dir, "documents"))
+    base = _boiler_base(
+        spark, load(spark, sf_dir, "documents"),
+        [table_path(sf_dir, "documents")],
+    )
     # RAW gram keys (r13 session 2): md5 is only an internal proxy key in
     # this batch row (the output never carries it, and gram equality ==
     # md5 equality), so grouping/probing on the gram string drops two md5
@@ -1961,9 +1965,12 @@ def text_boilerplate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _boiler_assemble(base, occ2)
 
 
-def _boiler_base(spark: SparkSession, docs: DataFrame) -> DataFrame:
+def _boiler_base(
+    spark: SparkSession, docs: DataFrame, sources: Iterable[str] = ()
+) -> DataFrame:
     """Barrier-pinned per-document word arrays (doc_id, w) — the shared
-    front of every boilerplate-span consumer.
+    front of every boilerplate-span consumer; `sources` are the parquet
+    paths `docs` reads (for stage_tasks).
 
     The explicit isnotnull mirrors the filter the outer join would
     infer on one branch only: with it on ALL branches the consumers of
@@ -1976,11 +1983,10 @@ def _boiler_base(spark: SparkSession, docs: DataFrame) -> DataFrame:
     keyed-aggregate barrier is _shingles_df's rationale: without it,
     generator-pushed filters re-split the document per element
     reference."""
-    n_part = spark.sparkContext.defaultParallelism
     d = (
         docs.filter(
             F.col("doc_id").isNotNull() & F.col("text").isNotNull()
-        ).repartition(n_part, "doc_id")
+        ).repartition(stage_tasks(spark, sources), "doc_id")
     )
     return (
         d.select("doc_id", F.split("text", " ").alias("w"))
@@ -2096,7 +2102,9 @@ def _span_count_table(spark: SparkSession, sf_dir: str) -> str:
     tmp_tbl = f"{tbl}_building_{token}"
     old = load(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 != 0)
     counts = (
-        _boiler_spans(_boiler_base(spark, old))
+        _boiler_spans(
+            _boiler_base(spark, old, [table_path(sf_dir, "documents")])
+        )
         .groupBy("skey")
         .agg(F.countDistinct("doc_id").alias("ndocs"))
     )

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from stateflow_spark.catalog import load
+from stateflow_spark.catalog import load, stage_tasks, table_path
 from stateflow_spark.queries.common import dec, register
 
 
@@ -236,20 +236,16 @@ def window_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     (~price_range/16384 rows) and every corpus-wide step is an ordinary
     shuffle-once aggregate/window."""
     o = load(spark, sf_dir, "orders")
-    # EXPLICIT keyed repartition before the cb window/aggregates (r13
-    # session 2, guide §2.5): the byte-small cb exchange was
-    # AQE-coalesced to 2 tasks carrying the rank window + bucket
-    # arithmetic + final aggregate (sweep: 0.54 s cpu / 2 tasks at
-    # sf0.1). The pin is reused by the groupBy and the wloc window
-    # (same key). Parallelism is capped by the ~price_range/16384
-    # distinct cb values in ANY plan (window partitions are atomic);
-    # the pin only stops the local collapse below that cap. Idle-box
-    # interleaved A/Bs: 6/7 then 7/7 pairs ahead, means 0.86–0.87.
+    # pinned keyed repartition before the cb window/aggregates (r13
+    # session 2): AQE coalesced the byte-small cb exchange to 2 tasks
+    # (0.54 s cpu at sf0.1). The pin is reused by the groupBy and the
+    # wloc window; the ~price_range/16384 distinct cb values cap
+    # parallelism in ANY plan. A/B means 0.86–0.87.
     t = o.select(
         "o_totalprice",
         "o_orderkey",
         F.expr("CAST(o_totalprice AS BIGINT) div 16384").alias("cb"),
-    ).repartition(spark.sparkContext.defaultParallelism, "cb")
+    ).repartition(stage_tasks(spark, [table_path(sf_dir, "orders")]), "cb")
     csz = t.groupBy("cb").agg(F.count(F.lit(1)).alias("n"))
     woff = Window.orderBy("cb").rowsBetween(Window.unboundedPreceding, -1)
     boff = csz.select(

@@ -194,7 +194,7 @@ class KafkaEntityEngine:
             decode_events(src)
             .groupBy("entity", "key")
             .applyInPandasWithState(
-                _make_stateful_fn(blob, None, None, dead_letter=True),
+                _make_stateful_fn(blob, None, None),
                 OUT_STRUCT,
                 STATE_STRUCT,
                 "append",

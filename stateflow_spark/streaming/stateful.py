@@ -118,7 +118,6 @@ def _make_stateful_fn(
     registry_blob: bytes,
     ttl_ms: Optional[int],
     cold_dir: Optional[str],
-    dead_letter: bool = False,
 ):
     """The applyInPandasWithState function: TTL eviction, cold reload and
     the GroupState update around the per-key event core (entity/keyed.py,
@@ -164,7 +163,6 @@ def _make_stateful_fn(
             current,
             ((s, b) for pdf in pdfs for s, b in zip(pdf["seq"], pdf["blob"])),
             PickleSerde(),
-            dead_letter,
         )
         if (committed or reheated) and current is not None:
             state.update((pickle.dumps(current),))
@@ -173,6 +171,16 @@ def _make_stateful_fn(
         yield pd.DataFrame(rows, columns=OUT_COLUMNS)
 
     return fn
+
+
+def state_partitions(n_keys: int) -> int:
+    """State-store partitions for an engine serving ``n_keys`` entities
+    (StreamingEntityEngine's ``shuffle_partitions``): 8 for the 100-key
+    reference workload, since each partition costs one stateful task +
+    state commit per batch (32 would pay 4× that for no parallelism),
+    widening with the key set up to 32 — fixed at 8, the per-key Python
+    operator starves at sf1+ (measured 7.6×/decade)."""
+    return min(32, max(8, n_keys // 100))
 
 
 class StreamingEntityEngine:
@@ -185,7 +193,6 @@ class StreamingEntityEngine:
         workdir: str,
         state_ttl_ms: Optional[int] = None,
         shuffle_partitions: Optional[int] = None,
-        dead_letter: bool = True,
     ):
         """state_ttl_ms: optional hot/cold state tiering. Keys idle longer
         than the TTL are evicted from the state store into a cold parquet
@@ -199,17 +206,17 @@ class StreamingEntityEngine:
         (fixed at the first batch by the checkpoint). Set it to match the
         deployment: per-batch cost includes one stateful task + state
         commit per partition, so a low-key-cardinality engine should not
-        inherit a session-wide analytics setting. Applied to a cloned
-        session so the caller's session conf is untouched.
+        inherit a session-wide analytics setting; the deployment rule,
+        ``state_partitions(n_keys)``, is ``min(32, max(8, n_keys // 100))``.
+        Applied to a cloned session so the caller's session conf is
+        untouched.
 
-        dead_letter (default True): poison-event quarantine. An
-        undecodable event blob or a handler exception that escapes
-        operator.handle is routed to the ``dead_letter/`` parquet sink
-        (error message + original event bytes) instead of killing the
-        continuous query; decoded events additionally get an ERROR reply
-        so waiting clients unblock. Healthy keys in the same batch are
-        unaffected. Set False for fail-fast semantics (the pre-round-9
-        behavior: the stream dies and drain() rethrows the cause)."""
+        Poison events are always quarantined: an undecodable event blob
+        or a handler exception that escapes operator.handle is routed to
+        the ``dead_letter/`` parquet sink (error message + original event
+        bytes) instead of killing the continuous query; decoded events
+        additionally get an ERROR reply so waiting clients unblock.
+        Healthy keys in the same batch are unaffected."""
         if shuffle_partitions is not None:
             spark = spark.newSession()
             spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -222,15 +229,12 @@ class StreamingEntityEngine:
         self.cold_dir = (
             os.path.join(workdir, "cold_state") if state_ttl_ms else None
         )
-        self.dead_dir = (
-            os.path.join(workdir, "dead_letter") if dead_letter else None
-        )
+        self.dead_dir = os.path.join(workdir, "dead_letter")
         os.makedirs(self.in_dir, exist_ok=True)
         os.makedirs(self.replies_dir, exist_ok=True)
         if self.cold_dir:
             os.makedirs(self.cold_dir, exist_ok=True)
-        if self.dead_dir:
-            os.makedirs(self.dead_dir, exist_ok=True)
+        os.makedirs(self.dead_dir, exist_ok=True)
         self.query = None
         # client-side bookkeeping (send / reply tracking)
         self._sent_ids: set[str] = set()
@@ -308,8 +312,6 @@ class StreamingEntityEngine:
         import pyarrow.parquet as pq
 
         out: list[dict] = []
-        if self.dead_dir is None:
-            return out
         for name in sorted(os.listdir(self.dead_dir)):
             if not name.endswith(".parquet"):
                 continue
@@ -331,12 +333,7 @@ class StreamingEntityEngine:
             .parquet(self.in_dir)
             .groupBy("entity", "key")
             .applyInPandasWithState(
-                _make_stateful_fn(
-                    blob,
-                    self.state_ttl_ms,
-                    self.cold_dir,
-                    dead_letter=self.dead_dir is not None,
-                ),
+                _make_stateful_fn(blob, self.state_ttl_ms, self.cold_dir),
                 OUT_STRUCT,
                 STATE_STRUCT,
                 "append",
@@ -384,11 +381,11 @@ class StreamingEntityEngine:
         # one task (measured 4× slower); tasks with no rows write no files,
         # so file count stays bounded by actual output
         batch_df.write.mode("overwrite").partitionBy("kind").parquet(staging)
-        dests = {"reply": self.replies_dir, "hop": self.in_dir}
+        dests = {
+            "reply": self.replies_dir, "hop": self.in_dir, "dead": self.dead_dir
+        }
         if self.cold_dir is not None:
             dests["evict"] = self.cold_dir
-        if self.dead_dir is not None:
-            dests["dead"] = self.dead_dir
         for kind, dest in dests.items():
             part_dir = os.path.join(staging, f"kind={kind}")
             if not os.path.isdir(part_dir):

@@ -75,7 +75,6 @@ def _make_step_fn(registry_blob: bytes, serde):
             state,
             zip(events_pdf["seq"], events_pdf["blob"]),
             serde,
-            dead_letter=True,
         )
         if state is not None:
             out.append(("state", entity_name, key, 0, pickle.dumps(state)))

@@ -239,12 +239,7 @@ def run_streaming(spark, mix: str, n_tasks: int = N_TASKS,
     Kafka-driven deployment.
 
     shuffle_partitions defaults to the deployment sizing rule
-    min(32, max(8, keys//100)) — 8 state-store partitions for the
-    100-key reference workload (per-batch fixed cost is one stateful
-    task + state commit per partition, so 32 analytics-sized partitions
-    would pay 4× the per-batch overhead for zero extra parallelism
-    there), widening with key cardinality up to the local[32] core
-    count. Pass an explicit value to override.
+    ``state_partitions(n_entities)``; pass a value to override.
 
     pacing=N sends the op batch as ceil(n_tasks/N)-sized back-to-back
     bursts — send burst, wait for its replies, send the next — instead
@@ -257,10 +252,11 @@ def run_streaming(spark, mix: str, n_tasks: int = N_TASKS,
     import tempfile
 
     from stateflow_spark.entity import operator
-    from stateflow_spark.streaming.stateful import StreamingEntityEngine
+    from stateflow_spark.streaming.stateful import (
+        StreamingEntityEngine, state_partitions)
 
     if shuffle_partitions is None:
-        shuffle_partitions = min(32, max(8, n_entities // 100))
+        shuffle_partitions = state_partitions(n_entities)
     eng = StreamingEntityEngine(
         spark,
         workdir or tempfile.mkdtemp(prefix="ycsb_stream_"),

@@ -58,12 +58,20 @@ _KIND = {
 def test_query_matches_oracle(spark, duck, name):
     qd = REGISTRY[name]
     sdf = qd.fn(spark, SF_DIR)
-    drows = duck.execute(qd.oracle).fetchall()
-    # Driver converts DuckDB results via pandas/Arrow before hashing, where
-    # HUGEINT (e.g. SUM over INTEGER) degrades to float64 and hash-mismatches
-    # Spark's bigint even when values are identical (round-1 q12). Pin the
-    # pandas dtype *kind* of each numeric column to match Spark's type.
-    ddf = duck.execute(qd.oracle).df()
+    # the oracle runs ONCE: materialized into a temp table that both the
+    # row fetch and the pandas dtype check read
+    duck.execute(f"CREATE OR REPLACE TEMP TABLE oracle_out AS {qd.oracle}")
+    try:
+        drows = duck.execute("SELECT * FROM oracle_out").fetchall()
+        duck_cols = [d[0] for d in duck.description]
+        # Driver converts DuckDB results via pandas/Arrow before hashing,
+        # where HUGEINT (e.g. SUM over INTEGER) degrades to float64 and
+        # hash-mismatches Spark's bigint even when values are identical
+        # (round-1 q12). Pin the pandas dtype *kind* of each numeric column
+        # to match Spark's type.
+        ddf = duck.execute("SELECT * FROM oracle_out").df()
+    finally:
+        duck.execute("DROP TABLE IF EXISTS oracle_out")
     spark_kinds = {
         f.name: ("int" if f.dataType.typeName() in
                  ("byte", "short", "integer", "long", "boolean") else
@@ -81,7 +89,6 @@ def test_query_matches_oracle(spark, duck, name):
             )
     # schema sanity: same column count; driver also sorts columns by name,
     # so names must match too
-    duck_cols = [d[0] for d in duck.description]
     assert sorted(sdf.columns) == sorted(duck_cols), (
         f"{name}: column names spark={sorted(sdf.columns)} "
         f"duck={sorted(duck_cols)}"

@@ -155,34 +155,22 @@ def test_streaming_engine_state_ttl_tiering(spark, tmp_path):
         eng.stop()
 
 
-def _send_poison(eng):
-    """Write an unparseable event blob straight into the source dir — the
-    stateful fn's Event.from_bytes raises on it, killing the query."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    tbl = pa.table(
-        {
-            "entity": pa.array(["User"], pa.string()),
-            "key": pa.array(["poison-u1"], pa.string()),
-            "seq": pa.array([1], pa.int64()),
-            "blob": pa.array([b"garbage-not-an-event"], pa.binary()),
-        }
-    )
-    pq.write_table(tbl, os.path.join(eng.in_dir, "poison.parquet"))
+def _send_corrupt_file(eng):
+    """Write a non-parquet file straight into the source dir: the file
+    source fails to read it, outside the per-key event core (which
+    quarantines poison blobs), so the query dies."""
+    with open(os.path.join(eng.in_dir, "corrupt.parquet"), "wb") as f:
+        f.write(b"not-a-parquet-file")
     eng._sent_ids.add("poison-event-id")  # a reply that can never arrive
 
 
 def test_streaming_engine_poison_no_ttl(spark, tmp_path):
-    """Fail-fast mode (dead_letter=False): a poisoned event must surface
-    as a raised error from drain(), not a hang: processAllAvailable
-    rethrows the stream death cause."""
+    """A dead query must surface as a raised error from drain(), not a
+    hang: processAllAvailable rethrows the stream death cause."""
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    eng = StreamingEntityEngine(
-        spark, str(tmp_path / "poison_engine"), dead_letter=False
-    )
-    _send_poison(eng)
+    eng = StreamingEntityEngine(spark, str(tmp_path / "poison_engine"))
+    _send_corrupt_file(eng)
     eng.start()
     try:
         with pytest.raises(StreamingQueryException):
@@ -203,9 +191,8 @@ def test_streaming_engine_poison_with_ttl(spark, tmp_path):
         spark,
         str(tmp_path / "poison_ttl_engine"),
         state_ttl_ms=60_000,
-        dead_letter=False,
     )
-    _send_poison(eng)
+    _send_corrupt_file(eng)
     eng.start()
     try:
         t0 = time.monotonic()
@@ -346,7 +333,7 @@ def test_dlq_tripwire_detects_inplace_mutation_without_put(monkeypatch):
 
     monkeypatch.setattr(op_mod, "handle", bad_handle)
     fn = _make_stateful_fn(
-        serialize_registry(), ttl_ms=None, cold_dir=None, dead_letter=True
+        serialize_registry(), ttl_ms=None, cold_dir=None
     )
     evs = [
         Event(str(uuid.uuid4()), "User", "u1", EventType.GET_STATE,
@@ -820,7 +807,7 @@ def test_dlq_tripwire_fires_at_rollback_time(monkeypatch):
 
     monkeypatch.setattr(op_mod, "handle", bad_handle)
     fn = _make_stateful_fn(
-        serialize_registry(), ttl_ms=None, cold_dir=None, dead_letter=True
+        serialize_registry(), ttl_ms=None, cold_dir=None
     )
     evs = [
         Event(str(uuid.uuid4()), "User", "u1", EventType.GET_STATE,
