@@ -127,7 +127,8 @@ def install_worker_registry(registry_blob: bytes) -> None:
     """Worker-side registry install for the streaming/superstep engines.
 
     Idempotent per blob OBJECT: within one run the engine closure holds a
-    single blob, so repeated per-group calls skip the unpickle entirely;
+    single blob, so repeated calls (once per partition in the superstep,
+    per key group in the continuous engine) skip the unpickle entirely;
     a DIFFERENT blob (a reused worker serving a new run — possibly with
     the same entity names bound to different classes) re-installs and
     clears the interpreter's per-entity-name caches, which entity()/

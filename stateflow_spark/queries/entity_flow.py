@@ -81,7 +81,7 @@ def entity_flow_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stateflow_spark.streaming.superstep import SuperstepRuntime
 
     _golden_classes()
-    rt = SuperstepRuntime(spark, shuffle_partitions=4)
+    rt = SuperstepRuntime(spark)
 
     init_u = operator.make_init_event("GoldenUser", ("flow-u1",))
     init_i = operator.make_init_event("GoldenItem", ("flow-i1", 5))

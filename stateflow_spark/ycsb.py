@@ -21,7 +21,8 @@ reference cites; implemented from the paper, seeded for determinism.
 Two runtimes are driven:
 - LocalRuntime       — per-op latency (the client-side view)
 - SuperstepRuntime   — distributed throughput: the full op batch executes
-                       as cogrouped Spark jobs; per-key serial application
+                       as key-sorted mapInArrow Spark jobs (one Arrow pass
+                       per partition); per-key serial application
                        preserves YCSB's read-modify-write consistency, and
                        Zipf-hot keys exercise exactly the skew a 1000-
                        executor deployment would see (one straggling group
@@ -180,17 +181,16 @@ def _nearest_rank(sorted_vals, q: float) -> int:
 
 
 def run_superstep(spark, mix: str, n_tasks: int = N_TASKS,
-                  n_entities: int = N_ENTITIES,
-                  shuffle_partitions: int = 8) -> dict:
+                  n_entities: int = N_ENTITIES) -> dict:
     """Distributed throughput view: the whole op batch in one superstep run
     (reads/updates finish in superstep 1; transfers hop once per cross-key
-    call, so T converges in a handful of supersteps). 8 cogroup partitions
-    match the 100-key workload — per-superstep fixed cost is one task per
-    partition."""
+    call, so T converges in a handful of supersteps). Each superstep is one
+    sort-grouped mapInArrow pass over ``catalog.stage_tasks`` partitions —
+    its fixed cost is one task per partition, not one frame per key."""
     from stateflow_spark.entity import operator
     from stateflow_spark.streaming.superstep import SuperstepRuntime
 
-    rt = SuperstepRuntime(spark, shuffle_partitions=shuffle_partitions)
+    rt = SuperstepRuntime(spark)
     creates = [
         operator.make_init_event("YCSBEntity", (f"entity-{i}", STARTING_AMOUNT))
         for i in range(n_entities)

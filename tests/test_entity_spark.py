@@ -6,7 +6,9 @@ from __future__ import annotations
 
 import pytest
 
-from stateflow_spark.entity import operator
+from stateflow_spark.entity import LocalRuntime, entity, operator
+from stateflow_spark.entity.local import run_to_reply
+from stateflow_spark.entity.model import EntityRef
 from stateflow_spark.streaming.superstep import SuperstepRuntime
 
 # reuse the registered fixture classes
@@ -277,3 +279,186 @@ def test_superstep_stored_ref_flow(spark):
     state = res.collect_state()
     assert state[("B", "ss-wb1")]["balance"] == 70
     assert state[("Wallet", "ss-w1")]["spent"] == 30
+
+
+@entity
+class Tape:
+    def __init__(self, name: str):
+        self.name = name
+        self.marks = []
+
+    def mark(self, x: int) -> int:
+        self.marks = self.marks + [x]
+        return len(self.marks)
+
+    def __key__(self):
+        return self.name
+
+
+def _local_replay(events):
+    """Replies and final state of the same events, in seq order, on the
+    in-process runtime."""
+    rt = LocalRuntime()
+    replies = {
+        ev.event_id: operator.reply_value(run_to_reply(ev, rt.store))
+        for ev in sorted(events, key=lambda e: e.seq)
+    }
+    return replies, rt.store.data
+
+
+def test_superstep_groups_keys_across_arrow_batches(spark):
+    """With 3 records per Arrow batch, one key's 30 events and its state
+    row straddle many batches, and a transfer mix spreads hops over
+    several keys per batch. The step must group per key, not per batch:
+    state and replies equal LocalRuntime's, and every mark is applied
+    once, in seq order."""
+    from stateflow_spark import ycsb
+
+    split = spark.newSession()
+    split.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "3")
+    rt = SuperstepRuntime(split)
+
+    tape = operator.make_init_event("Tape", ("split-tape",))
+    accounts = [
+        operator.make_init_event("YCSBEntity", (f"split-y{i}", ycsb.STARTING_AMOUNT))
+        for i in range(8)
+    ]
+    seeded = rt.run([tape, *accounts])
+    tref = seeded.result_of(tape)
+    refs = [seeded.result_of(a) for a in accounts]
+
+    marks = [operator.make_invoke_event(tref, "mark", (i,)) for i in range(30)]
+    transfers = [
+        operator.make_invoke_event(
+            refs[i % 8], "transfer", (1 + i % 3, refs[(i + 1 + i // 8) % 8])
+        )
+        for i in range(40)
+    ]
+    batch = marks + transfers
+    res = rt.run(batch, state_df=seeded.state_df)
+
+    want_replies, want_state = _local_replay([tape, *accounts, *batch])
+    assert {ev.event_id: res.result_of(ev) for ev in batch} == {
+        ev.event_id: want_replies[ev.event_id] for ev in batch
+    }
+    assert res.collect_state() == want_state
+    assert res.collect_state()[("Tape", "split-tape")]["marks"] == list(range(30))
+    assert res.dead_letters == []
+
+
+def test_superstep_passes_untouched_state_through(spark):
+    """Keys whose events commit no put() — none at all, or reads only —
+    keep their state blob byte for byte (planted here with an old pickle
+    protocol, which a re-pickle would change); a key that put() is
+    re-encoded. A reads-only batch of one superstep costs at most 4
+    Spark jobs: the hop count rides the reply collect, no count job."""
+    import pickle
+    import uuid
+
+    from stateflow_spark.entity.model import Event, EventType
+    from stateflow_spark.streaming.superstep import STATE_SCHEMA
+
+    keys = [f"pass-b{i}" for i in range(6)]
+    inits = [operator.make_init_event("B", (k,)) for k in keys]
+    rt = SuperstepRuntime(spark)
+    seeded = rt.run(inits).collect_state()
+    planted = {k: pickle.dumps(seeded[("B", k)], protocol=2) for k in keys}
+    state_df = spark.createDataFrame(
+        [("B", k, blob) for k, blob in planted.items()], STATE_SCHEMA
+    )
+
+    def read(key):
+        return Event(
+            str(uuid.uuid4()), "B", key, EventType.GET_STATE, {"attr": "balance"}
+        )
+
+    res = rt.run(
+        [
+            operator.make_invoke_event(EntityRef("B", keys[0]), "add_balance", (7,)),
+            read(keys[1]),
+        ],
+        state_df=state_df,
+    )
+    blobs = {r.key: bytes(r.blob) for r in res.state_df.collect()}
+    assert blobs.keys() == planted.keys()
+    assert blobs[keys[0]] != planted[keys[0]]
+    assert pickle.loads(blobs[keys[0]])["balance"] == 7
+    for k in keys[1:]:
+        assert blobs[k] == planted[k], k
+
+    sc = spark.sparkContext
+    group = f"superstep-reads-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "reads-only superstep batch")
+    try:
+        reads = rt.run([read(k) for k in keys], state_df=state_df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert reads.supersteps == 1
+    assert len(reads.replies) == len(keys)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 4, jobs
+
+
+def test_superstep_empty_events(spark):
+    """An empty batch runs no superstep and hands the state back as is."""
+    rt = SuperstepRuntime(spark)
+    empty = rt.run([])
+    assert (empty.supersteps, empty.replies, empty.dead_letters) == (0, {}, [])
+    assert empty.collect_state() == {}
+
+    init = operator.make_init_event("B", ("empty-b",))
+    seeded = rt.run([init])
+    res = rt.run([], state_df=seeded.state_df)
+    assert (res.supersteps, res.replies, res.dead_letters) == (0, {}, [])
+    assert res.collect_state() == seeded.collect_state()
+
+
+def test_superstep_quarantines_poison_hop(spark):
+    """An undecodable blob among the hop rows (a flow event re-addressed
+    to another key) lands in RunResult.dead_letters with its bytes; the
+    target key's state is untouched and a healthy flow in the same batch
+    completes."""
+    from stateflow_spark.entity.model import EventType
+    from stateflow_spark.serde import PickleSerde
+
+    poison = b"\x00poisoned hop"
+
+    class PoisonHopSerde(PickleSerde):
+        def to_bytes(self, event):
+            if event.event_type == EventType.FLOW and event.key == "phop-i1":
+                return poison
+            return super().to_bytes(event)
+
+    rt = SuperstepRuntime(spark, serde=PoisonHopSerde())
+    inits = [
+        operator.make_init_event("User", ("phop-u1",)),
+        operator.make_init_event("User", ("phop-u2",)),
+        operator.make_init_event("Item", ("phop-i1", 5)),
+        operator.make_init_event("Item", ("phop-i2", 5)),
+    ]
+    res = rt.run(inits)
+    u1, u2, i1, i2 = (res.result_of(e) for e in inits)
+    res = rt.run(
+        [
+            operator.make_invoke_event(u1, "update_balance", (20,)),
+            operator.make_invoke_event(u2, "update_balance", (20,)),
+            operator.make_invoke_event(i1, "update_stock", (4,)),
+            operator.make_invoke_event(i2, "update_stock", (4,)),
+        ],
+        state_df=res.state_df,
+    )
+    bad = operator.make_invoke_event(u1, "buy_item", (3, i1))
+    good = operator.make_invoke_event(u2, "buy_item", (3, i2))
+    res = rt.run([bad, good], state_df=res.state_df)
+
+    assert res.result_of(good) is True
+    assert bad.event_id not in res.replies
+    assert len(res.dead_letters) == 1
+    dl = res.dead_letters[0]
+    assert (dl["entity"], dl["key"], dl["event_blob"]) == ("Item", "phop-i1", poison)
+    state = res.collect_state()
+    assert state[("Item", "phop-i1")]["stock"] == 4
+    assert state[("User", "phop-u1")]["balance"] == 20
+    assert state[("Item", "phop-i2")]["stock"] == 1
+    assert state[("User", "phop-u2")]["balance"] == 5
