@@ -3,17 +3,14 @@ named query (Spark DataFrame builder) and a DuckDB oracle string (the driver
 FAILS oracle-less rows, so every registration carries one). The driver runs
 both sides at sf0.01 and hash-compares.
 
-Import side effects populate ``REGISTRY``.
+Import side effects populate ``REGISTRY`` in import order; ``smoke_names``
+derives the quick correctness subset from names and tags alone.
 """
 
 from __future__ import annotations
 
 from stateflow_spark.queries.common import REGISTRY, QueryDef, register  # noqa: F401
 
-# Each module registers its queries on import; the driver-checked 50-query
-# prefix is pinned EXPLICITLY below (imports only group families). Local
-# tests/test_oracle.py checks ALL oracled queries every run regardless —
-# that is the regression net for rotated-out families (round-2 ADVICE).
 from stateflow_spark.queries import similarity  # noqa: F401, E402
 from stateflow_spark.queries import streaming_late  # noqa: F401, E402
 from stateflow_spark.queries import entity_stream  # noqa: F401, E402
@@ -32,126 +29,13 @@ from stateflow_spark.queries import entity_ops  # noqa: F401, E402
 from stateflow_spark.queries import entity_flow  # noqa: F401, E402
 from stateflow_spark.queries import sources_robustness  # noqa: F401, E402
 
-# Round-13 prefix (the driver stamps the first ~50 registered queries).
-# Composition rule (round-6 VERDICT "Next round" #1 + #8), ENFORCED by
-# tests/test_driver_contract.py::test_prefix_is_stalest_first against the
-# CORRECTNESS_r*.json stamp history:
-#   (a) every query with NO driver stamp ever — none this round (r13 is
-#       an optimization round; no rows were added);
-#   (b) every query whose results, plan, or oracle text changed this
-#       round (CHANGED_THIS_ROUND below) = 7: all plan-only
-#       optimizations with results verified identical — re-stamp anyway;
-#   (c) the remaining 43 slots fill with the STALEST stamps — all 28
-#       remaining r08-tier rows (deferred from the r12 rotation), then
-#       15 of the r09-tier rows (alphabetical; the rest rotate to
-#       round 14; tier-splitting is allowed: nothing OUTSIDE the prefix
-#       is strictly staler than any fill row).
-# Stamp-age invariant: the prefix is exactly never-stamped ∪ changed ∪
-# oldest-tier fill — no query outside the prefix is staler than any fill
-# row, so rotation cannot silently skip a family. Everything rotated out
-# stays covered by tests/test_oracle.py in full mode (`-m ''`, the local
-# net; the default run keeps this prefix as the always-on smoke net).
-# The round this prefix was pinned FOR: the stalest-first invariant is
-# checked against CORRECTNESS history from rounds BEFORE this one (the
-# history that existed at pin time) — otherwise the driver's own r13
-# stamps would instantly make the pinned prefix look "stale" and fail
-# the suite mid-round. The round-14 builder bumps this when re-pinning.
-PREFIX_PINNED_FOR_ROUND = 13
 
-CHANGED_THIS_ROUND = [
-    # r13 (optimization round — results identical everywhere, re-stamped
-    # because the PLAN changed):
-    # seed-cell tables from direct seed-row trees (linear logical plan)
-    "dedup_semantic_scaled",
-    # flagged worklist applied as literal filters (static pruning)
-    "sim_ivf_index_resplit",
-    # footer-conditional signature fan-out (both phash rows share it)
-    "multimodal_phash",
-    # + pinned bucket-stage task count
-    "multimodal_phash_neardup",
-    # banded argmax: decimal rescore only on band survivors
-    "sim_ivf_widened_classify",
-    # vestigial per-doc hash sort dropped
-    "dedup_minhash_lsh",
-    # pinned bucket-stage task count (the phash idiom, measured 0.59x)
-    "dedup_simhash_pairs",
-    # r13 session 2 (sweep-driven pins/fan-outs; results identical,
-    # plans changed — re-stamp):
-    # pinned basket stage (0.63x; was an r08 fill row below — moved here)
-    "join_market_basket_pairs",
-    # pinned basket stage (shares the idiom)
-    "join_association_rules",
-    # pinned pair stage (0.70x on the scaled row; demo row shares it;
-    # dedup_semantic was an r09 fill row below — moved here)
-    "dedup_semantic",
-    # footer-conditional fan-out (0.46x)
-    "text_pii_scrub",
-    # footer-conditional fan-out (all pairwise sweeps ahead)
-    "text_ngram_lm_score",
-    # pinned cb stage (idle-box A/Bs 6/7 then 7/7 pairs ahead, ~0.86)
-    "window_equidepth_histogram",
-    # raw gram keys in the batch row (idle-box A/Bs 0.93-0.94 means)
-    "text_boilerplate_spans",
-]
-_R13_PREFIX = [
-    # (a) never driver-stamped: none (no new rows this round)
-    # (b) changed this round (plans only; results identical)
-    *CHANGED_THIS_ROUND,
-    # (c) stalest-stamp fill: all 28 remaining r08-tier rows...
-    "events_funnel",
-    "events_hourly_tumbling",
-    "events_json_payload",
-    "events_session_windows",
-    "events_sliding_window",
-    "events_topk_users",
-    "events_type_pivot",
-    "join_asof_click_view",
-    "join_full_outer_part_sales",
-    "multimodal_audio_vad_segments",
-    "multimodal_decode_features",
-    "multimodal_frame_sample",
-    "scalar_function_zoo",
-    "setops_except_all",
-    "setops_intersect_all",
-    "setops_union_all_counts",
-    "stream_hourly_tumbling",
-    "stream_session_windows",
-    "stream_sliding_window",
-    "stream_stream_join",
-    "text_bpe_token_count",
-    "text_fingerprint",
-    "text_lang_id",
-    "text_length_histogram",
-    "text_memorization_audit",
-    "window_distribution_functions",
-    "window_range_frame",
-    # ...then 15 of the r09 tier (alphabetical; rest rotate to r14)
-    "agg_salted_two_phase",
-    "curation_balance_mixture",
-    "curation_benchmark_contamination",
-    "curation_conversation_assembly",
-    "curation_epoch_upsample",
-    "curation_pack_sequences",
-    "curation_stratified_sample",
-    "dedup_embedding_cosine",
-    "dedup_exact",
-    # (q10_returned_items rotated to r14: the 7th changed row above took
-    # its slot; it stays the alphabetically-last of the r09 tier.
-    # Session 2: join_market_basket_pairs and dedup_semantic moved from
-    # the fill tiers into CHANGED_THIS_ROUND, and the three new changed
-    # rows displaced the alphabetically-last remaining r09 fills —
-    # dedup_normalized, multimodal_audio_fingerprint,
-    # multimodal_audio_fingerprint_neardup rotate to r14, and the
-    # late-landed window_equidepth_histogram and text_boilerplate_spans
-    # changes displaced dedup_ngram_jaccard and
-    # dedup_jaccard_stop_shingle the same way.)
-]
-
-assert len(_R13_PREFIX) == 50, len(_R13_PREFIX)
-assert len(set(_R13_PREFIX)) == 50
-assert set(_R13_PREFIX) <= set(REGISTRY), set(_R13_PREFIX) - set(REGISTRY)
-_order = _R13_PREFIX + [n for n in REGISTRY if n not in set(_R13_PREFIX)]
-assert set(_order) == set(REGISTRY) and len(_order) == len(REGISTRY)
-_by_name = dict(REGISTRY)
-REGISTRY.clear()
-REGISTRY.update({n: _by_name[n] for n in _order})
+def smoke_names() -> set[str]:
+    """The smoke set: every ``bench``-tagged query plus the alphabetically
+    first query of each family (a query's first tag). It depends only on
+    names and tags, never on registration order."""
+    first: dict[str, str] = {}
+    for name in sorted(REGISTRY):
+        first.setdefault(REGISTRY[name].family, name)
+    bench = {n for n, q in REGISTRY.items() if "bench" in q.tags}
+    return bench | set(first.values())

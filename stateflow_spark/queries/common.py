@@ -53,12 +53,20 @@ class QueryDef:
     tags: tuple[str, ...] = field(default_factory=tuple)
     doc: str = ""
 
+    @property
+    def family(self) -> str:
+        """The query's family: its first tag (``register`` requires one)."""
+        return self.tags[0]
+
 
 REGISTRY: dict[str, QueryDef] = {}
 
 
 def register(name: str, oracle: Optional[str] = None, tags: tuple[str, ...] = ()):
-    """Decorator: add a (spark, sf_dir) -> DataFrame builder to the registry."""
+    """Decorator: add a (spark, sf_dir) -> DataFrame builder to the registry.
+    The first tag names the query's family, so at least one is required."""
+    if not tags:
+        raise ValueError(f"query {name!r} registered without a family tag")
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         REGISTRY[name] = QueryDef(

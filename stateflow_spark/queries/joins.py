@@ -397,7 +397,7 @@ def _ri_oracle() -> str:
 @register(
     "profile_referential_integrity",
     oracle=_ri_oracle(),
-    tags=("joins", "profiling", "integrity"),
+    tags=("join", "profiling", "integrity"),
 )
 def profile_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Referential-integrity audit across every FK edge of the schema —
@@ -481,7 +481,7 @@ def profile_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame
             ORDER BY d.eff_from DESC, d.vkey DESC LIMIT 1) AS attr_at_time
     FROM fact f
     """,
-    tags=("joins", "scd2", "point-in-time"),
+    tags=("join", "scd2", "point-in-time"),
 )
 def join_point_in_time_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-time (temporal) join — the CONSUMPTION half of SCD-2

@@ -132,6 +132,23 @@ def _refs(n_entities: int) -> list[EntityRef]:
     return [EntityRef("YCSBEntity", f"entity-{i}") for i in range(n_entities)]
 
 
+def _op_events(ops: list[Op], refs: list[EntityRef]) -> list:
+    """One invoke event per op, in op order (the distributed runtimes'
+    input; ``run_local`` calls the same methods directly)."""
+    from stateflow_spark.entity import operator
+
+    def args(op: Op) -> tuple:
+        if op.kind == "read":
+            return ()
+        if op.kind == "update":
+            return (op.amount,)
+        return (op.amount, refs[op.other])
+
+    return [
+        operator.make_invoke_event(refs[op.key], op.kind, args(op)) for op in ops
+    ]
+
+
 def run_local(
     mix: str,
     n_tasks: int = N_TASKS,
@@ -198,21 +215,7 @@ def run_superstep(spark, mix: str, n_tasks: int = N_TASKS,
     seeded = rt.run(creates)
     refs = _refs(n_entities)
 
-    ops = make_workload(mix, n_tasks, n_entities)
-    events = []
-    for op in ops:
-        if op.kind == "read":
-            events.append(operator.make_invoke_event(refs[op.key], "read", ()))
-        elif op.kind == "update":
-            events.append(
-                operator.make_invoke_event(refs[op.key], "update", (op.amount,))
-            )
-        else:
-            events.append(
-                operator.make_invoke_event(
-                    refs[op.key], "transfer", (op.amount, refs[op.other])
-                )
-            )
+    events = _op_events(make_workload(mix, n_tasks, n_entities), refs)
     t0 = time.perf_counter()
     res = rt.run(events, state_df=seeded.state_df)
     wall = time.perf_counter() - t0
@@ -271,20 +274,7 @@ def run_streaming(spark, mix: str, n_tasks: int = N_TASKS,
         eng.drain()
 
         refs = _refs(n_entities)
-        events = []
-        for op in make_workload(mix, n_tasks, n_entities):
-            if op.kind == "read":
-                events.append(operator.make_invoke_event(refs[op.key], "read", ()))
-            elif op.kind == "update":
-                events.append(
-                    operator.make_invoke_event(refs[op.key], "update", (op.amount,))
-                )
-            else:
-                events.append(
-                    operator.make_invoke_event(
-                        refs[op.key], "transfer", (op.amount, refs[op.other])
-                    )
-                )
+        events = _op_events(make_workload(mix, n_tasks, n_entities), refs)
         bursts = (
             [events[i : i + pacing] for i in range(0, len(events), pacing)]
             if pacing

@@ -83,28 +83,25 @@ def assert_same_result(spark_df, duck_rows, name=""):
 
 
 def pytest_configure(config):
-    """Register the oracle-net family markers (derived from each query's
-    first registry tag — see tests/test_oracle.py::_family) so targeted
-    runs like `pytest tests/test_oracle.py -m dedup` work without
-    PytestUnknownMarkWarning; the marker set tracks the registry."""
+    """Register the oracle-net markers: one per query family (a query's
+    first tag, ``QueryDef.family``) so targeted runs like
+    `pytest tests/test_oracle.py -m dedup` work without
+    PytestUnknownMarkWarning, plus `smoke` and `slow`."""
     from stateflow_spark.queries import REGISTRY
 
-    fams = {
-        (q.tags[0] if q.tags else "misc") for q in REGISTRY.values()
-    }
-    for fam in sorted(fams):
+    for fam in sorted({q.family for q in REGISTRY.values()}):
         config.addinivalue_line(
             "markers", f"{fam}: oracle-net family shard (registry tag)"
         )
     config.addinivalue_line(
         "markers",
-        "full_oracle: oracle-net rows OUTSIDE the driver's 50-query prefix "
-        "— deselected by default (pytest.ini) so `pytest tests/` fits the "
-        "driver budget; run all with `pytest tests/test_oracle.py -m ''`",
+        "smoke: oracle-net rows in queries.smoke_names() (every bench row "
+        "plus the first row of each family) — a quick slice of the net: "
+        "`pytest tests/test_oracle.py -m smoke`",
     )
     config.addinivalue_line(
         "markers",
         "slow: heavyweight property/e2e/sweep tests deselected by default "
-        "(pytest.ini) for the same budget reason; the builder round-close "
-        "ritual runs everything with `pytest tests/ -m ''`",
+        "(pytest.ini) to keep the default run inside the tier-1 budget; "
+        "run everything with `pytest tests/ -m ''`",
     )

@@ -57,51 +57,15 @@ def test_coverage_doc_counts_match_registry():
     assert int(m.group(2)) == n_oracled, (m.group(2), n_oracled)
 
 
-def test_prefix_is_stalest_first():
-    """Rotation invariant (round-6 VERDICT "Next round" #8): the driver
-    stamps the first 50 registered queries, so the prefix must be exactly
-    (a) every never-driver-stamped query, (b) every CHANGED_THIS_ROUND
-    query, and (c) a fill drawn from the OLDEST stamp tier — no query
-    outside the prefix may be staler than any fill row. Computed against
-    the committed CORRECTNESS_r*.json history so rotation can't silently
-    skip a family."""
-    import glob
-    import json
-    import re
-    from pathlib import Path
+def test_register_requires_family_tag():
+    """A query's first tag is its family (test markers, smoke set), so a
+    registration without tags is refused before it reaches the registry."""
+    from stateflow_spark.queries import register
 
-    from stateflow_spark.queries import (
-        CHANGED_THIS_ROUND,
-        PREFIX_PINNED_FOR_ROUND,
-    )
-
-    root = Path(__file__).resolve().parents[1]
-    stamp: dict[str, int] = {}
-    for f in sorted(glob.glob(str(root / "CORRECTNESS_r*.json"))):
-        rnd = int(re.search(r"_r(\d+)\.json$", f).group(1))
-        if rnd >= PREFIX_PINNED_FOR_ROUND:
-            # stamps from the pin round onward are produced BY this
-            # prefix — judging the pin against them would make any
-            # correct prefix look stale the moment the driver stamps it
-            continue
-        for name in json.load(open(f)):
-            stamp[name] = max(stamp.get(name, 0), rnd)
-
-    names = list(REGISTRY)
-    prefix, rest = set(names[:50]), set(names[50:])
-
-    never = {n for n in names if n not in stamp}
-    assert never <= prefix, f"never-stamped outside prefix: {never - rest - prefix or never - prefix}"
-    assert set(CHANGED_THIS_ROUND) <= prefix, set(CHANGED_THIS_ROUND) - prefix
-
-    fills = prefix - never - set(CHANGED_THIS_ROUND)
-    if fills:
-        oldest_fill_age = max(stamp[n] for n in fills)
-        staler_outside = {n for n in rest if stamp[n] < oldest_fill_age}
-        assert not staler_outside, (
-            f"fill rows stamped r{oldest_fill_age} while staler queries "
-            f"sit outside the prefix: {sorted(staler_outside)}"
-        )
+    with pytest.raises(ValueError, match="family tag"):
+        register("untagged_query", oracle="SELECT 1")
+    assert "untagged_query" not in REGISTRY
+    assert all(q.tags for q in REGISTRY.values())
 
 
 def test_no_naked_decimal_to_double_in_oracles():

@@ -6,43 +6,26 @@ from __future__ import annotations
 
 import pytest
 
-from stateflow_spark.queries import REGISTRY
+from stateflow_spark.queries import REGISTRY, smoke_names
 from tests.conftest import SF_DIR, assert_same_result
 
 ORACLED = sorted(n for n, q in REGISTRY.items() if q.oracle is not None)
 ROWS_ONLY = sorted(n for n, q in REGISTRY.items() if q.oracle is None)
 
 
-def _family(name: str) -> str:
-    """Family marker = the query's FIRST registry tag (each family's
-    registration module leads with it), so a targeted inner-loop run
-    exists — `pytest tests/test_oracle.py -m dedup` — while the full
-    parametrized net stays the round-close gate (r9 VERDICT #8). Markers
-    are registered in tests/conftest.py::pytest_configure from the same
-    derivation, so they can never drift from the registry."""
-    tags = REGISTRY[name].tags
-    return tags[0] if tags else "misc"
-
-
-# Default pytest must finish inside the round driver's verify budget
-# (round-12 VERDICT #3: the 31-35 min full-registry sweep was cut off at
-# ~70% two rounds running, reporting tests_ok=false on a green tree). The
-# driver's own 50-query prefix — exactly what the round gate stamps — runs
-# in every default invocation as the smoke net; every query OUTSIDE the
-# prefix additionally carries the `full_oracle` marker, which pytest.ini
-# deselects by default. The FULL registry sweep (the local regression net
-# for rotated-out families) stays one command away and remains the
-# builder's round-close ritual:
+# Every oracled row runs in the default suite; each carries its family
+# marker (a query's first tag) and, when it is in the derived smoke set,
+# the `smoke` marker, so the inner loop can run a slice of the net:
 #
-#     python -m pytest tests/test_oracle.py -m ''      # full 206-query net
+#     python -m pytest tests/test_oracle.py -m smoke   # bench rows + one per family
 #     python -m pytest tests/test_oracle.py -m dedup   # one family
-_DRIVER_PREFIX = set(list(REGISTRY)[:50])
+_SMOKE = smoke_names()
 
 _PARAMS = [
     pytest.param(
         n,
-        marks=[getattr(pytest.mark, _family(n))]
-        + ([] if n in _DRIVER_PREFIX else [pytest.mark.full_oracle]),
+        marks=[getattr(pytest.mark, REGISTRY[n].family)]
+        + ([pytest.mark.smoke] if n in _SMOKE else []),
     )
     for n in ORACLED
 ]
@@ -118,3 +101,31 @@ def test_no_rows_only_queries():
     oracle-less rows (r05's one red), so an empty ROWS_ONLY set is the
     contract, not a coincidence."""
     assert ROWS_ONLY == []
+
+
+def test_smoke_set_is_derived():
+    """The smoke set holds every bench row and one row of every family,
+    only registered oracled names, does not depend on registration
+    order, and is exactly the `smoke`-marked slice of the oracle net."""
+    smoke = smoke_names()
+    bench = {n for n, q in REGISTRY.items() if "bench" in q.tags}
+    assert bench <= smoke, sorted(bench - smoke)
+    families = {q.family for q in REGISTRY.values()}
+    assert {REGISTRY[n].family for n in smoke} == families
+    assert smoke <= set(ORACLED), sorted(smoke - set(ORACLED))
+
+    saved = dict(REGISTRY)
+    try:
+        REGISTRY.clear()
+        REGISTRY.update(reversed(list(saved.items())))
+        assert list(REGISTRY) != list(saved)
+        assert smoke_names() == smoke
+    finally:
+        REGISTRY.clear()
+        REGISTRY.update(saved)
+
+    marked = {
+        p.values[0] for p in _PARAMS
+        if any(m.name == "smoke" for m in p.marks)
+    }
+    assert marked == smoke

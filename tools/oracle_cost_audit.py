@@ -25,10 +25,7 @@ import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem "
-    "events documents embeddings"
-).split()
+from stateflow_spark.catalog import TABLES  # noqa: E402
 
 
 def _dir_bytes(path: str) -> int:

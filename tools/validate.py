@@ -1,15 +1,13 @@
 #!/usr/bin/env python
 """Driver-style correctness gate, runnable standalone.
 
-Replays exactly what the round driver does: every query in the registry
-(or the driver's 50-query prefix, or a named subset) runs on Spark AND
-its DuckDB oracle at the same scale factor; results are compared
+Every query in the registry (or the smoke set, or a named subset) runs on
+Spark AND its DuckDB oracle at the same scale factor; results are compared
 order-insensitively after column-name sort. Prints one line per query
 and exits non-zero on any DIFF/ERROR.
 
     python tools/validate.py                      # all queries, sf0.01
-    python tools/validate.py --prefix             # the driver's first 50
-    python tools/validate.py --rotated            # everything NOT in the prefix
+    python tools/validate.py --smoke              # queries.smoke_names()
     python tools/validate.py --sf /root/testdata/sf0.001 dedup_exact q1_pricing_summary
 """
 
@@ -21,22 +19,16 @@ import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem "
-    "events documents embeddings"
-).split()
+from stateflow_spark.catalog import TABLES  # noqa: E402
 
 
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     ap.add_argument(
-        "--prefix", action="store_true", help="only the driver's first 50"
-    )
-    ap.add_argument(
-        "--rotated",
+        "--smoke",
         action="store_true",
-        help="only queries OUTSIDE the driver prefix (the rotation net)",
+        help="only the smoke set: bench rows plus one row per family",
     )
     ap.add_argument("names", nargs="*", help="specific query names")
     args = ap.parse_args()
@@ -44,6 +36,7 @@ def main() -> int:
     import duckdb
 
     import __spark_entry__ as E
+    from stateflow_spark.queries import smoke_names
     from stateflow_spark.session import get_spark
 
     spark = get_spark(app_name="validate")
@@ -57,10 +50,8 @@ def main() -> int:
 
     if args.names:
         names = args.names
-    elif args.prefix:
-        names = list(qs)[:50]
-    elif args.rotated:
-        names = list(qs)[50:]
+    elif args.smoke:
+        names = sorted(smoke_names())
     else:
         names = list(qs)
     bad: list[str] = []
