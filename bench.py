@@ -134,21 +134,16 @@ def measure_builds(spark) -> dict[str, float]:
     record the wall. Cache-dir names are reconstructed from the builders'
     (abspath, mtime) keying — the post-build existence assert fails loud
     if the naming ever drifts."""
-    import hashlib
     import shutil
     import tempfile
 
     from stateflow_spark.queries.dedup import _minhash_index_table
     from stateflow_spark.queries.similarity import _ivf_index_dir, _norms_dir
-
-    def src_key(path: str) -> str:
-        return hashlib.md5(
-            f"{os.path.abspath(path)}:{os.path.getmtime(path)}".encode()
-        ).hexdigest()[:12]
+    from stateflow_spark.versioning import source_key
 
     tmp = tempfile.gettempdir()
-    ekey = src_key(os.path.join(SF_DIR, "embeddings.parquet"))
-    dkey = src_key(os.path.join(SF_DIR, "documents.parquet"))
+    ekey = source_key(os.path.join(SF_DIR, "embeddings.parquet"))
+    dkey = source_key(os.path.join(SF_DIR, "documents.parquet"))
     targets = {
         "ivf_index": (
             os.path.join(tmp, f"stateflow_ivf_index_v3_{ekey}"),

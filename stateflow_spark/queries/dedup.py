@@ -23,7 +23,12 @@ from stateflow_spark.functions.similarity import (
     sqdist_fxp,
 )
 from stateflow_spark.queries.common import register
-from stateflow_spark.storage import unpersist_local_checkpoint
+from stateflow_spark.storage import (
+    register_bucketed,
+    unpersist_local_checkpoint,
+    write_bucketed_files,
+)
+from stateflow_spark.versioning import build_once, is_ready, source_key
 
 JACCARD_THRESHOLD = 0.10
 
@@ -2533,70 +2538,43 @@ def _minhash_index_table(spark: SparkSession, sf_dir: str) -> str:
     storage.py co-located-join layout), so every delta probe joins the
     postings with ZERO exchange on the corpus side — the shuffle moved
     to the nightly write, exactly the posture the minhash docstrings
-    have claimed since round 7. Bucket metadata only lives in the
-    session catalog, so a fresh session re-registers the existing files
-    with CREATE TABLE ... CLUSTERED BY (bucket ids ride the file names)."""
-    import hashlib
+    have claimed since round 7. A fresh session re-registers the
+    published files (storage.register_bucketed)."""
     import os
     import tempfile
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    key = hashlib.md5(
-        f"{os.path.abspath(src)}:{os.path.getmtime(src)}".encode()
-    ).hexdigest()[:12]
+    key = source_key(os.path.join(sf_dir, "documents.parquet"))
     tbl = f"mh_index_{key}"
     if spark.catalog.tableExists(tbl):
         return tbl
-    path = os.path.join(tempfile.gettempdir(), f"stateflow_mh_index_{key}")
-    ddl = (
-        f"CREATE TABLE IF NOT EXISTS {tbl} (bkey STRING, sid BIGINT,"
-        f" sn INT, shs ARRAY<BIGINT>) USING PARQUET CLUSTERED BY (bkey)"
-        f" INTO {_MH_IDX_BUCKETS} BUCKETS LOCATION '{path}'"
-    )
-    if os.path.exists(os.path.join(path, "_INDEX_READY")):
-        spark.sql(ddl)
-        return tbl
-    # build into a scratch dir (scratch catalog name, since bucketed
-    # writes go through saveAsTable) and PUBLISH with an atomic
-    # os.rename — the r10 overwrite-into-final-location write let two
-    # concurrent sessions, both seeing no READY marker, clobber a
-    # half-built postings dir (round-10 ADVICE low; same pattern as
-    # _ivf_index_dir). Bucket ids ride the file names, so dropping the
-    # scratch table's metadata and re-registering the renamed files
-    # under the final DDL preserves the bucketed layout.
-    import shutil
-    import uuid
 
-    from stateflow_spark.storage import write_bucketed
-
-    token = uuid.uuid4().hex[:8]
-    tmp_path = f"{path}.building.{token}"
-    tmp_tbl = f"{tbl}_building_{token}"
-    postings = (
-        _minhash_stacked(spark, sf_dir)
-        .filter(F.col("doc_id") % 5 != 0)
-        .select(
-            "bkey",
-            F.col("doc_id").alias("sid"),
-            F.col("n").cast("int").alias("sn"),
-            F.col("hs").alias("shs"),
+    def build(scratch: str) -> None:
+        postings = (
+            _minhash_stacked(spark, sf_dir)
+            .filter(F.col("doc_id") % 5 != 0)
+            .select(
+                "bkey",
+                F.col("doc_id").alias("sid"),
+                F.col("n").cast("int").alias("sn"),
+                F.col("hs").alias("shs"),
+            )
         )
+        write_bucketed_files(
+            postings, ["bkey"], _MH_IDX_BUCKETS, scratch, sort_keys=["bkey"]
+        )
+
+    path = build_once(
+        os.path.join(tempfile.gettempdir(), f"stateflow_mh_index_{key}"),
+        build,
     )
-    write_bucketed(postings, tmp_tbl, ["bkey"], _MH_IDX_BUCKETS, tmp_path,
-                   sort_keys=["bkey"])
-    spark.sql(f"DROP TABLE {tmp_tbl}")  # external: files stay put
-    open(os.path.join(tmp_path, "_INDEX_READY"), "w").close()
-    try:
-        os.rename(tmp_path, path)
-    except OSError:
-        # only a concurrent publish of the same version excuses the
-        # rename; anything else (ENOSPC, EACCES) must surface, or the
-        # DDL below would register an empty/absent location (r12 review)
-        if not os.path.exists(os.path.join(path, "_INDEX_READY")):
-            raise
-        shutil.rmtree(tmp_path, ignore_errors=True)  # a concurrent build won
-    spark.sql(ddl)
-    return tbl
+    return _register_mh_postings(spark, tbl, path)
+
+
+def _register_mh_postings(spark: SparkSession, tbl: str, path: str) -> str:
+    return register_bucketed(
+        spark, tbl, "bkey STRING, sid BIGINT, sn INT, shs ARRAY<BIGINT>",
+        ["bkey"], _MH_IDX_BUCKETS, path,
+    )
 
 
 _MH_STACKED_SQL = f"""
@@ -2943,11 +2921,9 @@ def minhash_apply_compaction(
     passed through — while every cool bucket's file is HARDLINKED into
     the new table directory byte-identical (bucket id = pmod(hash(bkey),
     {_MH_IDX_BUCKETS}) rides the `_NNNNN` file-name suffix, so membership
-    is decided without opening a file). The new directory is assembled
-    in a `.building` scratch and published with one atomic os.rename
-    (the discipline of _minhash_index_table; the r11 docstring claimed
-    it, this now does it), then registered under a fresh CLUSTERED BY
-    DDL — bucket ids riding the file names keep the zero-Exchange probe
+    is decided without opening a file). The new directory is published
+    with versioning.build_once, then registered under a fresh name —
+    bucket ids riding the file names keep the zero-Exchange probe
     layout. At 100 TB the nightly hot-key set is bounded by the merge
     accounting, so the rewrite I/O is (hot buckets / all buckets) of the
     table, not the corpus — the same worklist-bounded shape as
@@ -2976,22 +2952,11 @@ def minhash_apply_compaction(
 
     from pyspark.sql import Window
 
-    from stateflow_spark.storage import write_bucketed
-
     tbl = _minhash_index_table(spark, sf_dir)
-    if out_suffix is not None:
-        det_tbl = f"{tbl}_compact_{out_suffix}"
-        det_path = os.path.join(
-            tempfile.gettempdir(), f"stateflow_{det_tbl}"
-        )
-        if os.path.exists(os.path.join(det_path, "_INDEX_READY")):
-            spark.sql(
-                f"CREATE TABLE IF NOT EXISTS {det_tbl} (bkey STRING,"
-                f" sid BIGINT, sn INT, shs ARRAY<BIGINT>) USING PARQUET"
-                f" CLUSTERED BY (bkey) INTO {_MH_IDX_BUCKETS} BUCKETS"
-                f" LOCATION '{det_path}'"
-            )
-            return det_tbl
+    out_tbl = f"{tbl}_compact_{out_suffix or uuid.uuid4().hex[:8]}"
+    out_path = os.path.join(tempfile.gettempdir(), f"stateflow_{out_tbl}")
+    if is_ready(out_path):  # only an out_suffix name can already exist
+        return _register_mh_postings(spark, out_tbl, out_path)
     postings = spark.table(tbl)
     # hot-BUCKET worklist: driver-role by design (it decides which files
     # to link vs rewrite) and bounded by the bucket count, never the
@@ -3009,80 +2974,61 @@ def minhash_apply_compaction(
     }
     if not hot_buckets:
         return tbl  # nothing hot: the old version stays current
-    token = uuid.uuid4().hex[:8]
-    out_tbl = f"{tbl}_compact_{out_suffix or token}"
-    out_path = os.path.join(tempfile.gettempdir(), f"stateflow_{out_tbl}")
-    tmp_path = f"{out_path}.building.{token}"
     src_loc = _table_location(spark, tbl)
-    os.makedirs(tmp_path)
-    # cool buckets: hardlink, byte-identical, never opened; hot buckets:
-    # collect their FILES for the rewrite scan below
-    hot_files = []
-    for f in os.listdir(src_loc):
-        m = re.search(r"_(\d{5})\.c", f)
-        if not m or not f.endswith(".parquet"):
-            continue
-        if int(m.group(1)) not in hot_buckets:
-            try:
-                os.link(os.path.join(src_loc, f), os.path.join(tmp_path, f))
-            except OSError:
-                shutil.copy2(
-                    os.path.join(src_loc, f), os.path.join(tmp_path, f)
-                )
-        else:
-            hot_files.append(os.path.join(src_loc, f))
-    # hot buckets: rewrite their rows (cool keys within pass through —
-    # rk <= cap keeps every row of a cool key). The hot buckets' FILES
-    # are read directly (bucket id rides the file name, so the file set
-    # IS the bucket predicate — a pmod(hash(bkey)) filter would NOT
-    # bucket-prune and the scan would read the whole table; r12 review);
-    # the scratch bucketed write emits files ONLY for hot buckets (one
-    # per bucket), named with the same _NNNNN suffix scheme.
-    wb = Window.partitionBy("bkey")
-    hot_rows = spark.read.schema(postings.schema).parquet(*hot_files)
-    kept = (
-        hot_rows.select(
-            "bkey",
-            "sid",
-            "sn",
-            "shs",
-            F.row_number()
-            .over(wb.orderBy(F.md5(F.col("sid").cast("string")), "sid"))
-            .alias("rk"),
-        )
-        .filter(F.col("rk") <= cap)
-        .drop("rk")
-    )
-    scratch_tbl = f"{out_tbl}_hotbuckets"
-    scratch_path = out_path + ".hot." + token
-    write_bucketed(kept, scratch_tbl, ["bkey"], _MH_IDX_BUCKETS,
-                   scratch_path, sort_keys=["bkey"])
-    spark.sql(f"DROP TABLE {scratch_tbl}")  # external: files stay put
-    for f in os.listdir(scratch_path):
-        if f.endswith(".parquet"):
-            os.rename(
-                os.path.join(scratch_path, f), os.path.join(tmp_path, f)
+
+    def build(scratch: str) -> None:
+        os.makedirs(scratch)
+        # cool buckets: hardlink, byte-identical, never opened; hot
+        # buckets: collect their FILES for the rewrite scan below
+        hot_files = []
+        for f in os.listdir(src_loc):
+            m = re.search(r"_(\d{5})\.c", f)
+            if not m or not f.endswith(".parquet"):
+                continue
+            if int(m.group(1)) not in hot_buckets:
+                try:
+                    os.link(
+                        os.path.join(src_loc, f), os.path.join(scratch, f)
+                    )
+                except OSError:
+                    shutil.copy2(
+                        os.path.join(src_loc, f), os.path.join(scratch, f)
+                    )
+            else:
+                hot_files.append(os.path.join(src_loc, f))
+        # hot buckets: rewrite their rows (cool keys within pass through
+        # — rk <= cap keeps every row of a cool key). The hot buckets'
+        # FILES are read directly (bucket id rides the file name, so the
+        # file set IS the bucket predicate — a pmod(hash(bkey)) filter
+        # would NOT bucket-prune and the scan would read the whole
+        # table; r12 review); the bucketed write emits files ONLY for
+        # hot buckets (one per bucket), named with the same _NNNNN
+        # suffix scheme, into a subdirectory moved up file by file.
+        wb = Window.partitionBy("bkey")
+        hot_rows = spark.read.schema(postings.schema).parquet(*hot_files)
+        kept = (
+            hot_rows.select(
+                "bkey",
+                "sid",
+                "sn",
+                "shs",
+                F.row_number()
+                .over(wb.orderBy(F.md5(F.col("sid").cast("string")), "sid"))
+                .alias("rk"),
             )
-    shutil.rmtree(scratch_path, ignore_errors=True)
-    open(os.path.join(tmp_path, "_INDEX_READY"), "w").close()
-    try:
-        os.rename(tmp_path, out_path)
-    except OSError:
-        # a concurrent publish of the same deterministic version won
-        # (out_suffix callers only — with the uuid token the target is
-        # unique and an OSError is always a real failure); its content
-        # is identical by construction. Anything else must surface, or
-        # the DDL below would register an absent location and every
-        # probe would silently see zero postings (r12 review).
-        if not os.path.exists(os.path.join(out_path, "_INDEX_READY")):
-            raise
-        shutil.rmtree(tmp_path, ignore_errors=True)
-    spark.sql(
-        f"CREATE TABLE IF NOT EXISTS {out_tbl} (bkey STRING, sid BIGINT,"
-        f" sn INT, shs ARRAY<BIGINT>) USING PARQUET CLUSTERED BY (bkey)"
-        f" INTO {_MH_IDX_BUCKETS} BUCKETS LOCATION '{out_path}'"
-    )
-    return out_tbl
+            .filter(F.col("rk") <= cap)
+            .drop("rk")
+        )
+        hot = os.path.join(scratch, "_hot")
+        write_bucketed_files(
+            kept, ["bkey"], _MH_IDX_BUCKETS, hot, sort_keys=["bkey"]
+        )
+        for f in os.listdir(hot):
+            if f.endswith(".parquet"):
+                os.rename(os.path.join(hot, f), os.path.join(scratch, f))
+        shutil.rmtree(hot)
+
+    return _register_mh_postings(spark, out_tbl, build_once(out_path, build))
 
 
 def _mh_compacted_table(spark: SparkSession, sf_dir: str, cap: int) -> str:

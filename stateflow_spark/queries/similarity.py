@@ -29,6 +29,7 @@ from stateflow_spark.functions.similarity import (
     sqdist_dec,
 )
 from stateflow_spark.queries.common import register
+from stateflow_spark.versioning import build_once, is_ready, publish, source_key
 
 _EX_SQL = """
         SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
@@ -72,36 +73,21 @@ def _norms_dir(spark: SparkSession, sf_dir: str) -> str:
     n2 > 0 (an inherent 1.3-1.4× on the guarded rows, measured by the
     r10 interleaved A/B); now the guard reads a plain parquet column.
     At 100 TB this is part of the same nightly layout job as the stored
-    indexes — norms change only when vectors do. Cached per
-    (abspath, mtime) with the scratch-dir + atomic-rename publish
-    discipline of _ivf_index_dir."""
-    import hashlib
+    indexes — norms change only when vectors do."""
     import os
-    import shutil
     import tempfile
-    import uuid
 
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{os.path.abspath(src)}:{os.path.getmtime(src)}".encode()
-    ).hexdigest()[:12]
-    base = os.path.join(tempfile.gettempdir(), f"stateflow_corpus_n2_{key}")
-    if os.path.exists(os.path.join(base, "_INDEX_READY")):
-        return base
-    tmp = base + ".building." + uuid.uuid4().hex[:8]
-    _corpus(spark, sf_dir, with_label=True, fan_out=True).select(
-        "vec_id", "label", "v", norm2_dec("v").alias("n2")
-    ).write.parquet(os.path.join(tmp, "corpus"))
-    open(os.path.join(tmp, "_INDEX_READY"), "w").close()
-    try:
-        os.rename(tmp, base)
-    except OSError:
-        # concurrent build of the same mtime-keyed version is the only
-        # excused failure; otherwise surface it (r12 review)
-        if not os.path.exists(os.path.join(base, "_INDEX_READY")):
-            raise
-        shutil.rmtree(tmp, ignore_errors=True)  # a concurrent build won
-    return base
+    key = source_key(os.path.join(sf_dir, "embeddings.parquet"))
+
+    def build(scratch: str) -> None:
+        _corpus(spark, sf_dir, with_label=True, fan_out=True).select(
+            "vec_id", "label", "v", norm2_dec("v").alias("n2")
+        ).write.parquet(os.path.join(scratch, "corpus"))
+
+    return build_once(
+        os.path.join(tempfile.gettempdir(), f"stateflow_corpus_n2_{key}"),
+        build,
+    )
 
 
 def norms_apply_append(delta: DataFrame, layout_dir: str) -> None:
@@ -2241,27 +2227,25 @@ def _ivf_index_dir(spark: SparkSession, sf_dir: str) -> str:
     trick); the first ceil(sqrt(S)) of them double as the COARSE level;
     each fine seed hangs off its nearest coarse seed, and every stored
     row routes coarse→fine by the tie-free fixed-point kernel. Exact
-    decimal norms ride along. Cached under the system temp dir keyed on
-    the source path+mtime, built into a scratch dir and renamed in
-    atomically so concurrent queries never see a half-built index. At
-    100 TB this is the nightly index-build job; the maintenance query
-    below is the daily-delta job that must never rescan this corpus."""
-    import hashlib
+    decimal norms ride along. Cached under the system temp dir as a
+    build-once version keyed on the source file. At 100 TB this is the
+    nightly index-build job; the maintenance query below is the
+    daily-delta job that must never rescan this corpus."""
     import os
-    import shutil
     import tempfile
-    import uuid
 
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{os.path.abspath(src)}:{os.path.getmtime(src)}".encode()
-    ).hexdigest()[:12]
-    base = os.path.join(
-        tempfile.gettempdir(), f"stateflow_ivf_index_v3_{key}"
+    key = source_key(os.path.join(sf_dir, "embeddings.parquet"))
+    return build_once(
+        os.path.join(tempfile.gettempdir(), f"stateflow_ivf_index_v3_{key}"),
+        lambda scratch: _build_ivf_index(spark, sf_dir, scratch),
     )
-    if os.path.exists(os.path.join(base, "_INDEX_READY")):
-        return base
-    tmp = base + ".building." + uuid.uuid4().hex[:8]
+
+
+def _build_ivf_index(spark: SparkSession, sf_dir: str, tmp: str) -> None:
+    """Write _ivf_index_dir's layout (seeds, corpus, centroids) into
+    `tmp`."""
+    import os
+
     old = _corpus(spark, sf_dir, with_label=True).filter(
         F.col("vec_id") % 5 != 0
     )
@@ -2386,16 +2370,6 @@ def _ivf_index_dir(spark: SparkSession, sf_dir: str) -> str:
     _centroids_from(old).select(
         F.col("label").alias("cid"), "cv"
     ).write.parquet(os.path.join(tmp, "centroids"))
-    open(os.path.join(tmp, "_INDEX_READY"), "w").close()
-    try:
-        os.rename(tmp, base)
-    except OSError:
-        # concurrent build of the same mtime-keyed version is the only
-        # excused failure; otherwise surface it (r12 review)
-        if not os.path.exists(os.path.join(base, "_INDEX_READY")):
-            raise
-        shutil.rmtree(tmp, ignore_errors=True)  # a concurrent build won
-    return base
 
 
 # shared routing CTE block (fine seeds + coarse flags, fine→coarse
@@ -3371,12 +3345,11 @@ def ivf_apply_resplit(
     Concurrency contract (round-11 VERDICT #4 + ADVICE medium): the
     SOURCE directory is never mutated — every read (corpus, seeds,
     routing) comes from `index_dir` (or the session-cached nightly
-    snapshot when None), the new version is assembled in a `.building`
-    scratch sibling, stamped `_INDEX_READY`, and published with one
-    os.rename. A concurrent prober therefore sees either the fully-old
-    index (the source, untouched throughout) or the fully-new one (the
-    returned path, which exists only after the rename) — never a
-    corpus/seeds mixed state. Production repoints its CURRENT pointer
+    snapshot when None), and the new version is published with
+    versioning.build_once. A concurrent prober therefore sees either the
+    fully-old index (the source, untouched throughout) or the fully-new
+    one (the returned path, which exists only after the rename) — never
+    a corpus/seeds mixed state. Production repoints its CURRENT pointer
     at the returned path (DEPLOY.md). Returns the new version's
     directory (or the source itself when the worklist is empty —
     nothing changed, so the old version IS the new one)."""
@@ -3409,89 +3382,91 @@ def ivf_apply_resplit(
     flagged_cids = spark.createDataFrame(
         [(c,) for c in sorted(flagged_cid_set)], "cid int"
     )
-    out = source.rstrip("/") + ".applied." + uuid.uuid4().hex[:8]
-    tmp = out + ".building"
-    # untouched cid partitions, the seeds files, and the centroids are
-    # hardlinked; flagged partitions and the new seed rows are written
-    # fresh below
-    _link_or_copy_tree(
-        source, tmp,
-        skip_dirs=frozenset(f"cid={c}" for c in flagged_cid_set),
-    )
-    ready = os.path.join(tmp, "_INDEX_READY")
-    if os.path.exists(ready):  # linked in with the rest: not ready yet
-        os.unlink(ready)
-    # post-split assignment for the flagged cells
-    reasg = _ivf_resplit_cells_assignments(spark, source, routed, pop, cap)
-    stored = spark.read.parquet(os.path.join(source, "corpus"))
-    merged_rows = (
-        stored.join(F.broadcast(flagged_cids), "cid")
-        .select("cid", "subcell", "sid", "sv", "sn2")
-        .unionByName(
-            routed.join(F.broadcast(flagged_cids), "cid").select(
-                "cid", "subcell", F.col("vec_id").alias("sid"),
-                F.col("v").alias("sv"), F.col("dn2").alias("sn2"),
+
+    def build(tmp: str) -> None:
+        # untouched cid partitions, the seeds files, and the centroids are
+        # hardlinked; flagged partitions and the new seed rows are written
+        # fresh below
+        _link_or_copy_tree(
+            source, tmp,
+            skip_dirs=frozenset(f"cid={c}" for c in flagged_cid_set),
+        )
+        # post-split assignment for the flagged cells
+        reasg = _ivf_resplit_cells_assignments(
+            spark, source, routed, pop, cap
+        )
+        stored = spark.read.parquet(os.path.join(source, "corpus"))
+        merged_rows = (
+            stored.join(F.broadcast(flagged_cids), "cid")
+            .select("cid", "subcell", "sid", "sv", "sn2")
+            .unionByName(
+                routed.join(F.broadcast(flagged_cids), "cid").select(
+                    "cid", "subcell", F.col("vec_id").alias("sid"),
+                    F.col("v").alias("sv"), F.col("dn2").alias("sn2"),
+                )
             )
         )
+        rewritten = (
+            merged_rows.join(
+                reasg.select(
+                    "cid", "subcell", F.col("vec_id").alias("sid"),
+                    "new_subcell",
+                ),
+                ["cid", "subcell", "sid"],
+                "left",
+            )
+            .select(
+                "cid",
+                F.coalesce(F.col("new_subcell"), F.col("subcell")).alias(
+                    "subcell"
+                ),
+                "sid", "sv", "sn2",
+            )
+        )
+        # the scratch corpus holds only unflagged partitions, so a plain
+        # partitioned append writes exactly the flagged cids' files
+        rewritten.select("subcell", "sid", "sv", "sn2", "cid").write.mode(
+            "append"
+        ).partitionBy("cid").parquet(os.path.join(tmp, "corpus"))
+        # append-only seeds update: the NEW seeds (old seed excluded — its
+        # row already exists) hang off the old cell's parent
+        seeds = spark.read.parquet(os.path.join(source, "seeds"))
+        new_seed_rows = (
+            reasg.select("cid", "subcell", "new_subcell")
+            .distinct()
+            .filter(F.col("new_subcell") != F.col("subcell"))
+            .join(
+                seeds.select(
+                    F.col("cid").alias("cid"),
+                    F.col("seed_id").alias("subcell"),
+                    "parent",
+                ),
+                ["cid", "subcell"],
+            )
+            .join(
+                stored.select(
+                    "cid", F.col("sid").alias("new_subcell"),
+                    F.col("sv").alias("seed_v"),
+                ).unionByName(
+                    routed.select(
+                        "cid", F.col("vec_id").alias("new_subcell"),
+                        F.col("v").alias("seed_v"),
+                    )
+                ).distinct(),
+                ["cid", "new_subcell"],
+            )
+            .select(
+                "cid", F.col("new_subcell").alias("seed_id"), "seed_v",
+                F.lit(False).alias("is_coarse"), "parent",
+            )
+        )
+        new_seed_rows.write.mode("append").parquet(
+            os.path.join(tmp, "seeds")
+        )
+
+    return build_once(
+        source.rstrip("/") + ".applied." + uuid.uuid4().hex[:8], build
     )
-    rewritten = (
-        merged_rows.join(
-            reasg.select(
-                "cid", "subcell", F.col("vec_id").alias("sid"),
-                "new_subcell",
-            ),
-            ["cid", "subcell", "sid"],
-            "left",
-        )
-        .select(
-            "cid",
-            F.coalesce(F.col("new_subcell"), F.col("subcell")).alias(
-                "subcell"
-            ),
-            "sid", "sv", "sn2",
-        )
-    )
-    # the scratch corpus holds only unflagged partitions, so a plain
-    # partitioned append writes exactly the flagged cids' files
-    rewritten.select("subcell", "sid", "sv", "sn2", "cid").write.mode(
-        "append"
-    ).partitionBy("cid").parquet(os.path.join(tmp, "corpus"))
-    # append-only seeds update: the NEW seeds (old seed excluded — its
-    # row already exists) hang off the old cell's parent
-    seeds = spark.read.parquet(os.path.join(source, "seeds"))
-    new_seed_rows = (
-        reasg.select("cid", "subcell", "new_subcell")
-        .distinct()
-        .filter(F.col("new_subcell") != F.col("subcell"))
-        .join(
-            seeds.select(
-                F.col("cid").alias("cid"),
-                F.col("seed_id").alias("subcell"),
-                "parent",
-            ),
-            ["cid", "subcell"],
-        )
-        .join(
-            stored.select(
-                "cid", F.col("sid").alias("new_subcell"),
-                F.col("sv").alias("seed_v"),
-            ).unionByName(
-                routed.select(
-                    "cid", F.col("vec_id").alias("new_subcell"),
-                    F.col("v").alias("seed_v"),
-                )
-            ).distinct(),
-            ["cid", "new_subcell"],
-        )
-        .select(
-            "cid", F.col("new_subcell").alias("seed_id"), "seed_v",
-            F.lit(False).alias("is_coarse"), "parent",
-        )
-    )
-    new_seed_rows.write.mode("append").parquet(os.path.join(tmp, "seeds"))
-    open(os.path.join(tmp, "_INDEX_READY"), "w").close()
-    os.rename(tmp, out)
-    return out
 
 
 def _flagged_split_pairs(
@@ -3729,12 +3704,9 @@ def _ivf_applied_dir(spark: SparkSession, sf_dir: str) -> str:
     day-1 delta and the apply are deterministic, so renaming the
     published version is exactly the CURRENT-pointer swap of the
     DEPLOY.md contract; a concurrent loser deletes its own version."""
-    import os
-    import shutil
-
     base = _ivf_index_dir(spark, sf_dir)
     det = f"{base}.applied.post-resplit-{_IVF_RESPLIT_POP}"
-    if os.path.exists(os.path.join(det, "_INDEX_READY")):
+    if is_ready(det):
         return det
     day1 = _pin_n2(
         _corpus(spark, sf_dir, fan_out=True).filter(_IVF_DAY1_PRED)
@@ -3745,17 +3717,7 @@ def _ivf_applied_dir(spark: SparkSession, sf_dir: str) -> str:
     )
     if applied == base:  # empty worklist: nothing was published
         return base
-    try:
-        os.rename(applied, det)
-    except OSError:
-        # only a concurrent apply that already published `det` excuses
-        # the rename — verify BEFORE deleting the freshly built version,
-        # else a real failure (EACCES, ENOSPC) would both destroy the
-        # build and return a path that does not exist (r12 review)
-        if not os.path.exists(os.path.join(det, "_INDEX_READY")):
-            raise
-        shutil.rmtree(applied, ignore_errors=True)  # a concurrent apply won
-    return det
+    return publish(applied, det)
 
 
 @register(

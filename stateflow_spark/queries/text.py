@@ -14,6 +14,8 @@ from pyspark.sql.window import Window
 
 from stateflow_spark.catalog import load, stage_tasks, table_path
 from stateflow_spark.queries.common import register
+from stateflow_spark.storage import register_bucketed, write_bucketed_files
+from stateflow_spark.versioning import build_once, source_key
 
 STOPWORDS = ("the", "a", "of", "and", "to")
 STOP_SQL = "('the', 'a', 'of', 'and', 'to')"
@@ -2066,62 +2068,38 @@ def _span_count_table(spark: SparkSession, sf_dir: str) -> str:
     skey (the storage.py co-located-join layout), so every delta probe
     joins the counts with ZERO exchange on the stored side — the
     boilerplate family's nightly layout, the third stored-index family
-    after IVF and the MinHash postings. Same (abspath, mtime) keying,
-    scratch-dir build, and atomic-rename publish as
-    _minhash_index_table; a fresh session re-registers the existing
-    files with CREATE TABLE ... CLUSTERED BY (bucket ids ride the file
-    names)."""
-    import hashlib
+    after IVF and the MinHash postings."""
     import os
-    import shutil
     import tempfile
-    import uuid
 
-    from stateflow_spark.storage import write_bucketed
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    key = hashlib.md5(
-        f"{os.path.abspath(src)}:{os.path.getmtime(src)}".encode()
-    ).hexdigest()[:12]
+    key = source_key(os.path.join(sf_dir, "documents.parquet"))
     tbl = f"boiler_index_{key}"
     if spark.catalog.tableExists(tbl):
         return tbl
-    path = os.path.join(
-        tempfile.gettempdir(), f"stateflow_boiler_index_{key}"
-    )
-    ddl = (
-        f"CREATE TABLE IF NOT EXISTS {tbl} (skey STRING, ndocs BIGINT)"
-        f" USING PARQUET CLUSTERED BY (skey)"
-        f" INTO {_BOILER_IDX_BUCKETS} BUCKETS LOCATION '{path}'"
-    )
-    if os.path.exists(os.path.join(path, "_INDEX_READY")):
-        spark.sql(ddl)
-        return tbl
-    token = uuid.uuid4().hex[:8]
-    tmp_path = f"{path}.building.{token}"
-    tmp_tbl = f"{tbl}_building_{token}"
-    old = load(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 != 0)
-    counts = (
-        _boiler_spans(
-            _boiler_base(spark, old, [table_path(sf_dir, "documents")])
+
+    def build(scratch: str) -> None:
+        old = load(spark, sf_dir, "documents").filter(
+            F.col("doc_id") % 5 != 0
         )
-        .groupBy("skey")
-        .agg(F.countDistinct("doc_id").alias("ndocs"))
+        counts = (
+            _boiler_spans(
+                _boiler_base(spark, old, [table_path(sf_dir, "documents")])
+            )
+            .groupBy("skey")
+            .agg(F.countDistinct("doc_id").alias("ndocs"))
+        )
+        write_bucketed_files(
+            counts, ["skey"], _BOILER_IDX_BUCKETS, scratch, sort_keys=["skey"]
+        )
+
+    path = build_once(
+        os.path.join(tempfile.gettempdir(), f"stateflow_boiler_index_{key}"),
+        build,
     )
-    write_bucketed(counts, tmp_tbl, ["skey"], _BOILER_IDX_BUCKETS,
-                   tmp_path, sort_keys=["skey"])
-    spark.sql(f"DROP TABLE {tmp_tbl}")  # external: files stay put
-    open(os.path.join(tmp_path, "_INDEX_READY"), "w").close()
-    try:
-        os.rename(tmp_path, path)
-    except OSError:
-        # concurrent build of the same mtime-keyed version is the only
-        # excused failure; otherwise surface it
-        if not os.path.exists(os.path.join(path, "_INDEX_READY")):
-            raise
-        shutil.rmtree(tmp_path, ignore_errors=True)
-    spark.sql(ddl)
-    return tbl
+    return register_bucketed(
+        spark, tbl, "skey STRING, ndocs BIGINT", ["skey"],
+        _BOILER_IDX_BUCKETS, path,
+    )
 
 
 def _boiler_classify_delta(

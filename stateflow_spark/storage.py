@@ -38,6 +38,7 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import uuid
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -71,6 +72,44 @@ def write_bucketed(
     if sort_keys:
         w = w.sortBy(*sort_keys)
     w.option("path", path).mode("overwrite").saveAsTable(table)
+
+
+def write_bucketed_files(
+    df: DataFrame,
+    keys: Sequence[str],
+    n_buckets: int,
+    path: str,
+    sort_keys: Sequence[str] | None = None,
+) -> None:
+    """`write_bucketed` to `path` through a throwaway catalog entry that
+    is dropped again: the bucket ids ride the file names, so the files
+    alone carry the layout and `register_bucketed` can register them
+    under their final name after the directory has been moved."""
+    table = f"bucketed_scratch_{uuid.uuid4().hex[:8]}"
+    try:
+        write_bucketed(df, table, keys, n_buckets, path, sort_keys)
+    finally:
+        df.sparkSession.sql(f"DROP TABLE IF EXISTS {table}")  # external
+
+
+def register_bucketed(
+    spark: SparkSession,
+    table: str,
+    schema: str,
+    keys: Sequence[str],
+    n_buckets: int,
+    path: str,
+) -> str:
+    """Register the bucketed parquet files at `path` as `table` (a no-op
+    if the name exists) and return the name. Bucket metadata lives only
+    in the session catalog, so every fresh session re-registers a stored
+    layout this way."""
+    spark.sql(
+        f"CREATE TABLE IF NOT EXISTS {table} ({schema}) USING PARQUET"
+        f" CLUSTERED BY ({', '.join(keys)}) INTO {n_buckets} BUCKETS"
+        f" LOCATION '{path}'"
+    )
+    return table
 
 
 def read_bucketed(spark: SparkSession, table: str) -> DataFrame:

@@ -1,11 +1,17 @@
-"""CURRENT-pointer resolution for versioned stored-index layouts.
+"""Build-once publish and CURRENT-pointer resolution for the versioned
+stored-index layouts.
 
-The apply jobs (similarity.ivf_apply_resplit, dedup.minhash_apply_
-compaction) publish IMMUTABLE index versions: a fully-built directory
-appears atomically under a fresh name and is never mutated afterwards
-(DEPLOY.md "Concurrent-probe contract"). What production still needs is
-the cutover primitive — the pointer probes resolve at startup. This
-module is that primitive, filesystem-portable and crash-safe:
+Every stored layout (IVF index, norm-materialized corpus, MinHash
+postings, span-count table, and their applied or compacted versions) is
+an IMMUTABLE version directory: it is assembled in a scratch sibling,
+stamped `READY_MARKER`, and appears under its final name with one atomic
+os.rename — a reader sees the whole version or nothing (DEPLOY.md
+"Concurrent-probe contract"). `build_once` and `publish` below are the
+one implementation of that protocol; `source_key` names the nightly
+versions after their source file.
+
+What production needs on top is the cutover primitive — the pointer
+probes resolve at startup, filesystem-portable and crash-safe:
 
 - `publish_current(root, version_dir)` repoints `<root>/CURRENT` with a
   write-temp + os.replace — atomic on POSIX, so a concurrent
@@ -27,10 +33,66 @@ makes eventual consistency a non-issue for readers.
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+import uuid
+from typing import Callable
 
 READY_MARKER = "_INDEX_READY"
 POINTER = "CURRENT"
+
+
+def source_key(path: str) -> str:
+    """Version key of a layout built from the file at `path`: 12 hex of
+    md5(abspath:mtime). Rewriting the source moves its mtime, so the
+    next build keys a fresh version and never reads a stale one."""
+    return hashlib.md5(
+        f"{os.path.abspath(path)}:{os.path.getmtime(path)}".encode()
+    ).hexdigest()[:12]
+
+
+def is_ready(version_dir: str) -> bool:
+    """True when `version_dir` is a fully-published version."""
+    return os.path.exists(os.path.join(version_dir, READY_MARKER))
+
+
+def publish(scratch: str, dest: str) -> str:
+    """Stamp `scratch` READY and atomically rename it to `dest`; returns
+    `dest`.
+
+    The one excused failure is a concurrent publisher of the same
+    version winning the rename (`dest` is already READY; by construction
+    its content equals ours): the scratch is deleted and the winner's
+    directory returned. Any other failure (ENOSPC, EACCES, ...) deletes
+    the scratch and re-raises — the caller must never register or probe
+    a location that does not exist."""
+    try:
+        open(os.path.join(scratch, READY_MARKER), "w").close()
+        os.rename(scratch, dest)
+    except BaseException as exc:
+        shutil.rmtree(scratch, ignore_errors=True)
+        if not (isinstance(exc, OSError) and is_ready(dest)):
+            raise
+    return dest
+
+
+def build_once(dest: str, build: Callable[[str], object]) -> str:
+    """Return `dest` if it is already published; otherwise run
+    `build(scratch)` into a fresh `<dest>.building.<token>` sibling and
+    `publish` it. Concurrent builders of the same `dest` each use their
+    own scratch, so none can see or clobber another's half-built files.
+    A failing `build` leaves no scratch behind and its exception
+    propagates."""
+    if is_ready(dest):
+        return dest
+    scratch = f"{dest}.building.{uuid.uuid4().hex[:8]}"
+    try:
+        build(scratch)
+    except BaseException:
+        shutil.rmtree(scratch, ignore_errors=True)
+        raise
+    return publish(scratch, dest)
 
 
 def publish_current(root: str, version_dir: str) -> str:
@@ -40,7 +102,7 @@ def publish_current(root: str, version_dir: str) -> str:
     marker is what separates a published, immutable version from a
     .building scratch."""
     version_dir = os.path.abspath(version_dir)
-    if not os.path.exists(os.path.join(version_dir, READY_MARKER)):
+    if not is_ready(version_dir):
         raise ValueError(
             f"refusing to publish {version_dir}: no {READY_MARKER} stamp "
             "(not a fully-published index version)"
@@ -63,7 +125,7 @@ def resolve_current(root: str) -> str:
     ptr = os.path.join(root, POINTER)
     with open(ptr) as f:
         version_dir = f.read().strip()
-    if not os.path.exists(os.path.join(version_dir, READY_MARKER)):
+    if not is_ready(version_dir):
         raise ValueError(
             f"CURRENT points at {version_dir} which has no {READY_MARKER} "
             "stamp — a partial copy or a deleted version"

@@ -91,6 +91,9 @@ def test_scrub_plan_is_single_projection_no_shuffle(spark):
     # '*' markers either way
     df.collect()  # finalize THIS dataset's own AQE plan (noop write
     # would execute a separate QueryExecution)
-    executed = df._jdf.queryExecution().executedPlan().toString()
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain()  # simple mode keeps the '*(n)' codegen ids
+    executed = buf.getvalue()
     # the scrub projection must carry the whole-stage-codegen '*(n)' mark
     assert re.search(r"\*\(\d+\) Project", executed), executed
