@@ -8,7 +8,6 @@ import copy
 from typing import Any
 
 from stateflow_spark.entity.descriptors import ClassDesc
-from stateflow_spark.entity.model import EntityRef
 
 
 def init_instance(cls: type, desc: ClassDesc, args: tuple, kwargs: dict) -> tuple[str, dict]:
@@ -83,13 +82,3 @@ def invoke(
         if a not in new_state:
             new_state[a] = obj.__dict__.get(a, state[a])
     return result, new_state
-
-
-def resolve_ref_args(args: tuple) -> tuple:
-    """Entity-ref args stay as EntityRef inside state/payloads; plain values
-    pass through. (Client-side binding; reference class_ref.py:93-115.)"""
-    return tuple(a if not hasattr(a, "_ref") else a._ref for a in args)
-
-
-def make_ref(entity: str, key: str) -> EntityRef:
-    return EntityRef(entity=entity, key=key)

@@ -36,11 +36,20 @@ similarity.py::_centroids). Truncation has no ties.
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+import tempfile
+import uuid
 from dataclasses import dataclass, field
 from typing import Callable, Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from stateflow_spark import versioning
+from stateflow_spark.catalog import load, table_path
+from stateflow_spark.sources import stream_files
 
 
 @dataclass
@@ -131,38 +140,93 @@ def oracle_davg(expr: str, alias: str, scale: int = 4) -> str:
     )
 
 
-def stream_delta_src(
-    spark: SparkSession, sf_dir: str, table: str, id_col: str,
-    cache: dict, prefix: str,
+# --------------------------------------------------------------------------
+# Streaming-row harness: every streaming query re-serves its input table
+# through a file stream and runs its plan to the end of that source.
+# --------------------------------------------------------------------------
+
+# (tag, table file) -> (versioning.source_key, dir) of the one re-served
+# version this process holds for it
+_SERVED: dict[tuple[str, str], tuple[str, str]] = {}
+
+
+@atexit.register
+def _drop_served() -> None:
+    for _, src in _SERVED.values():
+        shutil.rmtree(src, ignore_errors=True)
+
+
+def served_source(
+    sf_dir: str, table: str, tag: str, write: Callable[[str], object]
 ) -> str:
-    """Materialized delta dump (rows with id % 5 == 0) used as a file
-    stream source by the stream_*_delta_classify rows, cached per
-    (abspath, mtime) of the source parquet — the SAME key the stored-
-    index caches use, so a rewrite of the source at the same path
-    re-dumps the delta instead of silently streaming stale rows against
-    a rebuilt index (round-10 ADVICE medium)."""
-    import os
-    import tempfile
-
-    from stateflow_spark.catalog import load
-
-    src_parquet = os.path.join(sf_dir, f"{table}.parquet")
-    key = (os.path.abspath(src_parquet), os.path.getmtime(src_parquet))
-    src = cache.get(key)
-    if src is None or not os.path.isdir(src):
-        # evict dumps superseded by a source rewrite (round-11 ADVICE):
-        # the (abspath, mtime) key re-dumps on rewrite, but the OLD
-        # mtime's dump dir would otherwise leak for the process lifetime
-        import shutil
-
-        for stale in [k for k in cache if k[0] == key[0] and k != key]:
-            shutil.rmtree(cache.pop(stale), ignore_errors=True)
-        src = tempfile.mkdtemp(prefix=prefix)
-        load(spark, sf_dir, table).filter(
-            F.col(id_col) % 5 == 0
-        ).write.mode("overwrite").parquet(src)
-        cache[key] = src
+    """A re-served copy of `sf_dir`'s `table`, laid out by `write(dir)`
+    into a fresh scratch dir and memoized under (`tag`, the table file's
+    `versioning.source_key`). Rewriting the file in place moves the key,
+    so the next call re-serves it and deletes the superseded version's
+    dir: a stream always replays the bytes the oracle reads. A `write`
+    that raises leaves no dir and no memo entry. Only sources are
+    memoized, never query results."""
+    path = table_path(sf_dir, table)
+    slot = (tag, os.path.abspath(path))
+    version = versioning.source_key(path)
+    held = _SERVED.get(slot)
+    if held is not None and held[0] == version and os.path.isdir(held[1]):
+        return held[1]
+    if held is not None:
+        del _SERVED[slot]
+        shutil.rmtree(held[1], ignore_errors=True)
+    src = tempfile.mkdtemp(prefix=f"served-{tag}-")
+    try:
+        write(src)
+    except BaseException:
+        shutil.rmtree(src, ignore_errors=True)
+        raise
+    _SERVED[slot] = (version, src)
     return src
+
+
+def stream_dir(
+    spark: SparkSession, src: str, max_files_per_trigger: Optional[int] = None
+) -> DataFrame:
+    """File stream over the parquet files of a served dir, with the schema
+    they carry."""
+    return stream_files(
+        spark, src, spark.read.parquet(src).schema,
+        max_files_per_trigger=max_files_per_trigger,
+    )
+
+
+def run_to_end(
+    out: DataFrame,
+    mode: str = "append",
+    foreach_batch: Optional[Callable[[DataFrame, int], None]] = None,
+) -> Optional[DataFrame]:
+    """Run the streaming plan `out` until its source is drained:
+    trigger(availableNow=True) from a scratch checkpoint that is deleted
+    once the query stops. Without `foreach_batch` the rows land in a
+    fresh memory sink whose table is returned; with it every micro-batch
+    goes to `foreach_batch(batch_df, batch_id)` and None is returned."""
+    writer = out.writeStream.outputMode(mode)
+    name = None
+    if foreach_batch is None:
+        name = f"sq_{uuid.uuid4().hex[:8]}"
+        writer = writer.format("memory").queryName(name)
+    else:
+        writer = writer.foreachBatch(foreach_batch)
+    ckpt = tempfile.mkdtemp(prefix="stream-ckpt-")
+    try:
+        query = (
+            writer.option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            query.awaitTermination()
+        finally:
+            query.stop()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+    return None if name is None else out.sparkSession.table(name)
 
 
 def scratch_output_dir(prefix: str) -> str:
@@ -170,10 +234,34 @@ def scratch_output_dir(prefix: str) -> str:
     stream sinks whose DataFrame is still lazily read by the caller (so
     an eager rmtree would race the read; round-11 ADVICE: the streaming
     classify rows leaked one out_dir per invocation)."""
-    import atexit
-    import shutil
-    import tempfile
-
     d = tempfile.mkdtemp(prefix=prefix)
     atexit.register(shutil.rmtree, d, ignore_errors=True)
     return d
+
+
+def stream_delta_classify(
+    spark: SparkSession, sf_dir: str, table: str, id_col: str,
+    classify: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """The continuous form of a delta-classify row: the delta rows of
+    `table` (`id_col` % 5 == 0) are re-served as a file stream and every
+    micro-batch is classified by `classify(batch_df)` (the batch row's
+    own body, so the two can never drift) and appended to a scratch
+    output, which is returned. Run to the end of the source the
+    processed set is the whole delta, so the output equals the batch job
+    and the same oracle gates it; per-row verdicts depend only on the
+    row and the stored layout, so that holds for any micro-batch split."""
+
+    def write_delta(src: str) -> None:
+        load(spark, sf_dir, table).filter(F.col(id_col) % 5 == 0).write.mode(
+            "overwrite"
+        ).parquet(src)
+
+    src = served_source(sf_dir, table, "delta", write_delta)
+    out_dir = scratch_output_dir(f"{table}-delta-out-")
+
+    def classify_batch(batch_df: DataFrame, _batch_id: int) -> None:
+        classify(batch_df).write.mode("append").parquet(out_dir)
+
+    run_to_end(stream_dir(spark, src), foreach_batch=classify_batch)
+    return spark.read.parquet(out_dir)

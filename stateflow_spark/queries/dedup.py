@@ -22,7 +22,7 @@ from stateflow_spark.functions.similarity import (
     sqdist_dec,
     sqdist_fxp,
 )
-from stateflow_spark.queries.common import register
+from stateflow_spark.queries.common import register, stream_delta_classify
 from stateflow_spark.storage import (
     register_bucketed,
     unpersist_local_checkpoint,
@@ -552,11 +552,6 @@ _MINHASH_ORACLE = f"""
     WHERE CAST(n_common AS DOUBLE)
              / CAST(ca.n + cb.n - n_common AS DOUBLE) >= {JACCARD_THRESHOLD}
 """
-
-
-def _h60(expr) -> F.Column:
-    """60-bit engine-neutral base hash: first 15 hex chars of md5."""
-    return F.conv(F.substring(F.md5(expr), 1, 15), 16, 10).cast("bigint")
 
 
 @register(
@@ -2636,8 +2631,8 @@ _MH_CLASSIFY_TAIL_SQL = f"""
 
 
 # shared by the batch maintenance row and its streaming leg (the stream's
-# availableNow union over micro-batches equals the batch job row-for-row,
-# so ONE oracle hash-gates both)
+# union over micro-batches, run to the end of its source, equals the batch
+# job row-for-row, so ONE oracle hash-gates both)
 _MH_MAINT_ORACLE = f"""
     WITH {_MH_STACKED_SQL},
     cand AS (
@@ -3095,9 +3090,6 @@ def dedup_minhash_post_compact_classify(
     return _mh_classify_delta(spark, delta_docs, tbl_c)
 
 
-_MH_STREAM_SRC: dict[tuple[str, float], str] = {}
-
-
 @register(
     "stream_minhash_delta_classify",
     oracle=_MH_MAINT_ORACLE,
@@ -3115,44 +3107,15 @@ def stream_minhash_delta_classify(
     two can never drift. foreachBatch because the classify body holds a
     per-doc best-match window over the probe join — beyond what a single
     streaming plan may hold; per-batch batch-plans are exactly how a
-    continuous dedup-ingest pipeline runs this. Under availableNow the
-    processed set is the whole delta, so the append sink equals the
-    batch job and the SAME oracle hash-gates it. Per-doc classification
-    depends only on that doc + the stored index, so the equality holds
-    for ANY micro-batch partitioning of the delta (batch-boundary
-    independence is pinned by a maxFilesPerTrigger=1 test)."""
-    import shutil
-    import tempfile
-
-    from stateflow_spark.queries.common import (
-        scratch_output_dir as stream_scratch_out,
-    )
-    from stateflow_spark.queries.common import stream_delta_src
-
+    continuous dedup-ingest pipeline runs this. Run to the end of the
+    source, the processed set is the whole delta, so the append sink
+    equals the batch job and the SAME oracle hash-gates it. Per-doc
+    classification depends only on that doc + the stored index, so the
+    equality holds for ANY micro-batch partitioning of the delta
+    (batch-boundary independence is pinned by a maxFilesPerTrigger=1
+    test)."""
     tbl = _minhash_index_table(spark, sf_dir)
-    src = stream_delta_src(
-        spark, sf_dir, "documents", "doc_id", _MH_STREAM_SRC,
-        "mh-delta-src-",
+    return stream_delta_classify(
+        spark, sf_dir, "documents", "doc_id",
+        lambda batch_df: _mh_classify_delta(spark, batch_df, tbl),
     )
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
-    out_dir = stream_scratch_out("mh-delta-out-")
-    ckpt = tempfile.mkdtemp(prefix="mh-delta-ckpt-")
-
-    def classify_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        _mh_classify_delta(spark, batch_df, tbl).write.mode(
-            "append"
-        ).parquet(out_dir)
-
-    query = (
-        stream.writeStream.foreachBatch(classify_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        query.awaitTermination()
-    finally:
-        query.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.read.parquet(out_dir)

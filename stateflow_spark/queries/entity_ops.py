@@ -19,7 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stateflow_spark.catalog import load, table_path
-from stateflow_spark.queries.common import register
+from stateflow_spark.queries.common import register, run_to_end, served_source
+from stateflow_spark.sources import stream_files
 
 
 @register(
@@ -188,8 +189,6 @@ def entity_stateful_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-key state is three scalars regardless of event count, so state
     size tracks key cardinality, not data volume."""
     import os
-    import tempfile
-    import uuid as _uuid
 
     import pandas as pd  # noqa: F401 (worker-side)
     from pyspark.sql.streaming.state import GroupStateTimeout
@@ -264,21 +263,21 @@ def entity_stateful_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the file source wants a directory; serve the single events parquet
     # through a symlinked temp dir (no data copy). One file → everything in
     # ONE micro-batch, so append mode emits exactly one row per key
-    src_dir = tempfile.mkdtemp(prefix="stateful-replay-src-")
-    os.symlink(
-        table_path(sf_dir, "events"), os.path.join(src_dir, "events.parquet")
-    )
+    def write(src: str) -> None:
+        os.symlink(
+            table_path(sf_dir, "events"), os.path.join(src, "events.parquet")
+        )
+
     stream = (
-        spark.readStream.schema(in_schema)
-        .parquet(src_dir)
+        stream_files(
+            spark, served_source(sf_dir, "events", "symlink", write), in_schema
+        )
         .groupBy("user_id")
         .applyInPandasWithState(
             fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
         )
     )
-    name = f"entity_stateful_replay_{_uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="stateful-replay-ckpt-")
-    # One-shot availableNow replay over a BOUNDED table: per-key state is
+    # One-shot replay to the end of a BOUNDED table: per-key state is
     # three scalars, so total state is key-cardinality-sized and fits
     # executor memory at any corpus scale — the in-memory HDFS-backed
     # provider is the right store here, where the session's RocksDB
@@ -287,7 +286,7 @@ def entity_stateful_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per micro-batch for state that never outgrows a hash map; measured
     # interleaved A/B 2.47 → 2.03 s best at sf0.1). The provider is
     # pinned per-QUERY by the checkpoint at first start; restore the
-    # session default right after start so nothing leaks to later
+    # session default when the run ends so nothing leaks to later
     # queries. SINGLE-THREADED ASSUMPTION (r12 ADVICE): the set/restore
     # window mutates session-global conf, so a streaming query started
     # CONCURRENTLY from another driver thread inside this window would
@@ -303,29 +302,12 @@ def entity_stateful_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "HDFSBackedStateStoreProvider",
     )
     try:
-        query = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
+        return run_to_end(stream)
     finally:
         if _prev is None:
             spark.conf.unset(_pkey)
         else:
             spark.conf.set(_pkey, _prev)
-    try:
-        query.awaitTermination()
-    finally:
-        query.stop()
-        # the memory sink holds results in driver memory; the stream's
-        # scratch dirs are no longer needed
-        import shutil
-
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(src_dir, ignore_errors=True)
-    return spark.table(name)
 
 
 @register(

@@ -28,7 +28,7 @@ from stateflow_spark.functions.similarity import (
     norm2_dec,
     sqdist_dec,
 )
-from stateflow_spark.queries.common import register
+from stateflow_spark.queries.common import register, stream_delta_classify
 from stateflow_spark.versioning import build_once, is_ready, publish, source_key
 
 _EX_SQL = """
@@ -2859,9 +2859,6 @@ def _ivf_classify_delta(
     )
 
 
-_IVF_STREAM_SRC: dict[tuple[str, float], str] = {}
-
-
 @register(
     "stream_ivf_delta_classify",
     oracle=_IVF_MAINT_ORACLE,
@@ -2877,60 +2874,40 @@ def stream_ivf_delta_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan because the routing argmins are per-key windows/aggregates —
     three chained stateful operators, beyond what a single streaming
     query may hold; per-batch batch-plans are exactly how production
-    runs this (the upsert_parquet_sink pattern). Under availableNow the
-    processed set is the whole delta, so the append sink equals the
-    batch job and the SAME oracle hash-gates it. Per-row classification
-    is batch-independent, so the equality holds for ANY micro-batch
-    partitioning of the delta — a batch-boundary dependence would be a
-    bug this gate catches."""
-    import shutil
-    import tempfile
-
-    from stateflow_spark.queries.common import (
-        scratch_output_dir as stream_scratch_out,
-    )
-    from stateflow_spark.queries.common import stream_delta_src
+    runs this (the upsert_parquet_sink pattern). Run to the end of the
+    source, the processed set is the whole delta, so the append sink
+    equals the batch job and the SAME oracle hash-gates it. Per-row
+    classification is batch-independent, so the equality holds for ANY
+    micro-batch partitioning of the delta — a batch-boundary dependence
+    would be a bug this gate catches."""
+    from stateflow_spark.storage import unpersist_local_checkpoint
 
     base = _ivf_index_dir(spark, sf_dir)
-    src = stream_delta_src(
-        spark, sf_dir, "embeddings", "vec_id", _IVF_STREAM_SRC,
-        "ivf-delta-src-",
-    )
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
-    out_dir = stream_scratch_out("ivf-delta-out-")
-    ckpt = tempfile.mkdtemp(prefix="ivf-delta-ckpt-")
+    ckpts: list[DataFrame] = []
 
-    def classify_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        from stateflow_spark.storage import unpersist_local_checkpoint
+    def release() -> None:
+        # the routed-assignment checkpoints of a batch whose output is on
+        # disk: without this an always-on stream accumulates delta-sized
+        # blocks forever
+        while ckpts:
+            unpersist_local_checkpoint(ckpts.pop())
 
+    def classify(batch_df: DataFrame) -> DataFrame:
+        release()
         delta = _pin_n2(
             batch_df.select(
                 "vec_id",
                 F.col("embedding").cast("array<double>").alias("v"),
             ).repartition(stage_tasks(spark), "vec_id")
         ).withColumnRenamed("n2", "dn2")
-        ckpts: list[DataFrame] = []
-        _ivf_classify_delta(
-            spark, delta, base, ckpts=ckpts
-        ).write.mode("append").parquet(out_dir)
-        # release the per-batch routed-assignment checkpoint: without this
-        # an always-on stream accumulates delta-sized blocks forever
-        for df in ckpts:
-            unpersist_local_checkpoint(df)
+        return _ivf_classify_delta(spark, delta, base, ckpts=ckpts)
 
-    query = (
-        stream.writeStream.foreachBatch(classify_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
     try:
-        query.awaitTermination()
+        return stream_delta_classify(
+            spark, sf_dir, "embeddings", "vec_id", classify
+        )
     finally:
-        query.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.read.parquet(out_dir)
+        release()
 
 
 # Registered widened-probe knobs (round-11 VERDICT #1): (2,2,2) is the

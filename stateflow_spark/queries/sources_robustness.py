@@ -15,26 +15,21 @@ hash-gated."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from stateflow_spark.catalog import load
-from stateflow_spark.queries.common import register
-
-# one two-epoch copy of events per (process, sf_dir)
-_EPOCH_CACHE: dict[str, str] = {}
+from stateflow_spark.queries.common import register, served_source
 
 
 def _two_epoch_dir(spark: SparkSession, sf_dir: str) -> str:
     """events split into two parquet epochs with EVOLVED schemas:
     epoch 0 (event_id even) predates the `value` column; epoch 1
     (event_id odd) carries `value` plus a new `source_tag` column."""
-    src = _EPOCH_CACHE.get(sf_dir)
-    if src is None or not os.path.isdir(src):
-        src = tempfile.mkdtemp(prefix="schema-epochs-")
+
+    def write(src: str) -> None:
         e = load(spark, sf_dir, "events")
         (
             e.filter(F.col("event_id") % 2 == 0)
@@ -55,8 +50,8 @@ def _two_epoch_dir(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(os.path.join(src, "epoch=1"))
         )
-        _EPOCH_CACHE[sf_dir] = src
-    return src
+
+    return served_source(sf_dir, "events", "epochs", write)
 
 
 @register(

@@ -4,10 +4,10 @@ watermarks/event-time windows, stream-stream join).
 The builders under test are the actual Structured Streaming ones
 (streaming/windows.py) — each query here re-serves the events table
 through a real file stream, runs the streaming plan to completion into a
-memory sink (availableNow), and returns the sink table. The oracle is the
-batch SQL: stream/batch agreement is the reference's own stateful-operator
-contract, and here it is checked by the driver's value-hash gate, not just
-by the local parity tests.
+memory sink (common.run_to_end), and returns the sink table. The oracle
+is the batch SQL: stream/batch agreement is the reference's own
+stateful-operator contract, and here it is checked by the driver's
+value-hash gate, not just by the local parity tests.
 
 Output modes: the window aggregations run in COMPLETE mode so the final
 sink holds every window (append mode would hold back open tail windows
@@ -23,50 +23,28 @@ underlying plans are identical; only the sink emission policy differs.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 
 from stateflow_spark.catalog import load
 from stateflow_spark.queries import events as _events  # registers batch twins
-from stateflow_spark.queries.common import REGISTRY, register
+from stateflow_spark.queries.common import (
+    REGISTRY,
+    register,
+    run_to_end,
+    served_source,
+    stream_dir,
+)
 from stateflow_spark.streaming import windows as sw
 
-# one re-served copy of the events table per (process, sf_dir): the write
-# normalizes ts through catalog.load, so the stream schema is watermarkable
-_SRC_CACHE: dict[str, str] = {}
 
-
-def _events_stream(spark: SparkSession, sf_dir: str):
-    src = _SRC_CACHE.get(sf_dir)
-    if src is None or not os.path.isdir(src):
-        src = tempfile.mkdtemp(prefix="stream-events-src-")
+def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events table re-served through a file stream: the write
+    normalizes ts through catalog.load, so the stream schema is
+    watermarkable."""
+    def write(src: str) -> None:
         load(spark, sf_dir, "events").write.mode("overwrite").parquet(src)
-        _SRC_CACHE[sf_dir] = src
-    schema = spark.read.parquet(src).schema
-    return spark.readStream.schema(schema).parquet(src)
 
-
-def _run_stream(spark: SparkSession, out: DataFrame, mode: str) -> DataFrame:
-    name = f"sq_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="stream-ckpt-")
-    query = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        query.awaitTermination()
-    finally:
-        query.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+    return stream_dir(spark, served_source(sf_dir, "events", "events", write))
 
 
 @register(
@@ -77,9 +55,7 @@ def _run_stream(spark: SparkSession, out: DataFrame, mode: str) -> DataFrame:
 def stream_hourly_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """streaming/windows.py:hourly_tumbling run as a real stream; must
     value-hash-match the batch twin's DuckDB oracle."""
-    return _run_stream(
-        spark, sw.hourly_tumbling(_events_stream(spark, sf_dir)), "complete"
-    )
+    return run_to_end(sw.hourly_tumbling(_events_stream(spark, sf_dir)), "complete")
 
 
 @register(
@@ -88,9 +64,7 @@ def stream_hourly_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "events", "windows"),
 )
 def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _run_stream(
-        spark, sw.sliding_counts(_events_stream(spark, sf_dir)), "complete"
-    )
+    return run_to_end(sw.sliding_counts(_events_stream(spark, sf_dir)), "complete")
 
 
 @register(
@@ -99,9 +73,7 @@ def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "events", "windows"),
 )
 def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _run_stream(
-        spark, sw.session_windows(_events_stream(spark, sf_dir)), "complete"
-    )
+    return run_to_end(sw.session_windows(_events_stream(spark, sf_dir)), "complete")
 
 
 @register(
@@ -125,7 +97,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     produces must be emitted."""
     s1 = _events_stream(spark, sf_dir)
     s2 = _events_stream(spark, sf_dir)
-    return _run_stream(spark, sw.stream_stream_join(s1, s2), "append")
+    return run_to_end(sw.stream_stream_join(s1, s2), "append")
 
 
 # the window aggregations share their batch twins' oracles verbatim — one
@@ -166,7 +138,7 @@ def stream_countmin_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("j", "bucket")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    return _run_stream(spark, counters, "complete")
+    return run_to_end(counters, "complete")
 
 
 def _cm_counters_oracle() -> str:
@@ -233,7 +205,7 @@ def stream_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     evicting (state leak) or evicted early (wrong nulls) both fail."""
     s1 = _events_stream(spark, sf_dir)
     s2 = _events_stream(spark, sf_dir)
-    return _run_stream(spark, sw.stream_stream_join_outer(s1, s2), "append")
+    return run_to_end(sw.stream_stream_join_outer(s1, s2), "append")
 
 
 @register(
@@ -257,4 +229,4 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream."""
     stream = _events_stream(spark, sf_dir)
     dim = load(spark, sf_dir, "customer")
-    return _run_stream(spark, sw.stream_static_enrich(stream, dim), "complete")
+    return run_to_end(sw.stream_static_enrich(stream, dim), "complete")

@@ -52,11 +52,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stateflow_spark.catalog import load
-from stateflow_spark.queries.common import dsum, register
-
-# NOTE: streaming_events._run_stream is imported lazily inside the query —
-# a module-level import would register the whole events family ahead of
-# the r03-stamped families this round's prefix must refresh first.
+from stateflow_spark.queries.common import (
+    dsum,
+    register,
+    run_to_end,
+    scratch_output_dir,
+    served_source,
+    stream_dir,
+)
 
 
 def _write_single_file(df, dst: str, mtime: int) -> None:
@@ -74,11 +77,15 @@ def _write_single_file(df, dst: str, mtime: int) -> None:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-# one two-file re-serve of the events table per (process, sf_dir)
-_SRC_CACHE: dict[str, str] = {}
-
 _LATE_HOURS = 3
 _WM_DELAY = "30 minutes"
+
+
+def _span_hours(spark: SparkSession, sf_dir: str) -> int:
+    """The events table's event-time span in hours, plus slack: a
+    watermark this wide evicts no state before the source is drained."""
+    lo, hi = load(spark, sf_dir, "events").agg(F.min("ts"), F.max("ts")).first()
+    return int((hi - lo).total_seconds() // 3600) + 2
 
 
 def _late_pred(max_ts):
@@ -95,26 +102,24 @@ def _three_file_src(spark: SparkSession, sf_dir: str) -> str:
     deterministic. The global max ts is in file 00 or 01 (never late), so
     the eviction watermark is max_ts − 30 min from batch 1 onward and the
     late-filter watermark reaches that value by batch 2."""
-    src = _SRC_CACHE.get(sf_dir)
-    if src is not None and os.path.isdir(src):
-        return src
-    src = tempfile.mkdtemp(prefix="stream-late-src-")
-    e = load(spark, sf_dir, "events")
-    max_ts = e.agg(F.max("ts")).first()[0]
-    late = _late_pred(max_ts)
-    filler = ~late & (F.col("user_id") % 7 == 5)
-    for i, (tag, pred, mtime) in enumerate(
-        (
-            ("ontime", ~late & ~(F.col("user_id") % 7 == 5), 1000),
-            ("filler", filler, 2000),
-            ("late", late, 3000),
-        )
-    ):
-        _write_single_file(
-            e.filter(pred), os.path.join(src, f"{i:02d}-{tag}.parquet"), mtime
-        )
-    _SRC_CACHE[sf_dir] = src
-    return src
+
+    def write(src: str) -> None:
+        e = load(spark, sf_dir, "events")
+        late = _late_pred(e.agg(F.max("ts")).first()[0])
+        filler = ~late & (F.col("user_id") % 7 == 5)
+        for i, (tag, pred, mtime) in enumerate(
+            (
+                ("ontime", ~late & ~(F.col("user_id") % 7 == 5), 1000),
+                ("filler", filler, 2000),
+                ("late", late, 3000),
+            )
+        ):
+            _write_single_file(
+                e.filter(pred), os.path.join(src, f"{i:02d}-{tag}.parquet"),
+                mtime,
+            )
+
+    return served_source(sf_dir, "events", "late", write)
 
 
 @register(
@@ -145,17 +150,9 @@ def stream_append_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     over a deterministic on-time/filler/late micro-batch schedule; the
     sink holds only watermark-closed windows, computed without the
     dropped late rows."""
-    from stateflow_spark.queries.streaming_events import _run_stream
-
-    src = _three_file_src(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
     agg = (
-        stream.withWatermark("ts", _WM_DELAY)
+        stream_dir(spark, _three_file_src(spark, sf_dir), max_files_per_trigger=1)
+        .withWatermark("ts", _WM_DELAY)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -169,29 +166,23 @@ def stream_append_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    return _run_stream(spark, agg, "append")
-
-
-# one two-file replay re-serve of the events table per (process, sf_dir)
-_REPLAY_CACHE: dict[str, str] = {}
+    return run_to_end(agg, "append")
 
 
 def _replay_src(spark: SparkSession, sf_dir: str) -> str:
     """Serve the events table TWICE (00-original, 01-replay with a later
     mtime): a deterministic at-least-once redelivery — every event is
     delivered in batch 0 and redelivered verbatim in batch 1."""
-    src = _REPLAY_CACHE.get(sf_dir)
-    if src is not None and os.path.isdir(src):
-        return src
-    src = tempfile.mkdtemp(prefix="stream-replay-src-")
-    first = os.path.join(src, "00-original.parquet")
-    _write_single_file(load(spark, sf_dir, "events"), first, 1000)
-    # the replay must be the SAME BYTES, not a re-write of the same rows
-    replay = os.path.join(src, "01-replay.parquet")
-    shutil.copyfile(first, replay)
-    os.utime(replay, (2000, 2000))
-    _REPLAY_CACHE[sf_dir] = src
-    return src
+
+    def write(src: str) -> None:
+        first = os.path.join(src, "00-original.parquet")
+        _write_single_file(load(spark, sf_dir, "events"), first, 1000)
+        # the replay must be the SAME BYTES, not a re-write of the same rows
+        replay = os.path.join(src, "01-replay.parquet")
+        shutil.copyfile(first, replay)
+        os.utime(replay, (2000, 2000))
+
+    return served_source(sf_dir, "events", "replay", write)
 
 
 @register(
@@ -218,28 +209,14 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     not O(corpus). The unbounded-state alternative (plain
     dropDuplicates) never evicts and dies at 100 TB; this form is the
     production posture."""
-    from stateflow_spark.queries.streaming_events import _run_stream
-
     src = _replay_src(spark, sf_dir)
-    lo, hi = load(spark, sf_dir, "events").agg(
-        F.min("ts"), F.max("ts")
-    ).first()
-    span_h = int((hi - lo).total_seconds() // 3600) + 2
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
     dd = (
-        stream.withWatermark("ts", f"{span_h} hours")
+        stream_dir(spark, src, max_files_per_trigger=1)
+        .withWatermark("ts", f"{_span_hours(spark, sf_dir)} hours")
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "user_id", "event_type", "ts", "value")
     )
-    return _run_stream(spark, dd, "append")
-
-
-_ROLLUP_CACHE: dict[str, str] = {}
+    return run_to_end(dd, "append")
 
 
 @register(
@@ -265,49 +242,25 @@ def stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     this row gates the SINK; late-data policy is stream_append_late_drop's
     job. Scale: each trigger's merge cost is O(stored + changed groups),
     independent of raw event volume (sinks.py docstring)."""
-    import uuid
-
     from stateflow_spark.streaming.sinks import upsert_parquet_sink
 
-    table = _ROLLUP_CACHE.get(sf_dir)
-    if table is None or not os.path.isdir(table):
-        base = tempfile.mkdtemp(prefix="stream-rollup-")
-        src = os.path.join(base, "src")
+    def write(src: str) -> None:
         e = load(spark, sf_dir, "events")
         e.repartition(3).write.mode("overwrite").parquet(src)
-        table = os.path.join(base, "rollup")
-        lo, hi = e.agg(F.min("ts"), F.max("ts")).first()
-        span_h = int((hi - lo).total_seconds() // 3600) + 2
-        stream = (
-            spark.readStream.schema(spark.read.parquet(src).schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+
+    src = served_source(sf_dir, "events", "rollup", write)
+    agg = (
+        stream_dir(spark, src, max_files_per_trigger=1)
+        .withWatermark("ts", f"{_span_hours(spark, sf_dir)} hours")
+        .groupBy(F.date_trunc("hour", "ts").alias("hour"), "event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            dsum("value", "total_value", 4),
         )
-        agg = (
-            stream.withWatermark("ts", f"{span_h} hours")
-            .groupBy(F.date_trunc("hour", "ts").alias("hour"), "event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                dsum("value", "total_value", 4),
-            )
-        )
-        q = (
-            agg.writeStream.outputMode("update")
-            .foreachBatch(upsert_parquet_sink(table, ["hour", "event_type"]))
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .queryName(f"rollup_{uuid.uuid4().hex[:8]}")
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-        _ROLLUP_CACHE[sf_dir] = table
+    )
+    table = os.path.join(scratch_output_dir("stream-rollup-"), "rollup")
+    run_to_end(agg, "update", upsert_parquet_sink(table, ["hour", "event_type"]))
     return spark.read.parquet(table)
-
-
-_PHASE_CACHE: dict[str, str] = {}
 
 
 def _phase_src(spark: SparkSession, sf_dir: str) -> str:
@@ -315,25 +268,23 @@ def _phase_src(spark: SparkSession, sf_dir: str) -> str:
     with ascending mtimes: maxFilesPerTrigger=1 then replays event time
     in coarse order across ≥3 micro-batches, so per-key state seams span
     real batch boundaries."""
-    src = _PHASE_CACHE.get(sf_dir)
-    if src is not None and os.path.isdir(src):
-        return src
-    src = tempfile.mkdtemp(prefix="stream-phase-src-")
-    e = load(spark, sf_dir, "events")
-    lo, hi = e.agg(F.min("ts"), F.max("ts")).first()
-    b1 = lo + (hi - lo) / 3
-    b2 = lo + 2 * (hi - lo) / 3
-    phases = [
-        e.filter(F.col("ts") < F.lit(b1)),
-        e.filter((F.col("ts") >= F.lit(b1)) & (F.col("ts") < F.lit(b2))),
-        e.filter(F.col("ts") >= F.lit(b2)),
-    ]
-    for i, p in enumerate(phases):
-        _write_single_file(
-            p, os.path.join(src, f"{i:02d}-phase.parquet"), 1000 * (i + 1)
-        )
-    _PHASE_CACHE[sf_dir] = src
-    return src
+
+    def write(src: str) -> None:
+        e = load(spark, sf_dir, "events")
+        lo, hi = e.agg(F.min("ts"), F.max("ts")).first()
+        b1 = lo + (hi - lo) / 3
+        b2 = lo + 2 * (hi - lo) / 3
+        phases = [
+            e.filter(F.col("ts") < F.lit(b1)),
+            e.filter((F.col("ts") >= F.lit(b1)) & (F.col("ts") < F.lit(b2))),
+            e.filter(F.col("ts") >= F.lit(b2)),
+        ]
+        for i, p in enumerate(phases):
+            _write_single_file(
+                p, os.path.join(src, f"{i:02d}-phase.parquet"), 1000 * (i + 1)
+            )
+
+    return served_source(sf_dir, "events", "phase", write)
 
 
 _RUNS_STATE = (
@@ -425,15 +376,7 @@ def stream_state_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     analytics operator rather than an entity method."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from stateflow_spark.queries.streaming_events import _run_stream
-
-    src = _phase_src(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
+    stream = stream_dir(spark, _phase_src(spark, sf_dir), max_files_per_trigger=1)
     runs = stream.groupBy("user_id").applyInPandasWithState(
         _runs_fn,
         outputStructType=_RUNS_OUT,
@@ -441,13 +384,12 @@ def stream_state_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return _run_stream(spark, runs, "append")
+    return run_to_end(runs, "append")
 
 
 # ---------------------------------------------------------------------------
 # Incremental SCD-2 maintenance (streaming MERGE into the dimension table)
 # ---------------------------------------------------------------------------
-_SCD2_CACHE: dict[str, str] = {}
 
 
 def _scd2_merge_fn(table: str):
@@ -527,13 +469,8 @@ def stream_scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     verbatim. At 100 TB the dimension table is custkey-partitioned and
     the recompute prunes to touched partitions; history length never
     enters the per-trigger cost."""
-    import uuid
 
-    table = _SCD2_CACHE.get(sf_dir)
-    if table is None or not os.path.isdir(table):
-        base = tempfile.mkdtemp(prefix="stream-scd2-")
-        src = os.path.join(base, "src")
-        os.makedirs(src)
+    def write(src: str) -> None:
         o = load(spark, sf_dir, "orders").select(
             "o_custkey", "o_orderdate", "o_orderkey", "o_orderpriority"
         )
@@ -552,25 +489,11 @@ def stream_scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                 os.path.join(src, f"{i:02d}-{tag}.parquet"),
                 mtime,
             )
-        table = os.path.join(base, "scd2")
-        stream = (
-            spark.readStream.schema(spark.read.parquet(src).schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(_scd2_merge_fn(table))
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .queryName(f"scd2_{uuid.uuid4().hex[:8]}")
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-        _SCD2_CACHE[sf_dir] = table
+
+    src = served_source(sf_dir, "orders", "scd2", write)
+    table = os.path.join(scratch_output_dir("stream-scd2-"), "scd2")
+    stream = stream_dir(spark, src, max_files_per_trigger=1)
+    run_to_end(stream, "append", _scd2_merge_fn(table))
     return spark.read.parquet(table).select(
         "custkey", "version_nr", "attr_value", "eff_from", "eff_to",
         "is_current",

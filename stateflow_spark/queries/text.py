@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stateflow_spark.catalog import load, stage_tasks, table_path
-from stateflow_spark.queries.common import register
+from stateflow_spark.queries.common import register, stream_delta_classify
 from stateflow_spark.storage import register_bucketed, write_bucketed_files
 from stateflow_spark.versioning import build_once, source_key
 
@@ -2059,7 +2059,6 @@ def _boiler_assemble(base: DataFrame, occ2: DataFrame) -> DataFrame:
 
 
 _BOILER_IDX_BUCKETS = 16
-_BOILER_STREAM_SRC: dict[tuple[str, float], str] = {}
 
 
 def _span_count_table(spark: SparkSession, sf_dir: str) -> str:
@@ -2232,42 +2231,13 @@ def stream_boilerplate_delta_classify(
     the two can never drift. foreachBatch because the classify body
     holds per-doc aggregation + the stored-table join; per-batch
     batch-plans are exactly how a continuous ingest pipeline runs this.
-    Under availableNow the processed set is the whole delta, so the
-    append sink equals the batch job and the SAME oracle hash-gates it;
-    per-doc verdicts depend only on the doc + the stored counts, so the
-    equality holds for ANY micro-batch partitioning of the delta."""
-    import shutil
-    import tempfile
-
-    from stateflow_spark.queries.common import (
-        scratch_output_dir as stream_scratch_out,
-    )
-    from stateflow_spark.queries.common import stream_delta_src
-
+    Run to the end of the source, the processed set is the whole delta,
+    so the append sink equals the batch job and the SAME oracle
+    hash-gates it; per-doc verdicts depend only on the doc + the stored
+    counts, so the equality holds for ANY micro-batch partitioning of
+    the delta."""
     tbl = _span_count_table(spark, sf_dir)
-    src = stream_delta_src(
-        spark, sf_dir, "documents", "doc_id", _BOILER_STREAM_SRC,
-        "boiler-delta-src-",
+    return stream_delta_classify(
+        spark, sf_dir, "documents", "doc_id",
+        lambda batch_df: _boiler_classify_delta(spark, batch_df, tbl),
     )
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
-    out_dir = stream_scratch_out("boiler-delta-out-")
-    ckpt = tempfile.mkdtemp(prefix="boiler-delta-ckpt-")
-
-    def classify_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        _boiler_classify_delta(spark, batch_df, tbl).write.mode(
-            "append"
-        ).parquet(out_dir)
-
-    query = (
-        stream.writeStream.foreachBatch(classify_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        query.awaitTermination()
-    finally:
-        query.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.read.parquet(out_dir)

@@ -1,5 +1,5 @@
 """Source/sink surface beyond the parquet catalog (SURVEY.md §2.C row 1 and
-§2.A ops #1/#22).
+§2.A op #1; the Kafka egress, op #22, is streaming/kafka.py's sink).
 
 The reference's only source/sink is Kafka (topics ``client_request`` /
 ``internal`` / ``client_reply`` — stateflow/runtime/beam_runtime.py:137-153,
@@ -101,15 +101,4 @@ def kafka_source(
         .option("subscribe", topics)
         .option("startingOffsets", starting_offsets)
         .load()
-    )
-
-
-def kafka_sink(df, brokers: str, topic: str, checkpoint: str):
-    """The production egress (reference op #22): serialized rows to a topic.
-    ``df`` must have ``key``/``value`` binary or string columns."""
-    return (
-        df.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint)
     )

@@ -55,13 +55,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from stateflow_spark.entity import operator
 from stateflow_spark.entity.keyed import (
     OUT_COLUMNS,
     apply_key_events,
     dead_letter_record,
 )
-from stateflow_spark.entity.model import EntityRef, Event
+from stateflow_spark.entity.model import Event
 from stateflow_spark.entity.registry import (
     install_worker_registry,
     serialize_registry,
@@ -456,12 +455,3 @@ class StreamingEntityEngine:
         if self.query is not None:
             self.query.stop()
             self.query = None
-
-
-def make_client_events(
-    creates: list[tuple[str, tuple]] = (),
-    invokes: list[tuple[EntityRef, str, tuple]] = (),
-) -> list[Event]:
-    evs = [operator.make_init_event(c, a) for c, a in creates]
-    evs += [operator.make_invoke_event(r, m, a) for r, m, a in invokes]
-    return evs

@@ -724,6 +724,7 @@ def test_minhash_compaction_bounds_hot_posting_keeps_recall(
     # a HARDLINK of the source file (same inode: never rewritten, never
     # even opened), only buckets containing a hot key got fresh files,
     # and the published dir is atomic (no .building residue)
+    import glob
     import os
     import re
 
@@ -768,7 +769,5 @@ def test_minhash_compaction_bounds_hot_posting_keeps_recall(
             assert sorted(inos) == sorted(src_b[b]), b  # hardlinked
     # every cool source bucket survives into the compacted table
     assert set(src_b) - hot_ids <= set(out_b)
-    assert not any(
-        d.endswith(".building")
-        for d in os.listdir(os.path.dirname(out_loc))
-    )
+    # scratch dirs are named <dest>.building.<token>
+    assert not glob.glob(out_loc + ".building*")

@@ -557,6 +557,7 @@ def test_ivf_apply_resplit_versioned_publish(spark, tmp_path):
     (zero data copy), and with an explicit index_dir every read flows
     from that dir — the session-snapshot resolver is never consulted."""
     import os
+    import glob
     import shutil
 
     import stateflow_spark.queries.similarity as S
@@ -611,9 +612,8 @@ def test_ivf_apply_resplit_versioned_publish(spark, tmp_path):
     # fully-new: the published version is complete and atomic
     assert applied != src and os.path.isdir(applied)
     assert os.path.exists(os.path.join(applied, "_INDEX_READY"))
-    assert not any(
-        d.endswith(".building") for d in os.listdir(os.path.dirname(applied))
-    )
+    # scratch dirs are named <dest>.building.<token>
+    assert not glob.glob(applied + ".building*")
     # unflagged cid=2 files are hardlinks of the source's (zero copy);
     # flagged cid=1 was written fresh
     def inodes(root, cid):

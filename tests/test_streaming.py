@@ -611,8 +611,9 @@ def test_stream_state_runs_seams_across_micro_batches(spark, tmp_path):
         for r in rows
     }
     assert got == {"A": (4, 0, 50), "B": (2, 55, 58)}  # C stays open
-    # and the harness really produced 3 separate micro-batch files
-    src = streaming_late._PHASE_CACHE[str(tmp_path)]
+    # and the harness really produced 3 separate micro-batch files (the
+    # served-source memo hands back the dir the row streamed)
+    src = streaming_late._phase_src(spark, str(tmp_path))
     import os
     assert len([f for f in os.listdir(src) if f.endswith(".parquet")]) == 3
 

@@ -90,6 +90,7 @@ def soak_leg(spark, leg: str, n_batches: int) -> dict:
     import pyspark.sql.functions as F
 
     from stateflow_spark.catalog import load
+    from stateflow_spark.sources import stream_files
 
     if leg == "ivf":
         from stateflow_spark.queries.similarity import (
@@ -187,11 +188,7 @@ def soak_leg(spark, leg: str, n_batches: int) -> dict:
         batch_stats.append((batch_id, time.perf_counter() - t0, n))
         stop_flag["consumed"] = len(batch_stats)
 
-    stream = (
-        spark.readStream.schema(rschema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
+    stream = stream_files(spark, src_dir, rschema, max_files_per_trigger=1)
     query = (
         stream.writeStream.foreachBatch(handle_batch)
         .option("checkpointLocation", ckpt)
