@@ -6,13 +6,20 @@ The reference intercepts class construction with a metaclass and turns
 attribute access / method calls into events completed by a Kafka consumer
 thread. Here the same surface sits over a pluggable ``Transport``:
 
-- LocalTransport      — synchronous in-process execution (reference
-                        LocalRuntime analog)
-- SuperstepTransport  — batches events; a flush runs them as one
-                        distributed SuperstepRuntime job (state persists
-                        across flushes)
-- StreamingTransport  — sends into a running StreamingEntityEngine; a
-                        flush drains the continuous query
+- LocalTransport      — in-process execution (reference LocalRuntime
+                        analog)
+- SuperstepTransport  — runs a drain's events as one distributed
+                        SuperstepRuntime job (state persists across drains)
+- StreamingTransport  — writes a drain's events as one input file of a
+                        running StreamingEntityEngine and drains it
+- KafkaTransport      — produces a drain's events and consumes replies
+
+The Client alone queues calls and settles them; a transport is one
+``run(events) -> {event_id: reply}`` call. A flush takes the whole queue,
+runs it, and completes every future it took, with its reply or with the
+error that kept it from one. Calls queued while a drain runs wait for the
+next drain, so one caller's flush never fails another caller's call (the
+reference completes each future by request id the same way).
 
 Futures complete at flush time (micro-batch semantics); ``Future.get()``
 flushes implicitly, so sequential client code reads naturally while
@@ -22,6 +29,7 @@ pattern, since per-event round trips are the reference's defining cost
 
 from __future__ import annotations
 
+import threading
 from typing import Any, Optional
 
 from stateflow_spark.entity import operator
@@ -32,23 +40,22 @@ from stateflow_spark.entity.registry import get_entity_type
 class Future:
     """Completes when its reply arrives (reference StateflowFuture,
     client/future.py:31-124): ERROR → RuntimeError, KEY_NOT_FOUND →
-    KeyError, else the unwrapped result."""
+    KeyError, else the unwrapped result. A call its drain could not
+    answer raises that drain's error instead."""
 
     def __init__(self, client: "Client", event: Event):
         self._client = client
         self._event = event
         self._reply: Optional[Event] = None
+        self._error: Optional[BaseException] = None
 
     @property
     def event_id(self) -> str:
         return self._event.event_id
 
-    def complete(self, reply: Event) -> None:
-        self._reply = reply
-
     @property
     def is_done(self) -> bool:
-        return self._reply is not None
+        return self._reply is not None or self._error is not None
 
     def __await__(self):
         """Awaitable form (reference AsyncClassRef, client/class_ref.py):
@@ -57,16 +64,19 @@ class Future:
         import asyncio
 
         async def _aget():
-            if self._reply is None:
+            if not self.is_done:
                 await asyncio.to_thread(self._client.flush)
             return self.get()
 
         return _aget().__await__()
 
     def get(self) -> Any:
-        if self._reply is None:
+        # a flush settles every call queued before it started, this one
+        # included, or waits for the drain that took it
+        if not self.is_done:
             self._client.flush()
-        assert self._reply is not None, "flush did not complete this future"
+        if self._error is not None:
+            raise self._error
         result = operator.reply_value(self._reply)
         if isinstance(result, EntityRef):
             return EntityHandle(self._client, result)
@@ -160,13 +170,11 @@ class ClassClient:
 
 class Client:
     def __init__(self, transport: "Transport"):
-        import threading
-
         self._transport = transport
-        self._pending: dict[str, Future] = {}
-        # one flush at a time: concurrent awaiters (async futures) must not
-        # interleave on the transport queue — the first flush settles all,
-        # later ones see nothing pending and return
+        # calls submitted and not yet taken by a drain, in submission order
+        self._queue: list[Future] = []
+        self._queue_lock = threading.Lock()
+        # one drain at a time; submits never wait for it
         self._flush_lock = threading.Lock()
 
     def entity(self, cls: type | str) -> ClassClient:
@@ -207,99 +215,86 @@ class Client:
 
     def _submit(self, event: Event) -> Future:
         fut = Future(self, event)
-        self._pending[event.event_id] = fut
-        self._transport.send(event)
+        with self._queue_lock:
+            self._queue.append(fut)
         return fut
 
     def flush(self) -> None:
-        """Drive the transport until every pending future completes."""
+        """Run every call queued so far as one drain and settle each one:
+        with its reply, else with the transport's exception or a
+        "received no reply" error. Calls queued during the drain wait for
+        the next one."""
         with self._flush_lock:
-            self._flush_locked()
-
-    def _flush_locked(self) -> None:
-        if not self._pending:
-            return
-        replies = self._transport.flush()
-        for eid, fut in list(self._pending.items()):
-            if eid in replies:
-                fut.complete(replies[eid])
-                del self._pending[eid]
-        still = [f._event for f in self._pending.values()]
-        if still:
-            raise RuntimeError(f"{len(still)} requests received no reply: {still[:3]}")
+            with self._queue_lock:
+                batch, self._queue = self._queue, []
+            if not batch:
+                return
+            replies, error = {}, None
+            try:
+                replies = self._transport.run([f._event for f in batch])
+            except Exception as exc:  # fails this drain's calls, no others
+                error = exc
+            finally:
+                for fut in batch:
+                    fut._reply = replies.get(fut.event_id)
+                    if fut._reply is None:
+                        fut._error = error or RuntimeError(
+                            f"request received no reply: {fut._event}")
 
 
 # -- transports -------------------------------------------------------------
 
 
 class Transport:
-    def send(self, event: Event) -> None:  # pragma: no cover - interface
-        raise NotImplementedError
-
-    def flush(self) -> dict[str, Event]:  # pragma: no cover - interface
+    def run(self, events: list[Event]) -> dict[str, Event]:  # pragma: no cover
+        """Execute one drain's events in order; replies by event_id."""
         raise NotImplementedError
 
 
 class LocalTransport(Transport):
-    """Immediate in-process execution against a dict store."""
+    """In-process execution against a dict store."""
 
     def __init__(self):
         from stateflow_spark.entity.local import DictStore
 
         self.store = DictStore()
-        self._replies: dict[str, Event] = {}
 
-    def send(self, event: Event) -> None:
+    def run(self, events: list[Event]) -> dict[str, Event]:
         from stateflow_spark.entity.local import run_to_reply
 
-        reply = run_to_reply(event, self.store)
-        self._replies[reply.event_id] = reply
-
-    def flush(self) -> dict[str, Event]:
-        out, self._replies = self._replies, {}
-        return out
+        return {e.event_id: run_to_reply(e, self.store) for e in events}
 
 
 class SuperstepTransport(Transport):
-    """Queue events; flush runs them as one distributed superstep job.
-    Entity state persists across flushes as a distributed DataFrame."""
+    """Each drain runs as one distributed superstep job. Entity state
+    persists across drains as a distributed DataFrame."""
 
     def __init__(self, spark):
         from stateflow_spark.streaming.superstep import SuperstepRuntime
 
         self._rt = SuperstepRuntime(spark)
-        self._queue: list[Event] = []
         self._state_df = None
 
-    def send(self, event: Event) -> None:
-        self._queue.append(event)
-
-    def flush(self) -> dict[str, Event]:
-        if not self._queue:
-            return {}
-        batch, self._queue = self._queue, []
-        res = self._rt.run(batch, state_df=self._state_df)
+    def run(self, events: list[Event]) -> dict[str, Event]:
+        res = self._rt.run(events, state_df=self._state_df)
         self._state_df = res.state_df
         return res.replies
 
 
 class StreamingTransport(Transport):
-    """Send into a running StreamingEntityEngine; flush drains the
-    continuous query and collects the reply sink."""
+    """Each drain is one input file of a running StreamingEntityEngine;
+    the continuous query is drained and the batch's replies picked from
+    its reply sink."""
 
     def __init__(self, engine):
         self._engine = engine
-        self._seen: set[str] = set()
 
-    def send(self, event: Event) -> None:
-        self._engine.send([event])
-
-    def flush(self) -> dict[str, Event]:
+    def run(self, events: list[Event]) -> dict[str, Event]:
+        self._engine.send(events)
         self._engine.drain()
         replies = self._engine.replies()
-        fresh = {k: v for k, v in replies.items() if k not in self._seen}
-        self._seen.update(fresh)
-        return fresh
+        return {e.event_id: replies[e.event_id]
+                for e in events if e.event_id in replies}
 
 
 def kafka_record(event: Event) -> tuple[bytes, bytes]:
@@ -347,11 +342,11 @@ class KafkaTransport(Transport):
         self._producer = KafkaProducer(bootstrap_servers=brokers)
         # Assign partitions EXPLICITLY and resolve end offsets NOW, before
         # any produce. A plain subscribe with auto_offset_reset='latest'
-        # assigns lazily at first poll, so replies produced between send()
-        # and that poll landed before the consumer's notion of "latest"
-        # and were silently skipped → spurious TimeoutError in flush()
-        # (round-4 ADVICE). seek_to_end fetches positions eagerly, so
-        # everything produced after construction is visible.
+        # assigns lazily at first poll, so replies produced between the
+        # first produce and that poll landed before the consumer's notion
+        # of "latest" and were silently skipped → spurious "no reply" in
+        # run(). seek_to_end fetches positions eagerly, so everything
+        # produced after construction is visible.
         self._consumer = KafkaConsumer(
             bootstrap_servers=brokers,
             consumer_timeout_ms=int(timeout_s * 1000),
@@ -362,23 +357,20 @@ class KafkaTransport(Transport):
         self._consumer.assign(tps)
         self._consumer.seek_to_end(*tps)
         self._topic = f"{prefix}-request"
-        self._pending: set[str] = set()
 
-    def send(self, event: Event) -> None:
-        key, value = kafka_record(event)
-        self._pending.add(event.event_id)
-        self._producer.send(self._topic, key=key, value=value)
-
-    def flush(self) -> dict[str, Event]:  # pragma: no cover - needs broker
+    def run(self, events: list[Event]) -> dict[str, Event]:
+        """Produce the batch, then consume until every id in it has a
+        reply or the consumer times out (the rest get no reply)."""
+        for event in events:
+            key, value = kafka_record(event)
+            self._producer.send(self._topic, key=key, value=value)
         self._producer.flush()
+        want = {e.event_id for e in events}
         out: dict[str, Event] = {}
         for msg in self._consumer:
             reply = Event.from_bytes(msg.value)
-            if reply.event_id in self._pending:
-                self._pending.discard(reply.event_id)
+            if reply.event_id in want:
                 out[reply.event_id] = reply
-            if not self._pending:
-                break
-        if self._pending:
-            raise TimeoutError(f"{len(self._pending)} events got no reply")
+                if len(out) == len(want):
+                    break
         return out

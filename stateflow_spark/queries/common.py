@@ -204,8 +204,9 @@ def run_to_end(
     """Run the streaming plan `out` until its source is drained:
     trigger(availableNow=True) from a scratch checkpoint that is deleted
     once the query stops. Without `foreach_batch` the rows land in a
-    fresh memory sink whose table is returned; with it every micro-batch
-    goes to `foreach_batch(batch_df, batch_id)` and None is returned."""
+    fresh memory sink whose table is returned (its view is dropped); with
+    it every micro-batch goes to `foreach_batch(batch_df, batch_id)` and
+    None is returned."""
     writer = out.writeStream.outputMode(mode)
     name = None
     if foreach_batch is None:
@@ -226,7 +227,13 @@ def run_to_end(
             query.stop()
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
-    return None if name is None else out.sparkSession.table(name)
+    if name is None:
+        return None
+    # the resolved frame keeps the sink's rows; a kept view would pin
+    # them in the driver for the rest of the session
+    table = out.sparkSession.table(name)
+    out.sparkSession.catalog.dropTempView(name)
+    return table
 
 
 def scratch_output_dir(prefix: str) -> str:

@@ -182,6 +182,37 @@ def test_http_over_superstep_transport(spark):
     assert body == {"entity": "User", "key": "http-ss1"}
 
 
+def test_http_threads_over_superstep_transport(spark):
+    """Concurrent requests share one Client: each drain settles only the
+    calls it took, so no request is answered with another's failure."""
+    import threading
+
+    from stateflow_spark.client import SuperstepTransport
+
+    app = HttpSurface(Client(SuperstepTransport(spark)))
+    status, _ = call(app, "POST", "/stateflow/global/User/create", "username=http-mt")
+    assert status == 200
+    answers: list = []
+
+    def post_updates(delta):
+        for _ in range(3):
+            answers.append(call(
+                app, "POST", "/stateflow/global/User/update_balance",
+                f"key=http-mt&x={delta}",
+            ))
+
+    threads = [threading.Thread(target=post_updates, args=(d,)) for d in (1, 2, 3, 4)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert len(answers) == 12
+    for status, body in answers:
+        assert status == 200 and not (isinstance(body, dict) and "error" in body), body
+    assert app.client.entity("User").by_key("http-mt").balance == 3 * (1 + 2 + 3 + 4)
+
+
 def test_errors(surface):
     status, body = call(surface, "GET", "/stateflow/global/User/nope")
     assert status == 404

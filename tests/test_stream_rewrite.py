@@ -37,8 +37,9 @@ _REWRITTEN = {
 }
 
 
-def _check_against_oracle(spark, sf_dir, name):
-    sdf = REGISTRY[name].fn(spark, sf_dir)
+def _check_against_oracle(spark, sf_dir, name, sdf=None):
+    if sdf is None:
+        sdf = REGISTRY[name].fn(spark, sf_dir)
     con = duckdb.connect()
     try:
         for t in TABLES:
@@ -80,3 +81,17 @@ def test_row_reserves_table_rewritten_in_place(spark, tmp_path, name):
     pq.write_table(half, path)
     os.utime(path, ns=(before.st_atime_ns, before.st_mtime_ns + 10**9))
     _check_against_oracle(spark, sf_dir, name)
+
+
+def test_memory_sink_rows_leave_no_view(spark):
+    """A memory-sink row drops its sq_* view once the returned frame has
+    resolved it, and each held frame still matches the oracle."""
+    def views():
+        return {t.name for t in spark.catalog.listTables() if t.name.startswith("sq_")}
+
+    before = views()
+    name = "stream_hourly_tumbling"
+    frames = [REGISTRY[name].fn(spark, SF_DIR) for _ in range(3)]
+    assert views() == before
+    for sdf in frames:
+        _check_against_oracle(spark, SF_DIR, name, sdf)
