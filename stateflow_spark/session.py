@@ -7,8 +7,39 @@ Everything here is plain Spark configuration — the same settings work on a
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
+
+
+# PySpark's worker calls importlib.invalidate_caches() at the start of every
+# task (pyspark/worker_util.py::setup_spark_files). Before CPython 3.13,
+# zipimporter.invalidate_caches re-parses the whole archive directory, and
+# a worker holds one zipimporter per package path inside pyspark.zip and
+# the py4j zip, so every Python task re-read both archives (150-300 ms per
+# task on a 4-core box, CPython 3.11). 3.13 made it a lazy cache pop.
+# Below 3.13 the wrapper re-reads an archive only once its (mtime, size)
+# stamp differs from the one that importer last saw.
+# It is installed in every process that imports this package: the driver,
+# and each Python worker the first time it unpickles an engine or query
+# function.
+_zip_invalidate = zipimport.zipimporter.invalidate_caches
+
+
+def _invalidate_if_changed(self) -> None:
+    try:
+        st = os.stat(self.archive)
+    except OSError:
+        return _zip_invalidate(self)
+    stamp = (st.st_mtime_ns, st.st_size)
+    if getattr(self, "_dir_stamp", None) != stamp:
+        _zip_invalidate(self)
+        self._dir_stamp = stamp
+
+
+if sys.version_info < (3, 13):
+    zipimport.zipimporter.invalidate_caches = _invalidate_if_changed
 
 
 def get_spark(

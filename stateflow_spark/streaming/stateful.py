@@ -42,6 +42,7 @@ from __future__ import annotations
 import os
 import pickle
 import uuid
+from types import MappingProxyType
 from typing import Iterable, Iterator, Optional
 
 import pandas as pd
@@ -239,6 +240,7 @@ class StreamingEntityEngine:
         self._sent_ids: set[str] = set()
         self._send_seq = 0
         self._reply_cache: dict[str, Event] = {}
+        self._replies_view = MappingProxyType(self._reply_cache)
         self._seen_reply_files: set[str] = set()
         # completion time per event_id (reply-file commit, micro-batch
         # resolution) — the reference client's latency-capture analog
@@ -270,11 +272,14 @@ class StreamingEntityEngine:
         pq.write_table(tbl, tmp)
         os.replace(tmp, os.path.join(self.in_dir, name))
 
-    def replies(self) -> dict[str, Event]:
+    def replies(self) -> MappingProxyType[str, Event]:
         """Incremental, driver-side read of the reply sink: only files not
         seen before are opened (pyarrow, no Spark job), so the drain() poll
         loop is O(new replies) per tick instead of re-reading and collecting
         the whole sink every 250 ms (round-2 VERDICT wrong-item 3).
+
+        Returns a read-only live view of every reply seen so far (event_id
+        → reply), not a copy: later calls add to the same view.
 
         Completion times are recorded per event_id as each reply file is
         first seen (reply-file mtime = batch commit, micro-batch
@@ -286,7 +291,7 @@ class StreamingEntityEngine:
         try:
             names = os.listdir(self.replies_dir)
         except FileNotFoundError:
-            return dict(self._reply_cache)
+            return self._replies_view
         for name in names:
             if not name.endswith(".parquet") or name in self._seen_reply_files:
                 continue
@@ -301,7 +306,7 @@ class StreamingEntityEngine:
                 self._reply_cache[ev.event_id] = ev
                 self.reply_times.setdefault(ev.event_id, mtime)
             self._seen_reply_files.add(name)
-        return dict(self._reply_cache)
+        return self._replies_view
 
     def dead_letters(self) -> list[dict]:
         """Quarantined events from the dead-letter sink (driver-side
@@ -444,11 +449,10 @@ class StreamingEntityEngine:
             exc = self.query.exception()
             if exc is not None:
                 raise exc
-            have = set(self.replies())
-            if want <= have:
+            if want <= self.replies().keys():
                 return
             time.sleep(0.25)
-        missing = want - set(self.replies())
+        missing = want - self.replies().keys()
         raise TimeoutError(f"{len(missing)} events got no reply: {list(missing)[:3]}")
 
     def stop(self) -> None:

@@ -233,9 +233,9 @@ def test_superstep_releases_prior_checkpoints(spark):
     buy = operator.make_invoke_event(uref, "buy_item", (1, iref))
     res = rt.run([buy], state_df=base.state_df)
     assert res.supersteps >= 3  # user → item (stock) → user (balance)
-    # ≥3 supersteps created ≥3 checkpoint pairs; only the FINAL pair may
-    # remain — every intermediate round's blocks must be gone
-    assert n_persistent() <= before + 2, (before, n_persistent())
+    # ≥3 supersteps created ≥3 checkpoints, one each; only the FINAL one
+    # may remain — every intermediate round's blocks must be gone
+    assert n_persistent() <= before + 1, (before, n_persistent())
     # the caller's input snapshot is untouched: branch a second run off
     # the SAME base state and read both results
     res2 = rt.run(

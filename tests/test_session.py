@@ -1,0 +1,81 @@
+"""The lazy zipimporter invalidate that importing stateflow_spark installs
+below CPython 3.13 (session.py): an unchanged archive is not re-read, a
+rewritten one is, and Python workers carry the wrapper too."""
+
+from __future__ import annotations
+
+import importlib
+import sys
+import zipfile
+import zipimport
+
+import pyarrow as pa
+import pytest
+
+import stateflow_spark.session as session
+
+pytestmark = pytest.mark.skipif(
+    sys.version_info >= (3, 13),
+    reason="3.13+ zipimporter.invalidate_caches is already lazy",
+)
+
+
+def _write_archive(path, modules: dict[str, str]) -> None:
+    with zipfile.ZipFile(path, "w") as z:
+        for name, body in modules.items():
+            z.writestr(f"{name}.py", body)
+
+
+def test_zip_invalidate_rereads_only_a_changed_archive(tmp_path, monkeypatch):
+    archive = str(tmp_path / "zmods.zip")
+    _write_archive(archive, {"zmod_a": "X = 1\n"})
+    monkeypatch.syspath_prepend(archive)
+    try:
+        assert importlib.import_module("zmod_a").X == 1
+        importer = sys.path_importer_cache[archive]
+        assert isinstance(importer, zipimport.zipimporter)
+
+        reads = []
+        real = zipimport._read_directory
+        monkeypatch.setattr(
+            zipimport, "_read_directory", lambda p: reads.append(p) or real(p)
+        )
+        importlib.invalidate_caches()  # first call: no stamp yet
+        reads.clear()
+        importlib.invalidate_caches()
+        assert archive not in reads  # unchanged archive: no re-read
+
+        _write_archive(archive, {"zmod_a": "X = 1\n", "zmod_b": "Y = 2\n"})
+        importlib.invalidate_caches()
+        assert reads.count(archive) == 1
+        assert importlib.import_module("zmod_b").Y == 2
+
+        # a vanished archive falls through to the original, which drops
+        # the directory instead of serving stale entries
+        (tmp_path / "zmods.zip").unlink()
+        importer.invalidate_caches()
+        assert importer._files == {}
+    finally:
+        for name in ("zmod_a", "zmod_b"):
+            sys.modules.pop(name, None)
+        sys.path_importer_cache.pop(archive, None)
+
+
+def test_python_workers_get_the_lazy_invalidate(spark):
+    def probe(batches):
+        import zipimport
+
+        import stateflow_spark  # noqa: F401 — installs the wrapper
+
+        fn = zipimport.zipimporter.invalidate_caches
+        for b in batches:
+            yield pa.RecordBatch.from_pydict(
+                {"module": [fn.__module__] * b.num_rows,
+                 "name": [fn.__name__] * b.num_rows}
+            )
+
+    rows = spark.range(4).mapInArrow(probe, "module string, name string").collect()
+    assert len(rows) == 4
+    assert {(r.module, r.name) for r in rows} == {
+        (session.__name__, session._invalidate_if_changed.__name__)
+    }

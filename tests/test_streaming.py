@@ -466,6 +466,27 @@ def test_replies_incremental_reads_each_file_once(engine, monkeypatch):
     assert opened == [], f"already-seen reply files re-read: {opened[:3]}"
 
 
+def test_replies_is_a_read_only_live_view(engine):
+    """replies() hands out one live view of the reply history, not a copy
+    per call: it rejects writes, and a view taken before a later drain
+    shows that drain's replies once they are read."""
+    init = operator.make_init_event("User", ("view-u1",))
+    engine.send([init])
+    engine.start()
+    engine.drain()
+    view = engine.replies()
+    with pytest.raises(TypeError):
+        view["forged"] = view[init.event_id]
+    assert "forged" not in view
+
+    ref = view[init.event_id].payload["result"]
+    up = operator.make_invoke_event(ref, "update_balance", (7,))
+    engine.send([up])
+    engine.drain()
+    assert engine.replies() is view
+    assert up.event_id in view and init.event_id in view
+
+
 def _stream_events(spark, tmp_path):
     """Re-serve the events table through a file stream (maxFilesPerTrigger
     exercises multi-batch accumulation)."""
