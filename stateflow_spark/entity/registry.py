@@ -24,11 +24,11 @@ class EntityType:
 
 _REGISTRY: dict[str, EntityType] = {}
 _linked = False
-# Identity of the registry blob a WORKER-side engine last installed (see
+# The registry blob a WORKER-side engine last installed (see
 # streaming/superstep.py + streaming/stateful.py): reused Python workers
 # keep module state across runs, so the engines skip re-installing when
-# the same blob object arrives again, and CLEAR the interpreter caches
-# when a different one does (round-8 ADVICE: the executor re-registration
+# an equal blob arrives again, and CLEAR the interpreter caches when a
+# new blob object does (round-8 ADVICE: the executor re-registration
 # path bypassed entity()/clear_registry() and lru_cached module globals
 # keyed by entity NAME served a previous run's module on name rebind).
 _installed_blob: object = None
@@ -126,22 +126,22 @@ def serialize_registry() -> bytes:
 def install_worker_registry(registry_blob: bytes) -> None:
     """Worker-side registry install for the streaming/superstep engines.
 
-    Idempotent per blob OBJECT: within one run the engine closure holds a
-    single blob, so repeated calls (once per partition in the superstep,
-    per key group in the continuous engine) skip the unpickle entirely;
-    a DIFFERENT blob (a reused worker serving a new run — possibly with
-    the same entity names bound to different classes) re-installs and
-    clears the interpreter's per-entity-name caches, which entity()/
-    clear_registry() would normally do but executors never call
-    (round-8 ADVICE medium #1)."""
+    Each task unpickles its own copy of the engine closure, so one run's
+    blob arrives as a new object per partition: a blob equal to the
+    installed one skips the unpickle, and one with other bytes (a reused
+    worker serving a new run, possibly with the same entity names bound
+    to different classes) re-installs. Any new blob object clears the
+    interpreter's per-entity-name caches, which entity()/clear_registry()
+    would normally do but executors never call (round-8 ADVICE medium #1)."""
     global _linked, _installed_blob
     if _installed_blob is registry_blob:
         return
-    import pickle
+    if _installed_blob != registry_blob:
+        import pickle
 
-    reg = pickle.loads(registry_blob)
-    _REGISTRY.clear()
-    _REGISTRY.update(reg)
-    _linked = True
+        reg = pickle.loads(registry_blob)
+        _REGISTRY.clear()
+        _REGISTRY.update(reg)
+        _linked = True
     _installed_blob = registry_blob
     _clear_interpreter_caches()

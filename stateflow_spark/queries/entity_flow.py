@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from stateflow_spark.entity.registry import entity, get_registry
 from stateflow_spark.queries.common import register
+from stateflow_spark.storage import local_frame
 
 
 # Register the golden pair lazily (idempotent per process): registration
@@ -103,4 +104,4 @@ def entity_flow_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
         for attr in ("balance", "stock", "price")
         if attr in st
     ]
-    return spark.createDataFrame(rows, "entity STRING, key STRING, attr STRING, value INT")
+    return local_frame(spark, rows, "entity STRING, key STRING, attr STRING, value INT")

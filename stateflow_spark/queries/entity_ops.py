@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from stateflow_spark.catalog import load, table_path
 from stateflow_spark.queries.common import register, run_to_end, served_source
 from stateflow_spark.sources import stream_files
+from stateflow_spark.storage import local_frame
 
 
 @register(
@@ -106,8 +107,8 @@ def entity_init_class(spark: SparkSession, sf_dir: str) -> DataFrame:
     row (key computed from __key__(), reference class_wrapper.py:58-81).
     Projected to the new row + a few existing ones for the oracle check."""
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_acctbal")
-    new_row = spark.createDataFrame(
-        [(999999999, "new-entity", 0.0)], schema="c_custkey BIGINT, c_name STRING, c_acctbal DOUBLE"
+    new_row = local_frame(
+        spark, [(999999999, "new-entity", 0.0)], "c_custkey BIGINT, c_name STRING, c_acctbal DOUBLE"
     )
     u = c.unionByName(new_row)
     return (

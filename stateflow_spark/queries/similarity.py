@@ -29,6 +29,7 @@ from stateflow_spark.functions.similarity import (
     sqdist_dec,
 )
 from stateflow_spark.queries.common import register, stream_delta_classify
+from stateflow_spark.storage import local_frame
 from stateflow_spark.versioning import build_once, is_ready, publish, source_key
 
 _EX_SQL = """
@@ -3356,8 +3357,8 @@ def ivf_apply_resplit(
     flagged_cid_set = {c for c, _ in flagged_pairs}
     if not flagged_cid_set:
         return source  # empty worklist: the old version stays current
-    flagged_cids = spark.createDataFrame(
-        [(c,) for c in sorted(flagged_cid_set)], "cid int"
+    flagged_cids = local_frame(
+        spark, [(c,) for c in sorted(flagged_cid_set)], "cid int"
     )
 
     def build(tmp: str) -> None:

@@ -14,7 +14,7 @@ from pyspark.sql.window import Window
 
 from stateflow_spark.catalog import load, stage_tasks, table_path
 from stateflow_spark.queries.common import register, stream_delta_classify
-from stateflow_spark.storage import register_bucketed, write_bucketed_files
+from stateflow_spark.storage import local_frame, register_bucketed, write_bucketed_files
 from stateflow_spark.versioning import build_once, source_key
 
 STOPWORDS = ("the", "a", "of", "and", "to")
@@ -1223,7 +1223,7 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # makes every pass pay a 4096-node CreateArray per row plus
     # seconds of analyzer time on the bloated tree (both measured)
     wdf = F.broadcast(
-        spark.createDataFrame([(_CLF_W,)], "__clf_w array<int>")
+        local_frame(spark, [(_CLF_W,)], "__clf_w array<int>")
     )
     # fan-out: the higher-order md5 fold runs interpreted (the similarity
     # module's fan_out rationale)
@@ -1536,11 +1536,11 @@ def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     application are integer/string ops — the whole 6-step trajectory
     hash-gates against the generated per-step CTE oracle."""
     merges, _, _ = _bpe_train(spark, sf_dir, want_totals=False)
-    # degenerate corpus (empty merges) collapses into the same literal
+    # degenerate corpus (empty merges) collapses into the same local
     # frame; the merge table is driver-held winner tuples, so the output
-    # is a LocalRelation — no executor blocks to re-read at output time
-    return spark.createDataFrame(
-        merges, "step INT, sym_a STRING, sym_b STRING, pair_count BIGINT"
+    # is a LocalTableScan — no executor blocks to re-read at output time
+    return local_frame(
+        spark, merges, "step INT, sym_a STRING, sym_b STRING, pair_count BIGINT"
     )
 
 

@@ -20,22 +20,28 @@ from pyspark.sql import SparkSession
 # the py4j zip, so every Python task re-read both archives (150-300 ms per
 # task on a 4-core box, CPython 3.11). 3.13 made it a lazy cache pop.
 # Below 3.13 the wrapper re-reads an archive only once its (mtime, size)
-# stamp differs from the one that importer last saw.
+# stamp differs from the one it was last read at; the importers over one
+# archive share that read through zipimport's directory cache.
 # It is installed in every process that imports this package: the driver,
 # and each Python worker the first time it unpickles an engine or query
 # function.
 _zip_invalidate = zipimport.zipimporter.invalidate_caches
+_zip_stamps: dict[str, tuple[int, int]] = {}
 
 
 def _invalidate_if_changed(self) -> None:
     try:
         st = os.stat(self.archive)
     except OSError:
+        _zip_stamps.pop(self.archive, None)
         return _zip_invalidate(self)
     stamp = (st.st_mtime_ns, st.st_size)
-    if getattr(self, "_dir_stamp", None) != stamp:
+    files = zipimport._zip_directory_cache.get(self.archive)
+    if files is not None and _zip_stamps.get(self.archive) == stamp:
+        self._files = files
+    else:
         _zip_invalidate(self)
-        self._dir_stamp = stamp
+        _zip_stamps[self.archive] = stamp
 
 
 if sys.version_info < (3, 13):

@@ -184,6 +184,22 @@ def unpersist_local_checkpoint(df: DataFrame) -> None:
         pass
 
 
+def local_frame(spark: SparkSession, rows: Sequence[tuple], ddl: str) -> DataFrame:
+    """A DataFrame of driver-held ``rows`` (tuples in ``ddl`` column order)
+    built from Arrow, so it plans as a LocalTableScan: a list-built frame is
+    a Scan ExistingRDD over a PythonRDD, and every job reading it starts
+    Python workers, even with no rows."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = to_arrow_schema(StructType.fromDDL(ddl))
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=schema
+    )
+    return spark.createDataFrame(table)
+
+
 def zorder_value(col_a: str, col_b: str, bits: int = 16):
     """Interleaved-bit (Morton / Z-order) key of two non-negative integer
     columns, computed JVM-side with a bit fold — no UDF. Callers must

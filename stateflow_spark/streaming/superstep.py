@@ -3,25 +3,29 @@
 Spark cannot express a cyclic streaming dataflow, and the reference has the
 same constraint — it loops flow hops through an external `internal` Kafka
 topic (stateflow/runtime/beam_runtime.py:192-204, SURVEY.md §3.3). Here each
-loop iteration is one Spark job (a superstep):
+loop iteration is one Spark job (a superstep) over ONE row shape,
+``(kind, entity, key, seq, blob)``, in and out:
 
-    events ∪ state rows  (one union, tagged is_state)
+    rows: kind event (first superstep) | state | hop
         → repartition on (entity, key) → sortWithinPartitions(entity, key)
         → mapInArrow: one Arrow pass per partition, grouped per key
-        → localCheckpoint: state' rows + replies + dead rows + hop events
+        → localCheckpoint: rows of kind state | reply | dead | hop
 
-The sort makes each key's rows contiguous, so the step streams the
-partition once and holds one key's rows at a time; a key with no events
-passes its state blob through as bytes, untouched. Per-key cost is the
-key's own events, not a frame per key group (the grouped-map contract of
-SNIPPETS.md [1] pays an Arrow stream, two pandas frames and a state
+The step reads a ``state`` row as the key's state and every other row as
+an event. The sort makes each key's rows contiguous, so the step streams
+the partition once and holds one key's rows at a time; a key with no
+events passes its state blob through as bytes, untouched. Per-key cost is
+the key's own events, not a frame per key group (the grouped-map contract
+of SNIPPETS.md [1] pays an Arrow stream, two pandas frames and a state
 re-pickle for every key, event or not).
 
-The eager ``localCheckpoint`` is the superstep's one materialization: it
-truncates the lineage, and everything after it reads its blocks. State
-AND in-flight hop events stay distributed across all supersteps: the next
-superstep's state and events are kind-filters on the checkpoint, so hops
-loop cluster-side straight into the next union. Only replies — the
+A run's first input is its events as a local Arrow table; a caller's
+``state_df`` is tagged ``state`` and unioned in once per run, and a run
+with no prior state starts from its events alone. After that the output
+IS the next input: the next superstep reads ``kind IN ('state', 'hop')``
+of this one's checkpoint, so state AND in-flight hop events stay
+distributed across all supersteps. The lazy ``localCheckpoint`` is
+materialized by the superstep's one collect: only replies — the
 client-facing output, the reference's reply topic — and quarantined dead
 letters come to the driver, in one Arrow collect that also carries the
 hop rows with their blobs nulled: their count is the loop condition, so
@@ -46,8 +50,8 @@ from operator import itemgetter
 from typing import Any, Iterator, Optional
 
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from stateflow_spark.catalog import stage_tasks
 from stateflow_spark.entity import operator
@@ -57,16 +61,15 @@ from stateflow_spark.entity.registry import (
     install_worker_registry,
     serialize_registry,
 )
-from stateflow_spark.storage import unpersist_local_checkpoint
+from stateflow_spark.storage import local_frame, unpersist_local_checkpoint
 
 STATE_SCHEMA = "entity string, key string, blob binary"
+# the one row shape a superstep reads and writes
 OUT_SCHEMA = "kind string, entity string, key string, seq long, blob binary"
-_EVENT_ARROW = pa.schema(
-    [("entity", pa.string()), ("key", pa.string()), ("seq", pa.int64()),
-     ("blob", pa.binary())]
+_OUT_ARROW = pa.schema(
+    [("kind", pa.string()), ("entity", pa.string()), ("key", pa.string()),
+     ("seq", pa.int64()), ("blob", pa.binary())]
 )
-_OUT_ARROW = pa.schema([("kind", pa.string()), *_EVENT_ARROW])
-_STEP_COLUMNS = ("entity", "key", "seq", "blob", "is_state")
 # out-rows per Arrow batch the step yields
 _OUT_BATCH_ROWS = 10_000
 
@@ -97,17 +100,17 @@ def _make_step_fn(registry_blob: bytes, serde):
 
     def rows(batches: Iterator[pa.RecordBatch]):
         for b in batches:
-            yield from zip(*(b.column(c).to_pylist() for c in _STEP_COLUMNS))
+            yield from zip(*(c.to_pylist() for c in b.columns))
 
     def step(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         install_worker_registry(registry_blob)
         out: list[tuple] = []
         for (entity_name, key), group in itertools.groupby(
-            rows(batches), key=itemgetter(0, 1)
+            rows(batches), key=itemgetter(1, 2)
         ):
             state_blob, events = None, []
-            for _, _, seq, blob, is_state in group:
-                if is_state:
+            for kind, _, _, seq, blob in group:
+                if kind == "state":
                     state_blob = blob
                 else:
                     events.append((seq, blob))
@@ -176,12 +179,13 @@ class SuperstepRuntime:
         to_bytes = self.serde.to_bytes
         table = pa.table(
             [
+                ["event"] * len(events),
                 [e.entity for e in events],
                 [e.key for e in events],
                 [e.seq for e in events],
                 [to_bytes(e) for e in events],
             ],
-            schema=_EVENT_ARROW,
+            schema=_OUT_ARROW,
         )
         return self.spark.createDataFrame(table)
 
@@ -190,14 +194,25 @@ class SuperstepRuntime:
         events: list[Event],
         state_df: Optional[DataFrame] = None,
     ) -> RunResult:
+        if not events:
+            if state_df is None:
+                state_df = local_frame(self.spark, [], STATE_SCHEMA)
+            return RunResult(state_df=state_df)
+
         step = _make_step_fn(serialize_registry(), self.serde)
         n_tasks = stage_tasks(self.spark)
-
-        if state_df is None:
-            state_df = self.spark.createDataFrame([], STATE_SCHEMA)
-
         result = RunResult()
-        events_df = self._events_df(events)
+        rows = self._events_df(events)
+        if state_df is not None:
+            # tagged once per run; selecting the state columns also drops
+            # any others a state_df loaded from parquet (or built by a
+            # caller) may carry
+            rows = rows.union(
+                state_df.selectExpr(
+                    "'state' AS kind", "entity", "key",
+                    "CAST(0 AS BIGINT) AS seq", "blob",
+                )
+            )
         n_pending = len(events)
         # checkpoints created by THIS run's previous superstep — the only
         # ones safe to release. The caller's input state_df must survive
@@ -211,64 +226,40 @@ class SuperstepRuntime:
                 raise RuntimeError(
                     f"flows still in flight after {self.max_supersteps} supersteps"
                 )
-            # select the three state columns: a state_df loaded from
-            # parquet (or built by a caller) may carry others
-            rows = events_df.withColumn("is_state", F.lit(False)).unionByName(
-                state_df.select(
-                    "entity",
-                    "key",
-                    F.lit(0).cast("long").alias("seq"),
-                    "blob",
-                    F.lit(True).alias("is_state"),
-                )
-            )
             # localCheckpoint truncates lineage — without it every
             # superstep's plan chains all previous ones (heap blow-up,
-            # replanning cost). It is the superstep's ONE materialization:
-            # the reply collect, the next state and the next hops all read
-            # its blocks. On a 4-core box it beat persist() + reply collect
-            # + a second checkpoint of only the state and hop rows: YCSB
-            # T-mix run_superstep median 1.54/1.20 → 1.38/1.09 s in two
-            # rounds; 8 → 6 Spark jobs per 2-superstep entity_superstep batch.
+            # replanning cost). It is lazy: the reply collect below is the
+            # job that computes the step output, writes the checkpoint
+            # blocks and brings the replies back; the next superstep and
+            # the final state read those blocks.
             out = (
                 rows.repartition(n_tasks, "entity", "key")
                 .sortWithinPartitions("entity", "key")
                 .mapInArrow(step, OUT_SCHEMA)
-                .localCheckpoint()
+                .localCheckpoint(eager=False)
             )
             # replies are the client-facing output (the reference's reply
             # topic) — with the quarantined dead rows, the ONLY payloads
-            # that reach the driver. Hop events loop CLUSTER-SIDE: the out
-            # rows already carry the event columns, so the hop filter feeds
-            # the next superstep directly. Hop rows ride this one collect
-            # with their blobs nulled — in-flight flow payloads never reach
-            # the driver; their count is the loop condition.
-            sent = out.filter(out.kind != "state").select(
-                "kind",
-                "entity",
-                "key",
-                "seq",
-                F.when(out.kind != "hop", out.blob).alias("blob"),
+            # that reach the driver. Hop rows ride this one collect with
+            # their blobs nulled — in-flight flow payloads never reach the
+            # driver; their count is the loop condition.
+            sent = out.filter("kind <> 'state'").selectExpr(
+                "kind", "entity", "key", "seq",
+                "IF(kind = 'hop', NULL, blob) AS blob",
             ).toArrow()
-            n_pending = 0
+            done = sent.filter(pc.not_equal(sent.column("kind"), "hop"))
+            n_pending = sent.num_rows - done.num_rows
             for kind, entity_name, key, seq, blob in zip(
-                *(col.to_pylist() for col in sent.columns)
+                *(col.to_pylist() for col in done.columns)
             ):
-                if kind == "hop":
-                    n_pending += 1
-                elif kind == "dead":
+                if kind == "dead":
                     result.dead_letters.append(
                         dead_letter_record(entity_name, key, seq, blob)
                     )
                 else:
                     ev = self.serde.from_bytes(blob)
                     result.replies[ev.event_id] = ev
-            state_df = out.filter(out.kind == "state").select(
-                "entity", "key", "blob"
-            )
-            events_df = out.filter(out.kind == "hop").select(
-                "entity", "key", "seq", "blob"
-            )
+            rows = out.filter("kind IN ('state', 'hop')")
             # the new checkpoint has materialized — release the previous
             # superstep's (never the caller's input, never the returned
             # final state) instead of waiting for driver GC +
@@ -278,5 +269,7 @@ class SuperstepRuntime:
                 unpersist_local_checkpoint(df)
             own_ckpts = (out,)
 
-        result.state_df = state_df
+        result.state_df = out.filter("kind = 'state'").select(
+            "entity", "key", "blob"
+        )
         return result

@@ -950,3 +950,31 @@ def test_worker_registry_install_clears_interpreter_caches():
     blob2 = reg_mod.serialize_registry()
     reg_mod.install_worker_registry(blob2)  # new blob: caches cleared
     assert _module_globals.cache_info().currsize == 0
+
+
+def test_worker_registry_unpickles_once_per_distinct_blob(monkeypatch):
+    """Each Spark task unpickles its own copy of the engine closure, so
+    equal registry blobs arrive as distinct objects: they unpickle once.
+    A blob with other bytes still re-installs and clears the caches."""
+    import pickle
+
+    import cloudpickle
+
+    from stateflow_spark.entity import registry as reg_mod
+    from stateflow_spark.entity.interpreter import _module_globals
+
+    loads = []
+    real = pickle.loads
+    monkeypatch.setattr(pickle, "loads", lambda b: loads.append(b) or real(b))
+    blob = reg_mod.serialize_registry()
+    reg_mod.install_worker_registry(blob)
+    reg_mod.install_worker_registry(bytes(bytearray(blob)))
+    assert len(loads) == 1
+
+    _module_globals("CopyLog")
+    other = cloudpickle.dumps(real(blob), protocol=4)
+    assert other != blob
+    reg_mod.install_worker_registry(other)
+    assert len(loads) == 2
+    assert _module_globals.cache_info().currsize == 0
+    assert "CopyLog" in reg_mod.get_registry()

@@ -350,8 +350,9 @@ def test_superstep_passes_untouched_state_through(spark):
     """Keys whose events commit no put() — none at all, or reads only —
     keep their state blob byte for byte (planted here with an old pickle
     protocol, which a re-pickle would change); a key that put() is
-    re-encoded. A reads-only batch of one superstep costs at most 4
-    Spark jobs: the hop count rides the reply collect, no count job."""
+    re-encoded. A reads-only batch of one superstep costs at most 2
+    Spark jobs: the shuffle map, and the reply collect that also
+    checkpoints the step output and carries the hop count."""
     import pickle
     import uuid
 
@@ -386,18 +387,83 @@ def test_superstep_passes_untouched_state_through(spark):
     for k in keys[1:]:
         assert blobs[k] == planted[k], k
 
+    reads, jobs, _ = _spark_work(
+        spark, lambda: rt.run([read(k) for k in keys], state_df=state_df)
+    )
+    assert reads.supersteps == 1
+    assert len(reads.replies) == len(keys)
+    assert jobs <= 2, jobs
+
+
+def _spark_work(spark, fn):
+    """Run fn() in its own job group: (its result, Spark jobs, stages that
+    ran tasks) — counted the way the benchmark's traced runs count them."""
+    import uuid
+
     sc = spark.sparkContext
-    group = f"superstep-reads-{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, "reads-only superstep batch")
+    group = f"superstep-work-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "superstep job count")
     try:
-        reads = rt.run([read(k) for k in keys], state_df=state_df)
+        out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert reads.supersteps == 1
-    assert len(reads.replies) == len(keys)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) <= 4, jobs
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    stages = [
+        sid
+        for jid in jobs
+        for sid in st.getJobInfo(jid).stageIds
+        if (info := st.getStageInfo(sid)) is not None and info.numTasks
+    ]
+    return out, len(jobs), len(stages)
+
+
+def test_superstep_first_run_starts_from_events_alone(spark):
+    """A run with no prior state reads only its events: one shuffle-map
+    job and one job that checkpoints the step output and collects its
+    replies. An empty run's returned state is as cheap to start from."""
+    inits = [operator.make_init_event("B", (f"first-b{i}",)) for i in range(1000)]
+    rt = SuperstepRuntime(spark)
+    res, jobs, _ = _spark_work(spark, lambda: rt.run(inits))
+    assert (res.supersteps, len(res.replies)) == (1, 1000)
+    assert jobs <= 2, jobs
+
+    empty = rt.run([])
+    more = [operator.make_init_event("B", (f"first-c{i}",)) for i in range(10)]
+    res, jobs, _ = _spark_work(
+        spark, lambda: rt.run(more, state_df=empty.state_df)
+    )
+    assert len(res.collect_state()) == 10
+    assert jobs <= 2, jobs
+
+
+def test_superstep_batch_reads_its_checkpoint_back(spark):
+    """A two-superstep transfer batch costs two jobs per superstep (the
+    shuffle map and the checkpoint+collect); a lazy checkpoint recomputed
+    instead of read back would show up as an extra job or stage."""
+    from stateflow_spark import ycsb
+
+    rt = SuperstepRuntime(spark)
+    n = 100
+    seeded = rt.run(
+        [
+            operator.make_init_event("YCSBEntity", (f"entity-{i}", 100))
+            for i in range(n)
+        ]
+    )
+    refs = ycsb._refs(n)
+    batch = [
+        operator.make_invoke_event(refs[i], "transfer", (1, refs[(i + 1) % n]))
+        for i in range(n)
+    ]
+    res, jobs, stages = _spark_work(
+        spark, lambda: rt.run(batch, state_df=seeded.state_df)
+    )
+    assert res.supersteps == 2
+    assert len(res.replies) == n
+    assert sum(s["value"] for s in res.collect_state().values()) == 100 * n
+    assert jobs <= 4 and stages <= 6, (jobs, stages)
 
 
 def test_superstep_empty_events(spark):

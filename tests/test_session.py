@@ -61,6 +61,37 @@ def test_zip_invalidate_rereads_only_a_changed_archive(tmp_path, monkeypatch):
         sys.path_importer_cache.pop(archive, None)
 
 
+def test_importers_of_one_archive_share_one_read(tmp_path, monkeypatch):
+    """A worker holds several zipimporters over one archive (one per
+    package path inside it); one invalidate pass reads that archive once
+    for all of them, and a rewrite is read once and seen by each."""
+    archive = str(tmp_path / "zshared.zip")
+    _write_archive(archive, {"zsh_a": "X = 1\n", "zpkg/zsub_a": "Y = 1\n"})
+    importers = [zipimport.zipimporter(archive),
+                 zipimport.zipimporter(archive + "/zpkg")]
+    reads = []
+    real = zipimport._read_directory
+    monkeypatch.setattr(
+        zipimport, "_read_directory", lambda p: reads.append(p) or real(p)
+    )
+    for imp in importers:
+        imp.invalidate_caches()
+    assert reads.count(archive) == 1
+
+    _write_archive(archive, {
+        "zsh_a": "X = 1\n", "zsh_b": "X = 2\n",
+        "zpkg/zsub_a": "Y = 1\n", "zpkg/zsub_b": "Y = 2\n",
+    })
+    reads.clear()
+    for imp in importers:
+        imp.invalidate_caches()
+    assert reads.count(archive) == 1
+    assert importers[0].find_spec("zsh_b") is not None
+    assert importers[1].find_spec("zsub_b") is not None
+    zipimport._zip_directory_cache.pop(archive, None)
+    session._zip_stamps.pop(archive, None)
+
+
 def test_python_workers_get_the_lazy_invalidate(spark):
     def probe(batches):
         import zipimport
