@@ -42,6 +42,21 @@ def _flow_event(event_id: str, flow: FlowState, to: EntityRef) -> Event:
     )
 
 
+def _run_flow(
+    event: Event, flow: FlowState, store: StateStore, res: HandleResult
+) -> HandleResult:
+    """Run a flow as far as this key's store lets it: a hop to another
+    key, or the flow's ERROR / OK reply."""
+    out = Interpreter(store).run(flow)
+    if out.hop_to is not None:
+        res.hops.append(_flow_event(event.event_id, out.flow, out.hop_to))
+    elif out.error is not None:
+        res.replies.append(event.reply(EventType.ERROR, error=out.error))
+    else:
+        res.replies.append(event.reply(EventType.OK, result=out.result))
+    return res
+
+
 def handle(event: Event, store: StateStore) -> HandleResult:
     """Process one event addressed to a key the store owns."""
     res = HandleResult()
@@ -79,15 +94,7 @@ def handle(event: Event, store: StateStore) -> HandleResult:
         return res
 
     if event.event_type == EventType.FLOW:
-        flow: FlowState = event.payload["flow"]
-        out = Interpreter(store).run(flow)
-        if out.hop_to is not None:
-            res.hops.append(_flow_event(event.event_id, out.flow, out.hop_to))
-        elif out.error is not None:
-            res.replies.append(event.reply(EventType.ERROR, error=out.error))
-        else:
-            res.replies.append(event.reply(EventType.OK, result=out.result))
-        return res
+        return _run_flow(event, event.payload["flow"], store, res)
 
     # remaining types need existing state (reference KeyNotFound short-circuit,
     # stateful_operator.py:100-111)
@@ -107,14 +114,7 @@ def handle(event: Event, store: StateStore) -> HandleResult:
         method = event.payload["method"]
         args = event.payload["args"]
         if method in et.flows:
-            flow = start_flow(ref, method, args)
-            out = Interpreter(store).run(flow)
-            if out.hop_to is not None:
-                res.hops.append(_flow_event(event.event_id, out.flow, out.hop_to))
-            elif out.error is not None:
-                res.replies.append(event.reply(EventType.ERROR, error=out.error))
-            else:
-                res.replies.append(event.reply(EventType.OK, result=out.result))
+            _run_flow(event, start_flow(ref, method, args), store, res)
         else:
             try:
                 result, new_state = wrapper.invoke(

@@ -130,9 +130,10 @@ def install_worker_registry(registry_blob: bytes) -> None:
     blob arrives as a new object per partition: a blob equal to the
     installed one skips the unpickle, and one with other bytes (a reused
     worker serving a new run, possibly with the same entity names bound
-    to different classes) re-installs. Any new blob object clears the
+    to different classes) re-installs. A re-install clears the
     interpreter's per-entity-name caches, which entity()/clear_registry()
-    would normally do but executors never call (round-8 ADVICE medium #1)."""
+    would normally do but executors never call (round-8 ADVICE medium #1);
+    an equal blob keeps them, since its classes are the installed ones."""
     global _linked, _installed_blob
     if _installed_blob is registry_blob:
         return
@@ -143,5 +144,5 @@ def install_worker_registry(registry_blob: bytes) -> None:
         _REGISTRY.clear()
         _REGISTRY.update(reg)
         _linked = True
+        _clear_interpreter_caches()
     _installed_blob = registry_blob
-    _clear_interpreter_caches()

@@ -13,8 +13,8 @@ stateflow/runtime/beam_runtime.py:137-204, stateflow/client/kafka_client.py:
 
 Wire format: record key = JSON {"entity","key","seq"} (UTF-8), record
 value = the pickled Event blob — the same (entity, key, seq, blob) row the
-file transport carries, so the keyed state function is the file engine's
-(stateful._make_stateful_fn over the per-key event core, entity/keyed.py,
+file transport carries, so the keyed stateful plan is the file engine's
+(stateful.keyed_operator over the per-key event core, entity/keyed.py,
 with poison quarantine on); only ingress decode and egress routing differ.
 
 Egress is ONE kafka sink: the Kafka writer routes per-row via a `topic`
@@ -42,7 +42,6 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import (
     LongType,
     StringType,
@@ -50,13 +49,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from stateflow_spark.entity.registry import serialize_registry
 from stateflow_spark.sources import kafka_source
-from stateflow_spark.streaming.stateful import (
-    OUT_STRUCT,
-    STATE_STRUCT,
-    _make_stateful_fn,
-)
+from stateflow_spark.streaming.stateful import keyed_operator
 
 _KEY_SCHEMA = StructType(
     [
@@ -169,7 +163,6 @@ class KafkaEntityEngine:
         """Construct the full streaming DataFrame (source → operator →
         routed egress rows) without starting it — the plan-shape surface
         for tests and .explain()."""
-        blob = serialize_registry()
         t = topics(self.prefix)
         in_topics = f"{t['request']},{t['internal']}"
         if self.stub_path is not None:
@@ -190,18 +183,7 @@ class KafkaEntityEngine:
                 in_topics,
                 starting_offsets="earliest",
             )
-        out = (
-            decode_events(src)
-            .groupBy("entity", "key")
-            .applyInPandasWithState(
-                _make_stateful_fn(blob, None, None),
-                OUT_STRUCT,
-                STATE_STRUCT,
-                "append",
-                GroupStateTimeout.NoTimeout,
-            )
-        )
-        return route_to_topics(out, self.prefix)
+        return route_to_topics(keyed_operator(decode_events(src)), self.prefix)
 
     def start(self) -> None:
         routed = self.build_plan()

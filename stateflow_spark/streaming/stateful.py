@@ -25,7 +25,10 @@ Reference parity (SURVEY.md §2.A):
 
 State is one binary column (pickled state dict) per key — the reference
 serializes per-key state dicts the same way (stateflow/dataflow/state.py:
-26-32).
+26-32). Like the reference's runtimes, every key's state lives in the
+state store alone: no TTL, no cold tier. ``keyed_operator`` is the one
+keyed stateful plan; the Kafka engine (kafka.py) runs the same function
+between its own source and sink.
 
 Stateful API choice: Spark 4 also offers ``transformWithStateInPandas``
 (StatefulProcessor + RocksDB store, per-state-variable handles, timers).
@@ -34,7 +37,8 @@ environment does not ship, so the engine stands on
 ``applyInPandasWithState`` — the operator contract here (one keyed batch
 fn over ``apply_key_events``) ports to a StatefulProcessor verbatim:
 init → getValueState("state", STATE_STRUCT), handleInputRows → the same
-core call, close → no-op.
+core call, close → no-op. A per-key state TTL would come from there too
+(``getValueState(..., ttlDurationMs=...)``, tests/test_tws_spike.py).
 """
 
 from __future__ import annotations
@@ -90,73 +94,19 @@ OUT_STRUCT = StructType(
 STATE_STRUCT = StructType([StructField("blob", BinaryType(), True)])
 
 
-def _cold_load(cold_dir: str, entity: str, key: str) -> Optional[dict]:
-    """Latest evicted state for a key from the cold tier (parquet dir written
-    by the egress router). At cluster scale this is a shared-FS/S3 point read
-    — the same pattern as RocksDB state restore or a lakehouse lookup; the
-    cold layout would be partitioned/compacted by entity there."""
-    try:
-        import pyarrow.compute as pc
-        import pyarrow.dataset as ds
-
-        dataset = ds.dataset(cold_dir, format="parquet")
-        if "entity" not in dataset.schema.names:  # empty tier (no files yet)
-            return None
-        tbl = dataset.to_table(
-            filter=(pc.field("entity") == entity) & (pc.field("key") == key)
-        )
-    except (FileNotFoundError, OSError):
-        return None
-    if tbl.num_rows == 0:
-        return None
-    seqs = tbl.column("seq").to_pylist()
-    blobs = tbl.column("blob").to_pylist()
-    return pickle.loads(blobs[seqs.index(max(seqs))])
-
-
-def _make_stateful_fn(
-    registry_blob: bytes,
-    ttl_ms: Optional[int],
-    cold_dir: Optional[str],
-):
-    """The applyInPandasWithState function: TTL eviction, cold reload and
-    the GroupState update around the per-key event core (entity/keyed.py,
-    which owns the state contract and the dead-letter rollback). The core
-    runs with PickleSerde, byte-identical to ``Event.to_bytes``."""
+def _make_stateful_fn(registry_blob: bytes):
+    """The applyInPandasWithState function: the GroupState read and update
+    around the per-key event core (entity/keyed.py, which owns the state
+    contract and the dead-letter rollback). The core runs with
+    PickleSerde, byte-identical to ``Event.to_bytes``; state is written
+    back only when the batch committed a put()."""
 
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        import time
-
         install_worker_registry(registry_blob)
-
         entity_name, k = key
-
-        if ttl_ms is not None and state.hasTimedOut:
-            # idle key: move hot state to the cold tier and drop it from the
-            # state store — store size tracks ACTIVE keys, not total keys
-            rows = []
-            if state.exists:
-                rows.append(
-                    (
-                        "evict",
-                        entity_name,
-                        k,
-                        time.time_ns(),
-                        bytes(state.get[0]),
-                    )
-                )
-            state.remove()
-            yield pd.DataFrame(rows, columns=OUT_COLUMNS)
-            return
-
         current = pickle.loads(state.get[0]) if state.exists else None
-        if current is None and cold_dir is not None:
-            current = _cold_load(cold_dir, entity_name, k)
-            reheated = current is not None
-        else:
-            reheated = False
         rows, current, committed = apply_key_events(
             entity_name,
             k,
@@ -164,13 +114,25 @@ def _make_stateful_fn(
             ((s, b) for pdf in pdfs for s, b in zip(pdf["seq"], pdf["blob"])),
             PickleSerde(),
         )
-        if (committed or reheated) and current is not None:
+        if committed and current is not None:
             state.update((pickle.dumps(current),))
-        if ttl_ms is not None and state.exists:
-            state.setTimeoutDuration(ttl_ms)
         yield pd.DataFrame(rows, columns=OUT_COLUMNS)
 
     return fn
+
+
+def keyed_operator(events: DataFrame) -> DataFrame:
+    """The keyed stateful plan both continuous engines run: (entity, key,
+    seq, blob) event rows → groupBy(entity, key) → applyInPandasWithState
+    over the per-key event core → (kind, entity, key, seq, blob) rows.
+    Each key's state lives in the runtime's state store, with no timeout."""
+    return events.groupBy("entity", "key").applyInPandasWithState(
+        _make_stateful_fn(serialize_registry()),
+        OUT_STRUCT,
+        STATE_STRUCT,
+        "append",
+        GroupStateTimeout.NoTimeout,
+    )
 
 
 def state_partitions(n_keys: int) -> int:
@@ -191,16 +153,10 @@ class StreamingEntityEngine:
         self,
         spark: SparkSession,
         workdir: str,
-        state_ttl_ms: Optional[int] = None,
         shuffle_partitions: Optional[int] = None,
     ):
-        """state_ttl_ms: optional hot/cold state tiering. Keys idle longer
-        than the TTL are evicted from the state store into a cold parquet
-        tier and lazily reloaded on their next event — state-store size
-        tracks the ACTIVE key set, which is what keeps a 100 TB deployment's
-        per-executor state bounded when total key cardinality is unbounded.
-        (Timeouts fire when a micro-batch runs, per Spark's processing-time
-        timeout semantics.)
+        """Every key's state lives in the query's state store, kept
+        partition-local across micro-batches.
 
         shuffle_partitions: state-store partition count for THIS engine
         (fixed at the first batch by the checkpoint). Set it to match the
@@ -225,19 +181,12 @@ class StreamingEntityEngine:
         self.in_dir = os.path.join(workdir, "events_in")
         self.replies_dir = os.path.join(workdir, "replies")
         self.checkpoint = os.path.join(workdir, "checkpoint")
-        self.state_ttl_ms = state_ttl_ms
-        self.cold_dir = (
-            os.path.join(workdir, "cold_state") if state_ttl_ms else None
-        )
         self.dead_dir = os.path.join(workdir, "dead_letter")
         os.makedirs(self.in_dir, exist_ok=True)
         os.makedirs(self.replies_dir, exist_ok=True)
-        if self.cold_dir:
-            os.makedirs(self.cold_dir, exist_ok=True)
         os.makedirs(self.dead_dir, exist_ok=True)
         self.query = None
         # client-side bookkeeping (send / reply tracking)
-        self._sent_ids: set[str] = set()
         self._send_seq = 0
         self._reply_cache: dict[str, Event] = {}
         self._replies_view = MappingProxyType(self._reply_cache)
@@ -257,7 +206,6 @@ class StreamingEntityEngine:
         import pyarrow.parquet as pq
 
         events = list(events)
-        self._sent_ids.update(e.event_id for e in events)
         tbl = pa.table(
             {
                 "entity": pa.array([e.entity for e in events], pa.string()),
@@ -325,40 +273,20 @@ class StreamingEntityEngine:
 
     # -- engine -------------------------------------------------------------
     def start(self) -> None:
-        blob = serialize_registry()
-
-        timeout = (
-            GroupStateTimeout.ProcessingTimeTimeout
-            if self.state_ttl_ms
-            else GroupStateTimeout.NoTimeout
+        stream = keyed_operator(
+            self.spark.readStream.schema(EVENT_STRUCT).parquet(self.in_dir)
         )
-        stream = (
-            self.spark.readStream.schema(EVENT_STRUCT)
-            .parquet(self.in_dir)
-            .groupBy("entity", "key")
-            .applyInPandasWithState(
-                _make_stateful_fn(blob, self.state_ttl_ms, self.cold_dir),
-                OUT_STRUCT,
-                STATE_STRUCT,
-                "append",
-                timeout,
-            )
-        )
-
-        # with a TTL, every trigger runs a timeout-check batch even with no
-        # data — pace them, instead of spinning at trigger-0
-        trigger = "500 milliseconds" if self.state_ttl_ms else "0 seconds"
         self.query = (
             stream.writeStream.foreachBatch(self._route_batch)
             .option("checkpointLocation", self.checkpoint)
-            .trigger(processingTime=trigger)
+            .trigger(processingTime="0 seconds")
             .start()
         )
 
     def _route_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """Egress router (dataflow.py:52-128): replies to the client sink,
-        hops back into the source directory (the `internal` topic), evicted
-        state into the cold tier.
+        hops back into the source directory (the `internal` topic), poison
+        events into the dead-letter sink.
 
         ONE Spark job per micro-batch: the whole batch is written once,
         partitioned by `kind`, into a per-batch staging dir; the split into
@@ -388,8 +316,6 @@ class StreamingEntityEngine:
         dests = {
             "reply": self.replies_dir, "hop": self.in_dir, "dead": self.dead_dir
         }
-        if self.cold_dir is not None:
-            dests["evict"] = self.cold_dir
         for kind, dest in dests.items():
             part_dir = os.path.join(staging, f"kind={kind}")
             if not os.path.isdir(part_dir):
@@ -414,46 +340,20 @@ class StreamingEntityEngine:
 
         shutil.rmtree(staging, ignore_errors=True)
 
-    def drain(self, timeout_s: float = 120.0) -> None:
+    def drain(self) -> None:
         """Block until every pending event (including loopback hops written
         mid-batch) has been processed.
 
-        Without a TTL: hop files are written into the source directory by
-        foreachBatch *before* the batch commits, so processAllAvailable —
-        which returns only when the source reports no new data — already
-        chases the loopback cycle to quiescence (second pass guards a race).
-
-        With a TTL: ProcessingTimeTimeout makes Spark schedule timeout-check
-        micro-batches continuously, so source quiescence never settles;
-        instead poll the reply sink until every event this client sent has
-        its reply (replies carry the originating event_id end-to-end, so
-        this also covers multi-hop flows).
-
-        Either path surfaces a crashed query as an error instead of a
-        hang/timeout: processAllAvailable rethrows the stream death cause
-        itself, and the TTL poll loop checks ``query.exception()`` every
-        tick — without that check a poisoned event would burn the whole
-        timeout_s and then report a misleading TimeoutError."""
+        Hop files are written into the source directory by foreachBatch
+        *before* the batch commits, so processAllAvailable — which returns
+        only when the source reports no new data — already chases the
+        loopback cycle to quiescence (the second pass guards a race). A
+        crashed query surfaces as an error, not a hang: processAllAvailable
+        rethrows the stream's death cause as StreamingQueryException
+        (test_streaming_engine_poison_no_ttl)."""
         assert self.query is not None
-        if not self.state_ttl_ms:
-            # processAllAvailable raises StreamingQueryException if the
-            # query died (verified by test_streaming_engine_poison_no_ttl)
-            self.query.processAllAvailable()
-            self.query.processAllAvailable()
-            return
-        import time
-
-        want = set(getattr(self, "_sent_ids", ()))
-        deadline = time.monotonic() + timeout_s
-        while time.monotonic() < deadline:
-            exc = self.query.exception()
-            if exc is not None:
-                raise exc
-            if want <= self.replies().keys():
-                return
-            time.sleep(0.25)
-        missing = want - self.replies().keys()
-        raise TimeoutError(f"{len(missing)} events got no reply: {list(missing)[:3]}")
+        self.query.processAllAvailable()
+        self.query.processAllAvailable()
 
     def stop(self) -> None:
         if self.query is not None:

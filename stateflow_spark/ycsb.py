@@ -233,7 +233,6 @@ def run_superstep(spark, mix: str, n_tasks: int = N_TASKS,
 def run_streaming(spark, mix: str, n_tasks: int = N_TASKS,
                   n_entities: int = N_ENTITIES,
                   workdir: Optional[str] = None,
-                  shuffle_partitions: Optional[int] = None,
                   latency_csv: Optional[str] = None,
                   pacing: Optional[int] = None) -> dict:
     """Continuous-engine throughput: the op batch flows through the
@@ -241,8 +240,8 @@ def run_streaming(spark, mix: str, n_tasks: int = N_TASKS,
     loopback hops for transfers) — the closest analog to the reference's
     Kafka-driven deployment.
 
-    shuffle_partitions defaults to the deployment sizing rule
-    ``state_partitions(n_entities)``; pass a value to override.
+    The engine's state store is sized by the deployment rule
+    ``state_partitions(n_entities)``.
 
     pacing=N sends the op batch as ceil(n_tasks/N)-sized back-to-back
     bursts — send burst, wait for its replies, send the next — instead
@@ -258,12 +257,11 @@ def run_streaming(spark, mix: str, n_tasks: int = N_TASKS,
     from stateflow_spark.streaming.stateful import (
         StreamingEntityEngine, state_partitions)
 
-    if shuffle_partitions is None:
-        shuffle_partitions = state_partitions(n_entities)
+    n_part = state_partitions(n_entities)
     eng = StreamingEntityEngine(
         spark,
         workdir or tempfile.mkdtemp(prefix="ycsb_stream_"),
-        shuffle_partitions=shuffle_partitions,
+        shuffle_partitions=n_part,
     )
     try:
         eng.send(
@@ -319,7 +317,7 @@ def run_streaming(spark, mix: str, n_tasks: int = N_TASKS,
             "mix": mix,
             "ops": n_tasks,
             "entities": n_entities,
-            "state_partitions": shuffle_partitions,
+            "state_partitions": n_part,
             "sec": round(wall, 4),
             "ops_per_sec": round(n_tasks / wall, 1),
             "p50_s": round(p50, 3),

@@ -935,9 +935,14 @@ class CopyLog:
 
 def test_worker_registry_install_clears_interpreter_caches():
     """Round-9 ADVICE medium #1: the executor-side registry install must
-    clear the per-entity-name interpreter caches when a NEW blob arrives
-    (reused workers keep module state across runs), and must skip the
-    unpickle entirely when the SAME blob object arrives again."""
+    clear the per-entity-name interpreter caches when a blob with other
+    bytes arrives (reused workers keep module state across runs), and must
+    keep them when the same or an equal blob arrives again (every task
+    brings its own copy of one run's blob)."""
+    import pickle
+
+    import cloudpickle
+
     from stateflow_spark.entity import registry as reg_mod
     from stateflow_spark.entity.interpreter import _module_globals
 
@@ -947,8 +952,13 @@ def test_worker_registry_install_clears_interpreter_caches():
     assert _module_globals.cache_info().currsize >= 1
     reg_mod.install_worker_registry(blob1)  # same object: cache kept
     assert _module_globals.cache_info().currsize >= 1
-    blob2 = reg_mod.serialize_registry()
-    reg_mod.install_worker_registry(blob2)  # new blob: caches cleared
+    blob2 = bytes(bytearray(blob1))  # a task's own copy of the blob
+    assert blob2 is not blob1
+    reg_mod.install_worker_registry(blob2)  # equal bytes: cache kept
+    assert _module_globals.cache_info().currsize >= 1
+    other = cloudpickle.dumps(pickle.loads(blob1), protocol=4)
+    assert other != blob1
+    reg_mod.install_worker_registry(other)  # other bytes: caches cleared
     assert _module_globals.cache_info().currsize == 0
 
 

@@ -112,56 +112,12 @@ def test_streaming_engine_recovery(spark, tmp_path):
         eng2.stop()
 
 
-def test_streaming_engine_state_ttl_tiering(spark, tmp_path):
-    """Hot/cold state tiering: an idle key is evicted to the cold parquet
-    tier (state-store size tracks active keys) and transparently reheated
-    by its next event."""
-    import os
-    import time
-    import uuid
-
-    from stateflow_spark.entity.model import Event, EventType
-
-    eng = StreamingEntityEngine(
-        spark, str(tmp_path / "ttl_engine"), state_ttl_ms=1500
-    )
-    init = operator.make_init_event("User", ("ttl-u1",))
-    eng.send([init])
-    eng.start()
-    try:
-        eng.drain()
-        ref = eng.replies()[init.event_id].payload["result"]
-        eng.send([operator.make_invoke_event(ref, "update_balance", (77,))])
-        eng.drain()
-
-        # let the TTL lapse; the engine's own timeout-check batches evict
-        # the idle key into the cold tier
-        deadline = time.monotonic() + 60
-        while time.monotonic() < deadline and not any(
-            f.endswith(".parquet") for f in os.listdir(eng.cold_dir)
-        ):
-            time.sleep(0.5)
-        assert any(
-            f.endswith(".parquet") for f in os.listdir(eng.cold_dir)
-        ), "idle key was never evicted"
-
-        # the evicted key's next event reheats from the cold tier
-        g = Event(str(uuid.uuid4()), "User", "ttl-u1", EventType.GET_STATE,
-                  {"attr": "balance"})
-        eng.send([g])
-        eng.drain()
-        assert eng.replies()[g.event_id].payload["result"] == 77
-    finally:
-        eng.stop()
-
-
 def _send_corrupt_file(eng):
     """Write a non-parquet file straight into the source dir: the file
     source fails to read it, outside the per-key event core (which
     quarantines poison blobs), so the query dies."""
     with open(os.path.join(eng.in_dir, "corrupt.parquet"), "wb") as f:
         f.write(b"not-a-parquet-file")
-    eng._sent_ids.add("poison-event-id")  # a reply that can never arrive
 
 
 def test_streaming_engine_poison_no_ttl(spark, tmp_path):
@@ -174,32 +130,7 @@ def test_streaming_engine_poison_no_ttl(spark, tmp_path):
     eng.start()
     try:
         with pytest.raises(StreamingQueryException):
-            eng.drain(timeout_s=60)
-    finally:
-        eng.stop()
-
-
-def test_streaming_engine_poison_with_ttl(spark, tmp_path):
-    """TTL path: the reply-poll loop must notice the dead query via
-    query.exception() and raise it promptly instead of burning the whole
-    drain timeout and masking the root cause as TimeoutError."""
-    import time
-
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    eng = StreamingEntityEngine(
-        spark,
-        str(tmp_path / "poison_ttl_engine"),
-        state_ttl_ms=60_000,
-    )
-    _send_corrupt_file(eng)
-    eng.start()
-    try:
-        t0 = time.monotonic()
-        with pytest.raises(StreamingQueryException):
-            eng.drain(timeout_s=120)
-        # raised by the exception poll, long before the 120s reply timeout
-        assert time.monotonic() - t0 < 60
+            eng.drain()
     finally:
         eng.stop()
 
@@ -226,7 +157,6 @@ def test_streaming_engine_dead_letter_quarantine(spark, tmp_path):
         }
     )
     pq.write_table(tbl, os.path.join(eng.in_dir, "mixed.parquet"))
-    eng._sent_ids.add(init.event_id)
     eng.start()
     try:
         eng.drain()
@@ -286,6 +216,82 @@ def test_streaming_engine_dead_letter_handler_escape(spark, tmp_path):
         eng.stop()
 
 
+def test_stateful_fn_writes_state_only_on_put():
+    """The keyed state function, Spark-free: a batch that put() state
+    calls GroupState.update exactly once, a read-only batch leaves it
+    uncalled, and no timeout or removal is ever asked of the store."""
+    import pickle
+    import uuid
+
+    import pandas as pd
+
+    from stateflow_spark.entity.model import Event, EventType
+    from stateflow_spark.streaming.stateful import (
+        _make_stateful_fn,
+        serialize_registry,
+    )
+
+    class RecordingGroupState:
+        def __init__(self):
+            self.blob = None
+            self.calls = []
+
+        @property
+        def exists(self):
+            return self.blob is not None
+
+        @property
+        def get(self):
+            return (self.blob,)
+
+        def update(self, v):
+            self.calls.append("update")
+            self.blob = v[0]
+
+        def remove(self):  # pragma: no cover - must never be called
+            self.calls.append("remove")
+
+        def setTimeoutDuration(self, ms):  # pragma: no cover - ditto
+            self.calls.append("setTimeoutDuration")
+
+    fn = _make_stateful_fn(serialize_registry())
+    state = RecordingGroupState()
+
+    def run(*events):
+        state.calls.clear()
+        pdf = pd.DataFrame(
+            {
+                "seq": list(range(len(events))),
+                "blob": [e.to_bytes() for e in events],
+            }
+        )
+        (out,) = fn(("User", "fn-u1"), iter([pdf]), state)
+        assert list(out["kind"]) == ["reply"] * len(events)
+        return [Event.from_bytes(b) for b in out["blob"]]
+
+    def get_balance():
+        return Event(
+            str(uuid.uuid4()), "User", "fn-u1", EventType.GET_STATE,
+            {"attr": "balance"},
+        )
+
+    (init_reply,) = run(operator.make_init_event("User", ("fn-u1",)))
+    assert init_reply.event_type == EventType.OK
+    assert state.calls == ["update"]
+    ref = init_reply.payload["result"]
+
+    (read,) = run(get_balance())
+    assert read.payload["result"] == 0
+    assert state.calls == []
+
+    ok, read = run(
+        operator.make_invoke_event(ref, "update_balance", (7,)), get_balance()
+    )
+    assert ok.event_type == EventType.OK and read.payload["result"] == 7
+    assert state.calls == ["update"]
+    assert pickle.loads(state.blob)["balance"] == 7
+
+
 def test_dlq_tripwire_detects_inplace_mutation_without_put(monkeypatch):
     """Round-11 ADVICE: the DLQ rollback baseline only re-snapshots after
     a put(); a handler that mutates the live state object IN PLACE
@@ -307,13 +313,9 @@ def test_dlq_tripwire_detects_inplace_mutation_without_put(monkeypatch):
 
     class FakeGroupState:
         exists = False
-        hasTimedOut = False
 
         def update(self, v):  # pragma: no cover - tripwire fires first
             self.exists = True
-
-        def setTimeoutDuration(self, ms):  # pragma: no cover
-            pass
 
     calls = {"n": 0}
 
@@ -332,9 +334,7 @@ def test_dlq_tripwire_detects_inplace_mutation_without_put(monkeypatch):
         return EntityRef(ev.entity, ev.key)
 
     monkeypatch.setattr(op_mod, "handle", bad_handle)
-    fn = _make_stateful_fn(
-        serialize_registry(), ttl_ms=None, cold_dir=None
-    )
+    fn = _make_stateful_fn(serialize_registry())
     evs = [
         Event(str(uuid.uuid4()), "User", "u1", EventType.GET_STATE,
               {"attr": "balance"})
@@ -799,13 +799,9 @@ def test_dlq_tripwire_fires_at_rollback_time(monkeypatch):
 
     class FakeGroupState:
         exists = False
-        hasTimedOut = False
 
         def update(self, v):  # pragma: no cover - tripwire fires first
             self.exists = True
-
-        def setTimeoutDuration(self, ms):  # pragma: no cover
-            pass
 
     def store_ref(ev):
         from stateflow_spark.entity.model import EntityRef
@@ -828,9 +824,7 @@ def test_dlq_tripwire_fires_at_rollback_time(monkeypatch):
         return SimpleNamespace(replies=[], hops=[])
 
     monkeypatch.setattr(op_mod, "handle", bad_handle)
-    fn = _make_stateful_fn(
-        serialize_registry(), ttl_ms=None, cold_dir=None
-    )
+    fn = _make_stateful_fn(serialize_registry())
     evs = [
         Event(str(uuid.uuid4()), "User", "u1", EventType.GET_STATE,
               {"attr": "balance"})
@@ -841,3 +835,114 @@ def test_dlq_tripwire_fires_at_rollback_time(monkeypatch):
     )
     with pytest.raises(RuntimeError, match="later event failed"):
         list(fn(("User", "u1"), iter([pdf]), FakeGroupState()))
+
+
+# The continuous entity engines build their keyed plan in one function;
+# the two analytics rows that fold their own state are the only other
+# applyInPandasWithState sites, and kafka.py reaches stateful.py through
+# its public names only.
+_KEYED_PLAN_SITES = {
+    "streaming/stateful.py": "keyed_operator",
+    "queries/entity_ops.py": "entity_stateful_replay",
+    "queries/streaming_late.py": "stream_state_runs",
+}
+
+
+def _keyed_plan_hits(sources: dict[str, str]) -> list[str]:
+    import ast
+
+    hits = []
+    for rel, src in sorted(sources.items()):
+        tree = ast.parse(src)
+        allowed: set[int] = set()
+        for n in ast.walk(tree):
+            if isinstance(n, ast.FunctionDef) and n.name == _KEYED_PLAN_SITES.get(rel):
+                allowed |= set(range(n.lineno, n.end_lineno + 1))
+        for n in ast.walk(tree):
+            if (
+                isinstance(n, ast.Attribute)
+                and n.attr == "applyInPandasWithState"
+                and n.lineno not in allowed
+            ):
+                hits.append(f"{rel}:{n.lineno} applyInPandasWithState")
+            if rel != "streaming/kafka.py":
+                continue
+            if isinstance(n, ast.ImportFrom) and (n.module or "").endswith("stateful"):
+                hits += [
+                    f"{rel}:{n.lineno} imports {a.name}"
+                    for a in n.names
+                    if a.name.startswith("_")
+                ]
+            if (
+                isinstance(n, ast.Attribute)
+                and isinstance(n.value, ast.Name)
+                and n.value.id == "stateful"
+                and n.attr.startswith("_")
+            ):
+                hits.append(f"{rel}:{n.lineno} uses stateful.{n.attr}")
+    return hits
+
+
+def _package_sources() -> dict[str, str]:
+    import pathlib
+
+    import stateflow_spark
+
+    pkg = pathlib.Path(stateflow_spark.__file__).parent
+    return {
+        f.relative_to(pkg).as_posix(): f.read_text()
+        for f in sorted(pkg.rglob("*.py"))
+    }
+
+
+def test_keyed_plan_is_built_in_one_function():
+    import ast
+
+    sources = _package_sources()
+    assert _keyed_plan_hits(sources) == []
+    for rel, cls, meth in [
+        ("streaming/stateful.py", "StreamingEntityEngine", "start"),
+        ("streaming/kafka.py", "KafkaEntityEngine", "build_plan"),
+    ]:
+        (klass,) = [
+            n for n in ast.parse(sources[rel]).body
+            if isinstance(n, ast.ClassDef) and n.name == cls
+        ]
+        (fn,) = [n for n in klass.body if getattr(n, "name", None) == meth]
+        called = {
+            n.func.id for n in ast.walk(fn)
+            if isinstance(n, ast.Call) and isinstance(n.func, ast.Name)
+        }
+        assert "keyed_operator" in called, (rel, meth)
+
+
+@pytest.mark.parametrize(
+    "rel, planted",
+    [
+        (
+            "streaming/kafka.py",
+            "def plan(df, fn, out, st, t):\n"
+            "    return df.groupBy('entity', 'key')"
+            ".applyInPandasWithState(fn, out, st, 'append', t)\n",
+        ),
+        (
+            "streaming/stateful.py",
+            "def plan(df, fn, out, st, t):\n"
+            "    return df.groupBy('entity', 'key')"
+            ".applyInPandasWithState(fn, out, st, 'append', t)\n",
+        ),
+        (
+            "streaming/kafka.py",
+            "from stateflow_spark.streaming.stateful import _make_stateful_fn\n",
+        ),
+        (
+            "streaming/kafka.py",
+            "from stateflow_spark.streaming import stateful\n"
+            "fn = stateful._make_stateful_fn(b'')\n",
+        ),
+    ],
+)
+def test_keyed_plan_guard_catches_planted_copy(rel, planted):
+    sources = _package_sources()
+    sources[rel] += "\n\n" + planted
+    assert _keyed_plan_hits(sources)

@@ -5,8 +5,8 @@ The entity engines (streaming/stateful.py, streaming/kafka.py) run on
 state model. Spark's investment is in the successor API,
 `transformWithStateInPandas` (Spark 4.0+, SPARK-49564): typed state
 variables (value/list/map), native timers, per-state TTL, and schema
-evolution — exactly the features the engine currently emulates by hand
-(TTL via GroupStateTimeout + cold tier, one pickled dict for all state).
+evolution. The engine keeps one pickled dict per key in the state store
+and no TTL; per-state TTL is what a migration would bring with it.
 
 This module records what a migration would look like and what blocks it:
 
@@ -24,10 +24,11 @@ requirements) the gated test runs as-is.
 Migration sketch (verified against the 4.1.2 API surface):
   - state dict        -> handle.getValueState per entity attribute, or one
                          ValueState of the pickled dict to start
-  - GroupStateTimeout -> handle.registerTimer + handleExpiredTimer (the
-                         eviction row the egress router writes today would
-                         move into handleExpiredTimer)
-  - cold-tier TTL     -> getValueState(..., ttlDurationMs=...) natively
+  - NoTimeout         -> no timers registered (handle.registerTimer +
+                         handleExpiredTimer are there if timed logic is
+                         ever needed)
+  - state TTL         -> getValueState(..., ttlDurationMs=...) natively;
+                         the engine has none today
 """
 
 from __future__ import annotations

@@ -188,7 +188,6 @@ def test_streaming_transfer_survives_midflight_restart(spark, tmp_path):
     eng1.stop()
 
     eng2 = StreamingEntityEngine(spark, workdir, shuffle_partitions=4)
-    eng2._sent_ids = {e.event_id for e in events}
     eng2.start()
     try:
         eng2.drain()
